@@ -41,16 +41,10 @@ object IndexerCore {
   def subscriptionFilter(subscriptionTs: Long)(df: DataFrame): DataFrame =
     df.filter(col("writeTime") >= lit(subscriptionTs))
 
-  private def sortedPutCells(cells: Column): Column =
-    array_sort(
-      filter(cells, c => c.getField("cellType") === lit(CellType.Put)),
-      (l, r) => {
-        val byFam = when(l.getField("family") < r.getField("family"), -1)
-          .when(l.getField("family") > r.getField("family"), 1)
-        val byQual = when(l.getField("qualifier") < r.getField("qualifier"), -1)
-          .when(l.getField("qualifier") > r.getField("qualifier"), 1)
-        coalesce(byFam, byQual, lit(0))
-      })
+  /** `toResult()`: the put-cells sorted by (family, qualifier)
+    * (SepEventRowData.java:37-56), one compiled pass; a null array — a
+    * snapshot row that does not exist — is the empty row. */
+  def sortedPutCells(cells: Column): Column = graft.expr.hfunctions.sorted_put_cells(cells)
 
   /** Row path (reference RowBasedIndexer.calculateIndexUpdates,
     * Indexer.java:252-321):
@@ -93,9 +87,8 @@ object IndexerCore {
             "left")
           .withColumn("resultCells",
             when(col("complete"), col("ownCells"))
-              // missing snapshot row ⇒ empty result ⇒ deleteById below;
-              // filter-to-false makes an empty array of the right type
-              .otherwise(sortedPutCells(coalesce(col("s_cells"), filter(col("cells"), _ => lit(false))))))
+              // missing snapshot row ⇒ empty result ⇒ deleteById below
+              .otherwise(sortedPutCells(col("s_cells"))))
           .drop("s_table", "s_rowKey", "s_cells", "complete")
       case _ =>
         // batch forces NEVER (reference HBaseIndexerMapper.java:216-220)

@@ -999,6 +999,27 @@ object hfunctions {
   def collect_capped(id: Column, n: Column, limit: Int): Column =
     expr2col(CollectCapped(col2expr(id), col2expr(n), limit).toAggregateExpression())
 
+  // ---- the compiled mapping kernels over a `cells` array ([[CellKernel]]) ----
+
+  /** the document map of an indexer's field table */
+  def cell_doc_map(cells: Column, fields: Seq[CellField]): Column =
+    expr2col(CellDocMap(col2expr(cells), fields))
+
+  /** one field's values, in extraction order */
+  def cell_field_values(cells: Column, field: CellField): Column =
+    expr2col(CellFieldValues(col2expr(cells), field))
+
+  /** some cell is a delete or matches a field */
+  def cells_relevant(cells: Column, fields: Seq[CellField]): Column =
+    expr2col(CellsRelevant(col2expr(cells), fields))
+
+  /** every (exact) field matches some put-cell */
+  def cells_complete(cells: Column, fields: Seq[CellField]): Column =
+    expr2col(CellsComplete(col2expr(cells), fields))
+
+  /** the put-cells, stably sorted by (family, qualifier) */
+  def sorted_put_cells(cells: Column): Column = expr2col(SortedPutCells(col2expr(cells)))
+
   def hbase_to_int(c: Column): Column = hbase_decode(c, "int")
   def hbase_to_long(c: Column): Column = hbase_decode(c, "long")
   def hbase_to_short(c: Column): Column = hbase_decode(c, "short")

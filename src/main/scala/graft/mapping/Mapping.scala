@@ -1,12 +1,12 @@
 package graft.mapping
 
 import graft.conf._
+import graft.expr.CellField
 import graft.expr.hfunctions._
-import graft.model.CellType
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Compiles an [[graft.conf.IndexerConf]] into `Column` expression trees
+/** Compiles an [[graft.conf.IndexerConf]] into `Column` expressions
   * over the engine's conventional mutation shape:
   *
   * {{{
@@ -14,15 +14,40 @@ import org.apache.spark.sql.functions._
   *   cells: array<struct<family,qualifier,ts,cellType,value>>, payload: string
   * }}}
   *
-  * This is the Spark-native re-expression of the reference's compiled
-  * extraction pipeline (/root/reference hbase-indexer-engine
-  * .../parse/DefaultResultToSolrMapper.java:68-156): everything is a
-  * declarative expression, so Catalyst constant-folds the config and
-  * whole-stage codegen fuses the extraction with up/downstream operators —
-  * the reference's "compile config once, run per event" becomes "compile
-  * config into the plan".
+  * The reference compiles an indexer's config once and runs one
+  * extraction per event (reference hbase-indexer-engine
+  * .../parse/DefaultResultToSolrMapper.java:68-156). Here the config is
+  * compiled once into a field table ([[graft.expr.CellField]]), and each
+  * per-event step — relevance, completeness, the document map — is one
+  * kernel call that loops over the event's cells ([[graft.expr.CellKernel]]),
+  * called from whole-stage generated code. Spark's higher-order functions
+  * (`filter`/`transform`/`exists` with lambdas) would instead run
+  * interpreted, one lambda call per cell per field.
   */
 object Mapping {
+
+  /** The conf's fields as the kernels' field table. A custom value
+    * mapper loads here, at plan-compile time, so an unknown class name
+    * fails fast; executors deserialize the loaded instance. */
+  private def fieldTable(conf: IndexerConf): Seq[CellField] = conf.fields.map(cellField)
+
+  private def cellField(f: FieldDef): CellField = CellField(
+    name = if (f.dynamicName) f.name.dropRight(1) else f.name,
+    family = f.family,
+    qualifier = f.qualifier,
+    prefix = f.prefixMatch,
+    emitQualifier = f.source == ValueSource.Qualifier,
+    dynamic = f.dynamicName,
+    // built-in types keep the raw stored string in the doc; a custom
+    // ValueMapper type's doc values are the MAPPER's outputs (the
+    // reference stringifies mapper outputs into the Solr doc); dynamic
+    // fields always carry the raw value
+    mapper =
+      if (f.dynamicName || isBuiltinType(f.typeName)) None
+      else {
+        val m = ValueMapper.load(f.typeName)
+        Some((v: String) => ValueMapper.safeMap(m, v))
+      })
 
   // ---- cell-level predicates ----
 
@@ -35,8 +60,6 @@ object Mapping {
     else fam && cell.getField("qualifier") === lit(f.qualifier)
   }
 
-  def isDeleteCell(cell: Column): Column = cell.getField("cellType") =!= lit(CellType.Put)
-
   /** Reference isRelevantKV (DefaultResultToSolrMapper.java:119-126):
     * ≥1 configured extractor applies to the cell. */
   def isRelevantCell(conf: IndexerConf)(cell: Column): Column =
@@ -45,7 +68,7 @@ object Mapping {
   /** Row-path event relevance (reference Indexer.java:300-311): any cell
     * relevant or any cell a delete. */
   def isRelevantEvent(conf: IndexerConf)(cells: Column): Column =
-    exists(cells, c => isRelevantCell(conf)(c) || isDeleteCell(c))
+    cells_relevant(cells, fieldTable(conf))
 
   /** Reference containsRequiredData (DefaultResultToSolrMapper.java:109-116):
     * true iff the event's own put-cells already cover every configured
@@ -53,35 +76,19 @@ object Mapping {
     * AbstractPrefixMatchingExtractor.containsTarget:88-91). */
   def containsRequiredData(conf: IndexerConf)(cells: Column): Column =
     if (conf.fields.isEmpty || conf.fields.exists(_.prefixMatch)) lit(false)
-    else conf.fields.map { f =>
-      exists(cells, c => !isDeleteCell(c) && cellMatches(c, f))
-    }.reduce(_ && _)
+    else cells_complete(cells, fieldTable(conf))
 
   // ---- extraction (the SELECT list) ----
 
-  /** Put-cells of `cells` matching `f`, in qualifier order for prefix
-    * matches (the reference iterates a sorted family map —
-    * AbstractPrefixMatchingExtractor.java:57-71). */
-  private def matchingPutCells(cells: Column, f: FieldDef): Column = {
-    val matched = filter(cells, c => !isDeleteCell(c) && cellMatches(c, f))
-    if (f.prefixMatch)
-      array_sort(matched, (l, r) =>
-        when(l.getField("qualifier") < r.getField("qualifier"), -1)
-          .when(l.getField("qualifier") > r.getField("qualifier"), 1)
-          .otherwise(0))
-    else matched
-  }
-
-  /** Raw (string) multi-valued extraction for one field: values, or matched
-    * qualifiers when source=qualifier (reference
-    * PrefixMatchingQualifierExtractor returns the full qualifier). */
-  def extractRaw(cells: Column, f: FieldDef): Column = {
-    val cellsM = matchingPutCells(cells, f)
-    f.source match {
-      case ValueSource.Value     => transform(cellsM, _.getField("value"))
-      case ValueSource.Qualifier => transform(cellsM, _.getField("qualifier"))
-    }
-  }
+  /** Raw (string) multi-valued extraction for one field: the matching
+    * put-cells' values, or their qualifiers when source=qualifier
+    * (reference PrefixMatchingQualifierExtractor returns the full
+    * qualifier), in qualifier order for prefix matches (the reference
+    * iterates a sorted family map — AbstractPrefixMatchingExtractor
+    * .java:57-71). */
+  def extractRaw(cells: Column, f: FieldDef): Column =
+    // raw values: the field's type is not applied (nor its class loaded)
+    cell_field_values(cells, cellField(f.copy(typeName = "string")))
 
   /** Built-in type names → Spark cast target (§1.2 of SURVEY.md). `None`
     * = string identity. `byte[]` is the morphline pass-through type
@@ -134,47 +141,13 @@ object Mapping {
     else extractMapped(raw, f.typeName)
   }
 
-  /** The whole static-field document as a map<string, array<string>> —
-    * fields with no extracted values are absent (the reference adds no
-    * field then — HBaseSolrDocumentExtractor.java:47-53). Dynamic-name
-    * fields (name ending '*') contribute (prefix+qualifier-tail) entries
-    * (reference ExtractHBaseCellsBuilder.java:223-240). */
-  def docMap(conf: IndexerConf)(cells: Column): Column = {
-    val staticFields = conf.fields.filterNot(_.dynamicName)
-    val dynFields = conf.fields.filter(_.dynamicName)
-
-    // built-in types keep the raw stored string in the doc; a custom
-    // ValueMapper type's doc values are the MAPPER's outputs (the
-    // reference stringifies mapper outputs into the Solr doc); a
-    // mapper-emptied field is then absent like any other empty field
-    def docValues(f: FieldDef): Column =
-      if (isBuiltinType(f.typeName)) extractRaw(cells, f)
-      else extractMapped(extractRaw(cells, f), f.typeName)
-
-    val staticMap: Option[Column] = if (staticFields.isEmpty) None else Some(
-      map_filter(
-        map_from_arrays(
-          array(staticFields.map(f => lit(f.name)): _*),
-          array(staticFields.map(f => docValues(f)): _*)),
-        (_, v) => size(v) > 0))
-
-    val dynMaps: Seq[Column] = dynFields.map { f =>
-      val prefix = f.name.dropRight(1)
-      val matched = matchingPutCells(cells, f)
-      map_from_entries(
-        transform(matched, c => struct(
-          concat(lit(prefix), expr_qual_tail(c, f)).as("key"),
-          array(c.getField("value")).as("value"))))
-    }
-
-    (staticMap.toSeq ++ dynMaps).reduceOption((a, b) => map_concat(a, b))
-      .getOrElse(map_from_arrays(array(), array()).cast("map<string,array<string>>"))
-  }
-
-  /** Tail of the qualifier after the matched prefix — the dynamic part of a
-    * dynamic output field name. */
-  private def expr_qual_tail(cell: Column, f: FieldDef): Column =
-    cell.getField("qualifier").substr(lit(f.qualifier.length + 1), lit(Int.MaxValue))
+  /** The whole document as a map<string, array<string>> — fields with no
+    * extracted values are absent (the reference adds no field then —
+    * HBaseSolrDocumentExtractor.java:47-53). Dynamic-name fields (name
+    * ending '*') contribute (prefix+qualifier-tail) entries (reference
+    * ExtractHBaseCellsBuilder.java:223-240). */
+  def docMap(conf: IndexerConf)(cells: Column): Column =
+    cell_doc_map(cells, fieldTable(conf))
 
   // ---- unique-key formatting per conf (P12-P15) ----
 

@@ -28,12 +28,19 @@ import scala.jdk.CollectionConverters._
   * manifest file mapping bucket → commit directory and a CURRENT pointer
   * naming the live manifest. A micro batch rewrites ONLY the buckets its
   * ops hash into — O(batch ∩ state), not O(state) — writing them as ONE
-  * plain parquet dir (bucket id as a data column, files bucket-pure via
-  * repartition, so bucket reads prune files from parquet footer stats),
-  * then the new manifest, then flipping CURRENT (atomic: readers see old
-  * or new, never a mix). This is the same copy-on-write + manifest move
+  * plain parquet dir (bucket id as a data column), then the new manifest,
+  * then flipping CURRENT (atomic: readers see old or new, never a mix).
+  * This is the same copy-on-write + manifest move
   * that Delta/Iceberg MERGE makes at 100 TB; the op algebra is identical
   * and the bucket count is the `spark.sql.shuffle.partitions`-style dial.
+  *
+  * Files are NOT bucket-pure: `repartition(_bucket)` hashes the bucket ids
+  * into the session's shuffle partitions, so a commit of 16 buckets under
+  * 4 shuffle partitions writes at most 4 files, of several buckets each.
+  * A bucket read scans the files of the commit dirs that own the bucket;
+  * the pushed-down `_bucket IN (...)` drops the other buckets' rows, and
+  * skips a whole file only when its footer min/max range misses every
+  * requested bucket.
   */
 class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: Int = 16)
     extends DocStateStore {
@@ -205,11 +212,12 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
     // column: the dynamic-partition writer (extra sort, per-partition
     // writer churn, per-dir commit renames) measured ~0.5 s/commit
     // CONSTANT on trigger-sized data — the streaming bucketed-commit
-    // floor. The repartition co-locates each bucket in one task so every
-    // output file is bucket-pure and the read side's pushed-down
-    // `_bucket IN (...)` prunes files from footer stats exactly as
-    // directory pruning did. At cluster scale widen with a salt column
-    // (bucket, hash(id) % filesPerBucket) to bound per-file size. The
+    // floor. The repartition co-locates each bucket in one task, but a
+    // task holds every bucket hashing to its shuffle partition, so a file
+    // mixes buckets (see the class doc) and the read side's pushed-down
+    // `_bucket IN (...)` mostly filters rows rather than skipping files.
+    // At cluster scale widen with a salt column (bucket, hash(id) %
+    // filesPerBucket) to bound per-file size. The
     // observe() census of nonempty buckets replaces per-bucket-dir
     // existence probes with zero extra jobs. Write-command executions DO
     // fulfill Observations in this Spark — both this direct shape
@@ -272,9 +280,8 @@ object IndexState {
     * rows, so a plain union (or a global bucket filter) would resurrect
     * them. Dirs sharing an identical bucket-set collapse into one scan
     * (the common case: every append delta carries the full touched set),
-    * and the pushed-down `_bucket IN (...)` prunes bucket-pure files
-    * from parquet footer stats — the same I/O shape as per-bucket
-    * directories without the dynamic-partition write tax. */
+    * and the pushed-down `_bucket IN (...)` keeps only the assigned
+    * buckets' rows (files mix buckets, so footer stats rarely skip one). */
   def readAssigned(spark: SparkSession, root: String,
                    assign: Seq[(String, Int)]): Option[DataFrame] = {
     if (assign.isEmpty) return None
@@ -352,6 +359,8 @@ class ProgressAccumulator(spark: SparkSession)
   // after each drain; ancient runs have no reader)
   private val runOrder = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
   private val MaxRuns = 64
+  // notified on every delivered progress event; `settled` waits on it
+  private val settledLock = new Object
   spark.streams.addListener(this)
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -361,31 +370,39 @@ class ProgressAccumulator(spark: SparkSession)
     val obs = Option(p.observedMetrics.get("graft.ingress"))
     val dur = p.durationMs.getOrDefault("triggerExecution", 0L).longValue()
     totals.compute(p.runId, (_, old0) => {
-      val old = if (old0 == null) { runOrder.add(p.runId); Totals(0, 0, 0, 0, 0, 0) } else old0
+      val old = if (old0 == null) { runOrder.add(p.runId); Totals.zero } else old0
       Totals(old.batches + 1, old.inputRows + p.numInputRows,
         old.events + obs.map(_.getLong(0)).getOrElse(0L),
         old.applicable + obs.map(_.getLong(1)).getOrElse(0L),
-        old.totalMs + dur, dur)
+        old.totalMs + dur, dur, math.max(old.lastBatchId, p.batchId))
     })
     while (runOrder.size > MaxRuns) Option(runOrder.poll()).foreach(totals.remove)
-    ()
+    settledLock.synchronized(settledLock.notifyAll())
   }
 
   def of(runId: java.util.UUID): Option[Totals] = Option(totals.get(runId))
 
   /** Listener delivery is async — after `awaitTermination` the tail of the
-    * event bus may still be draining. Poll until the run's totals are
-    * stable (two consecutive identical reads), bounded by `maxWaitMs`. */
-  def settled(runId: java.util.UUID, maxWaitMs: Long = 2000L): Option[Totals] = {
-    val deadline = System.currentTimeMillis() + maxWaitMs
-    var prev = of(runId)
-    while (System.currentTimeMillis() < deadline) {
-      Thread.sleep(25)
-      val cur = of(runId)
-      if (cur == prev && cur.isDefined) return cur
-      prev = cur
-    }
-    prev
+    * event bus may still be draining. Wait until the listener has seen the
+    * run's last executed batch (`lastBatchId`, read from the query's own
+    * `recentProgress`), bounded by `maxWaitMs`. A run that executed no
+    * batch (`None`: an empty drain, which posts only an idle event) has
+    * nothing to wait for. */
+  def settled(runId: java.util.UUID, lastBatchId: Option[Long],
+              maxWaitMs: Long = 2000L): Option[Totals] = lastBatchId match {
+    case None => Some(Totals.zero)
+    case Some(last) =>
+      val deadline = System.currentTimeMillis() + maxWaitMs
+      settledLock.synchronized {
+        var cur = of(runId)
+        var left = maxWaitMs
+        while (!cur.exists(_.lastBatchId >= last) && left > 0) {
+          settledLock.wait(left)
+          cur = of(runId)
+          left = deadline - System.currentTimeMillis()
+        }
+        cur
+      }
   }
 
   override def close(): Unit = spark.streams.removeListener(this)
@@ -393,13 +410,11 @@ class ProgressAccumulator(spark: SparkSession)
 
 object ProgressAccumulator {
   case class Totals(batches: Long, inputRows: Long, events: Long,
-                    applicable: Long, totalMs: Long, lastMs: Long)
+                    applicable: Long, totalMs: Long, lastMs: Long, lastBatchId: Long)
 
-  /** Totals assembled from a `recentProgress` snapshot — the capped
-    * fallback when no listener was attached. */
-  def synthetic(batches: Long, inputRows: Long, events: Long,
-                applicable: Long, totalMs: Long, lastMs: Long): Totals =
-    Totals(batches, inputRows, events, applicable, totalMs, lastMs)
+  object Totals {
+    val zero: Totals = Totals(0, 0, 0, 0, 0, 0, -1L)
+  }
 }
 
 object MutationStream {
@@ -554,18 +569,19 @@ object MutationStream {
     * batches. */
   def progressOf(q: StreamingQuery, state: DocStateStore, logDir: String,
                  ckptDir: String, acc: Option[ProgressAccumulator] = None): IndexerProgress = {
-    val ps = q.recentProgress.toSeq
+    // executed batches only: an idle trigger (nothing new in the log)
+    // also leaves a progress entry, without an addBatch phase
+    val ps = q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
     def observed(i: Int): Long = ps.flatMap { p =>
       Option(p.observedMetrics.get("graft.ingress")).map(_.getLong(i))
     }.sum
     val durs = ps.map(p => p.durationMs.getOrDefault("triggerExecution", 0L).longValue())
-    // nothing ran → nothing to settle (avoids the full stabilization wait
-    // on an empty drain, where no listener event will ever arrive)
-    val totals = acc.filter(_ => ps.nonEmpty).flatMap(_.settled(q.runId)).getOrElse(
-      ProgressAccumulator.synthetic(
+    val totals = acc.flatMap(_.settled(q.runId, ps.lastOption.map(_.batchId))).getOrElse(
+      ProgressAccumulator.Totals(
         batches = ps.size.toLong, inputRows = ps.map(_.numInputRows).sum,
         events = observed(0), applicable = observed(1),
-        totalMs = durs.sum, lastMs = durs.lastOption.getOrElse(0L)))
+        totalMs = durs.sum, lastMs = durs.lastOption.getOrElse(0L),
+        lastBatchId = ps.lastOption.map(_.batchId).getOrElse(-1L)))
     val processed = processedFiles(ckptDir)
     val lag = sourceLag(logDir, ckptDir)
     IndexerProgress(

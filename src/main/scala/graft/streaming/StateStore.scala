@@ -325,9 +325,9 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
     // dynamic-partition writer (extra sort, per-partition writer churn,
     // per-dir commit renames) measured ~0.5 s/commit CONSTANT on
     // trigger-sized data — the streaming drains' bucketed-commit floor.
-    // The repartition keeps every output file bucket-pure, so the read
-    // side's pushed-down `_bucket IN (...)` prunes files from footer
-    // stats exactly as directory pruning did; the observe() census of
+    // The repartition hashes bucket ids into the shuffle partitions, so a
+    // file mixes buckets and the read side's pushed-down `_bucket IN (...)`
+    // mostly filters rows (see IndexState's doc); the observe() census of
     // nonempty buckets replaces the per-bucket-dir existence probe with
     // zero extra jobs.
     val obs = org.apache.spark.sql.Observation()

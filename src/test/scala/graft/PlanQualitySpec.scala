@@ -65,6 +65,32 @@ class PlanQualitySpec extends SparkSpec {
     assert(aggBelowJoin.nonEmpty, "dedup aggregate must be below the lookup join")
   }
 
+  test("the mapping runs no interpreted lambdas: rowPath and BatchPipeline.run plans hold no LambdaFunction") {
+    import graft.conf.{FieldDef, IndexerConf, RowReadMode, ValueSource}
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    def lambdas(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect { case l: LambdaFunction => l }))
+    // every built-in mapping feature: exact/prefix specs, value and
+    // qualifier sources, a dynamic name, a typed field
+    val conf = IndexerConf(table = "customer", fields = Seq(
+      FieldDef("name_s", "info:name", ValueSource.Value, "string"),
+      FieldDef("bal_d", "info:acctbal", ValueSource.Value, "double"),
+      FieldDef("cols_ss", "info:*", ValueSource.Qualifier, "string"),
+      FieldDef("dyn_*", "info:n*", ValueSource.Value, "string")))
+    val events = graft.core.Fixtures.customerCells(spark, sf0001)
+    val snapshot = graft.core.Fixtures.customerSnapshot(spark, sf0001)
+    val exact = conf.copy(fields = conf.fields.take(2)) // complete-able: the lookup branch
+    val plans = Map(
+      "rowPath never" -> graft.core.IndexerCore.rowPath(conf.copy(rowReadMode = RowReadMode.Never))(events),
+      "rowPath dynamic" -> graft.core.IndexerCore.rowPath(exact, Some(snapshot))(events),
+      "BatchPipeline.run" -> graft.batch.BatchPipeline.run(conf, events))
+    plans.foreach { case (name, df) =>
+      assert(lambdas(df).isEmpty, s"$name: interpreted lambda in the mapping plan: ${lambdas(df)}")
+    }
+    // the walker does see a lambda where there is one
+    assert(lambdas(events.select(filter(col("cells"), _ => lit(true)))).nonEmpty)
+  }
+
   test("a01 brute-force ANN: query side broadcast, corpus never shuffled before scoring") {
     val plan = q("a01_ann_brute").queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),

@@ -204,6 +204,28 @@ class RegistrySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", prev)
   }
 
+  test("empty drains settle at once; busy drains still report full totals") {
+    val regDir = tmp("graft_reg6"); val work = tmp("graft_work6"); val logs = tmp("graft_logs6")
+    val reg = new IndexerRegistry(regDir)
+    val sup = new IndexerSupervisor(spark, reg, work, name => s"$logs/$name")
+    val log = s"$logs/idx"
+    reg.add(IndexerDefinition("idx", confXml))
+    (1 to 3).foreach(i => writeLog(log, i, Seq(ev(s"u$i", i.toLong, 10L * i, "click", "v"))))
+    val busy = sup.waitUntilDrained("idx")
+    assert(busy.batches == 3L && busy.events == 3L && busy.inputRows == 3L,
+      s"a busy drain must report every batch: $busy")
+    // the empty drains: the checkpoint is at the end of the log, so no
+    // batch runs and no progress event will ever reach the listener
+    val walls = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      val rep = sup.waitUntilDrained("idx")
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(rep.batches == 0L && rep.inputRows == 0L, s"empty drain ran no batch: $rep")
+      ms
+    }
+    assert(walls.min < 500.0, s"an empty drain must not wait out a settle timeout: $walls")
+  }
+
   test("C3 admission arm: build → admit → append → admit through the supervisor") {
     import spark.implicits._
     val regDir = tmp("graft_reg5"); val work = tmp("graft_work5"); val logs = tmp("graft_logs5")

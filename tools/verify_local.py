@@ -5,6 +5,9 @@ tables and compare (columns sorted by name, rows sorted, values compared
 exactly; floats reported with tolerance diagnostics).
 
 Usage: python3 tools/verify_local.py [sfdir] [outdir] [--skip-spark]
+
+Environment: SPARK_GRAFT_CPUS (default: the usable cores, as nproc) and
+SPARK_GRAFT_ONLY (comma-separated query names; default: every query).
 """
 import json, math, subprocess, sys
 from pathlib import Path
@@ -17,11 +20,15 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 
 def run_spark():
-    cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}']
-    env = {"SPARK_GRAFT_CPUS": "8"}
     import os
-    e = dict(os.environ); e.update(env)
-    r = subprocess.run(cmd, cwd="/root/repo", env=e, capture_output=True, text=True)
+    cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}']
+    # core count: SPARK_GRAFT_CPUS when set, else the usable cores (nproc);
+    # SPARK_GRAFT_ONLY (a comma list of query names) passes through to
+    # Verify, which then runs and dumps only those queries
+    e = dict(os.environ)
+    e.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    repo = Path(__file__).resolve().parent.parent
+    r = subprocess.run(cmd, cwd=repo, env=e, capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-25:])
     if r.returncode != 0:
         print(tail)
