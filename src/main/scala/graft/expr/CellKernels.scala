@@ -34,12 +34,14 @@ final case class CellField(
 }
 
 /** Field ordinals of a cell struct, resolved by name from the input's type
-  * (callers build cells in the engine's order, but need not). */
+  * (a cells array or a single cell; callers build cells in the engine's
+  * order, but need not). */
 final case class CellLayout(width: Int, family: Int, qualifier: Int, cellType: Int, value: Int)
 
 object CellLayout {
   def of(cellsType: DataType): CellLayout = cellsType match {
-    case ArrayType(st: StructType, _) =>
+    case ArrayType(st: StructType, _) => of(st)
+    case st: StructType =>
       def ord(name: String): Int = st.fieldNames.indexOf(name) match {
         case i if i >= 0 && st(i).dataType == StringType => i
         case _ => throw new IllegalArgumentException(
@@ -47,7 +49,7 @@ object CellLayout {
       }
       CellLayout(st.length, ord("family"), ord("qualifier"), ord("cellType"), ord("value"))
     case other => throw new IllegalArgumentException(
-      s"cells must be array<struct<family,qualifier,cellType,value,...>>, got ${other.simpleString}")
+      s"cells must be (an array of) struct<family,qualifier,cellType,value,...>, got ${other.simpleString}")
   }
 }
 
@@ -73,9 +75,6 @@ final class CellKernel(fields: IndexedSeq[CellField], layout: CellLayout) extend
   private val isPrefix = fields.map(_.prefix).toArray
   private val staticIdx = fields.indices.filterNot(fields(_).dynamic).toArray
   private val dynIdx = fields.indices.filter(fields(_).dynamic).toArray
-  // distinct static names and no dynamic field: no key can repeat, so the
-  // doc is assembled directly, with no dedup map builder per row
-  private val directDoc = dynIdx.isEmpty && staticIdx.map(fields(_).name).distinct.length == staticIdx.length
   private val emptyArray = new GenericArrayData(Array.empty[Any])
 
   private def matches(f: Int, family: UTF8String, qualifier: UTF8String): Boolean =
@@ -83,6 +82,17 @@ final class CellKernel(fields: IndexedSeq[CellField], layout: CellLayout) extend
 
   private def str(row: InternalRow, ord: Int): UTF8String =
     if (row.isNullAt(ord)) null else row.getUTF8String(ord)
+
+  /** Reference isRelevantKV (DefaultResultToSolrMapper.java:119-126): the
+    * cell, of any type, matches some configured field. */
+  def matchesAny(cell: InternalRow): Boolean = {
+    val family = str(cell, layout.family)
+    val qualifier = str(cell, layout.qualifier)
+    if (family == null || qualifier == null) return false
+    var f = 0
+    while (f < nf) { if (matches(f, family, qualifier)) return true; f += 1 }
+    false
+  }
 
   /** Row-path relevance (reference Indexer.java:300-311): some cell is a
     * delete, or some cell matches a configured field. */
@@ -93,13 +103,7 @@ final class CellKernel(fields: IndexedSeq[CellField], layout: CellLayout) extend
       if (!cells.isNullAt(i)) {
         val row = cells.getStruct(i, layout.width)
         val typ = str(row, layout.cellType)
-        if (typ != null && typ != put) return true
-        val family = str(row, layout.family)
-        val qualifier = str(row, layout.qualifier)
-        if (family != null && qualifier != null) {
-          var f = 0
-          while (f < nf) { if (matches(f, family, qualifier)) return true; f += 1 }
-        }
+        if ((typ != null && typ != put) || matchesAny(row)) return true
       }
       i += 1
     }
@@ -206,48 +210,31 @@ final class CellKernel(fields: IndexedSeq[CellField], layout: CellLayout) extend
   def docMap(cells: ArrayData): MapData = {
     if (cells == null) return if (dynIdx.isEmpty) emptyDoc else null
     val hits = new Hits(cells)
-    if (directDoc) {
-      val ks = new Array[Any](staticIdx.length)
-      val vs = new Array[Any](staticIdx.length)
-      var m = 0
-      var s = 0
-      while (s < staticIdx.length) {
-        val f = staticIdx(s)
-        if (hits.count(f) > 0) {
-          val v = hits.docValues(f)
-          if (v.numElements() > 0) { ks(m) = keys(f); vs(m) = v; m += 1 }
-        }
-        s += 1
-      }
-      if (m == ks.length) new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-      else new ArrayBasedMapData(new GenericArrayData(ks.take(m)), new GenericArrayData(vs.take(m)))
-    } else {
-      // the static map is keyed first, then filtered: under LAST_WIN a
-      // repeated static name keeps its LAST field's values, even if empty
-      val statics = new ArrayBasedMapBuilder(StringType, CellKernel.valuesType)
-      staticIdx.foreach(f => statics.put(keys(f), if (hits.count(f) > 0) hits.docValues(f) else emptyArray))
-      val staticDoc = statics.build()
-      val doc = new ArrayBasedMapBuilder(StringType, CellKernel.valuesType)
-      var s = 0
-      val staticKeys = staticDoc.keyArray
-      val staticValues = staticDoc.valueArray
-      while (s < staticDoc.numElements()) {
-        val v = staticValues.getArray(s)
-        if (v.numElements() > 0) doc.put(staticKeys.getUTF8String(s), v)
-        s += 1
-      }
-      dynIdx.foreach { f =>
-        val tailFrom = fields(f).qualifier.length + 1
-        var k = 0
-        while (k < hits.count(f)) {
-          val c = hits.cell(f, k)
-          doc.put(UTF8String.concat(keys(f), hits.qualifier(c).substringSQL(tailFrom, Int.MaxValue)),
-            new GenericArrayData(Array[Any](hits.value(c))))
-          k += 1
-        }
-      }
-      doc.build()
+    // the static map is keyed first, then filtered: under LAST_WIN a
+    // repeated static name keeps its LAST field's values, even if empty
+    val statics = new ArrayBasedMapBuilder(StringType, CellKernel.valuesType)
+    staticIdx.foreach(f => statics.put(keys(f), if (hits.count(f) > 0) hits.docValues(f) else emptyArray))
+    val staticDoc = statics.build()
+    val doc = new ArrayBasedMapBuilder(StringType, CellKernel.valuesType)
+    var s = 0
+    val staticKeys = staticDoc.keyArray
+    val staticValues = staticDoc.valueArray
+    while (s < staticDoc.numElements()) {
+      val v = staticValues.getArray(s)
+      if (v.numElements() > 0) doc.put(staticKeys.getUTF8String(s), v)
+      s += 1
     }
+    dynIdx.foreach { f =>
+      val tailFrom = fields(f).qualifier.length + 1
+      var k = 0
+      while (k < hits.count(f)) {
+        val c = hits.cell(f, k)
+        doc.put(UTF8String.concat(keys(f), hits.qualifier(c).substringSQL(tailFrom, Int.MaxValue)),
+          new GenericArrayData(Array[Any](hits.value(c))))
+        k += 1
+      }
+    }
+    doc.build()
   }
 
   private def emptyDoc: MapData = new ArrayBasedMapData(emptyArray, emptyArray)
@@ -297,40 +284,28 @@ object CellKernel {
     else if (b == null) 1
     else a.compareTo(b)
 
-  /** Stable in-place sort of `idx[from, to)`: insertion sort for the short
-    * (and usually already ordered) runs a row carries, TimSort beyond. */
-  private[expr] def stableSort(idx: Array[Int], from: Int, to: Int, cmp: (Int, Int) => Int): Unit =
-    if (to - from <= 32) {
-      var i = from + 1
-      while (i < to) {
-        val x = idx(i)
-        var j = i - 1
-        while (j >= from && cmp(idx(j), x) > 0) { idx(j + 1) = idx(j); j -= 1 }
-        idx(j + 1) = x
-        i += 1
-      }
-    } else {
-      val boxed = (from until to).map(k => Integer.valueOf(idx(k))).toArray
-      java.util.Arrays.sort(boxed, (a: Integer, b: Integer) => cmp(a.intValue, b.intValue))
-      var k = 0
-      while (k < boxed.length) { idx(from + k) = boxed(k).intValue; k += 1 }
-    }
+  /** Stable in-place sort of `idx[from, to)` (TimSort). */
+  private[expr] def stableSort(idx: Array[Int], from: Int, to: Int, cmp: (Int, Int) => Int): Unit = {
+    val boxed = (from until to).map(k => Integer.valueOf(idx(k))).toArray
+    java.util.Arrays.sort(boxed, (a: Integer, b: Integer) => cmp(a.intValue, b.intValue))
+    var k = 0
+    while (k < boxed.length) { idx(from + k) = boxed(k).intValue; k += 1 }
+  }
 }
 
-/** Shared shape of the cell kernels: a `cells` child, a field table, and
-  * one kernel call per row. Generated code calls [[evalCells]] on this
-  * expression, held as a reference object. */
+/** Shared shape of the cell kernels: a `cells` child (or a single cell),
+  * a field table, and one kernel call per row. Generated code calls
+  * [[evalCells]] on this expression, held as a reference object. */
 sealed abstract class CellKernelExpression extends UnaryExpression {
   def fields: Seq[CellField]
   @transient protected lazy val kernel: CellKernel =
     new CellKernel(fields.toIndexedSeq, CellLayout.of(child.dataType))
 
-  /** The result for one (possibly null) cells array, boxed; null for a
+  /** The result for one (possibly null) child value, boxed; null for a
     * null result. */
-  def evalCells(cells: ArrayData): Any
+  def evalCells(cells: Any): Any
 
-  override def eval(input: InternalRow): Any =
-    evalCells(child.eval(input).asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any = evalCells(child.eval(input))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -353,7 +328,7 @@ sealed abstract class CellKernelExpression extends UnaryExpression {
 case class CellDocMap(child: Expression, fields: Seq[CellField]) extends CellKernelExpression {
   override def dataType: DataType = CellKernel.docType
   override def nullable: Boolean = child.nullable && fields.exists(_.dynamic)
-  override def evalCells(cells: ArrayData): Any = kernel.docMap(cells)
+  override def evalCells(cells: Any): Any = kernel.docMap(cells.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): CellDocMap = copy(child = newChild)
   override def prettyName: String = "cell_doc_map"
 }
@@ -363,8 +338,8 @@ case class CellDocMap(child: Expression, fields: Seq[CellField]) extends CellKer
 case class CellFieldValues(child: Expression, field: CellField) extends CellKernelExpression {
   override def fields: Seq[CellField] = Seq(field.copy(dynamic = false))
   override def dataType: DataType = CellKernel.valuesType
-  override def evalCells(cells: ArrayData): Any =
-    if (cells == null) null else kernel.fieldValues(cells)
+  override def evalCells(cells: Any): Any =
+    if (cells == null) null else kernel.fieldValues(cells.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): CellFieldValues = copy(child = newChild)
   override def prettyName: String = "cell_field_values"
 }
@@ -372,10 +347,20 @@ case class CellFieldValues(child: Expression, field: CellField) extends CellKern
 /** Row-path event relevance ([[CellKernel.relevant]]); null for null cells. */
 case class CellsRelevant(child: Expression, fields: Seq[CellField]) extends CellKernelExpression {
   override def dataType: DataType = BooleanType
-  override def evalCells(cells: ArrayData): Any =
-    if (cells == null) null else kernel.relevant(cells)
+  override def evalCells(cells: Any): Any =
+    if (cells == null) null else kernel.relevant(cells.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): CellsRelevant = copy(child = newChild)
   override def prettyName: String = "cells_relevant"
+}
+
+/** Column-path cell relevance of a single cell ([[CellKernel.matchesAny]]);
+  * null for a null cell. */
+case class CellMatches(child: Expression, fields: Seq[CellField]) extends CellKernelExpression {
+  override def dataType: DataType = BooleanType
+  override def evalCells(cell: Any): Any =
+    if (cell == null) null else kernel.matchesAny(cell.asInstanceOf[InternalRow])
+  override protected def withNewChildInternal(newChild: Expression): CellMatches = copy(child = newChild)
+  override def prettyName: String = "cell_matches"
 }
 
 /** Completeness of a cells array against exact fields
@@ -384,8 +369,8 @@ case class CellsComplete(child: Expression, fields: Seq[CellField]) extends Cell
   require(fields.nonEmpty && !fields.exists(_.prefix),
     "completeness is only decidable for a non-empty table of exact fields")
   override def dataType: DataType = BooleanType
-  override def evalCells(cells: ArrayData): Any =
-    if (cells == null) null else kernel.complete(cells)
+  override def evalCells(cells: Any): Any =
+    if (cells == null) null else kernel.complete(cells.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): CellsComplete = copy(child = newChild)
   override def prettyName: String = "cells_complete"
 }
@@ -397,7 +382,7 @@ case class CellsComplete(child: Expression, fields: Seq[CellField]) extends Cell
 case class SortedPutCells(child: Expression) extends CellKernelExpression {
   override def fields: Seq[CellField] = Nil
   override def dataType: DataType = child.dataType
-  override def evalCells(cells: ArrayData): Any = kernel.sortedPuts(cells)
+  override def evalCells(cells: Any): Any = kernel.sortedPuts(cells.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): SortedPutCells = copy(child = newChild)
   override def prettyName: String = "sorted_put_cells"
 }

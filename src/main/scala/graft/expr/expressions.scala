@@ -1013,6 +1013,10 @@ object hfunctions {
   def cells_relevant(cells: Column, fields: Seq[CellField]): Column =
     expr2col(CellsRelevant(col2expr(cells), fields))
 
+  /** a single cell, of any type, matches some field */
+  def cell_matches(cell: Column, fields: Seq[CellField]): Column =
+    expr2col(CellMatches(col2expr(cell), fields))
+
   /** every (exact) field matches some put-cell */
   def cells_complete(cells: Column, fields: Seq[CellField]): Column =
     expr2col(CellsComplete(col2expr(cells), fields))

@@ -29,9 +29,13 @@ object Mapping {
   /** The conf's fields as the kernels' field table. A custom value
     * mapper loads here, at plan-compile time, so an unknown class name
     * fails fast; executors deserialize the loaded instance. */
-  private def fieldTable(conf: IndexerConf): Seq[CellField] = conf.fields.map(cellField)
+  private def fieldTable(conf: IndexerConf): Seq[CellField] = conf.fields.map(cellField(_, withMapper = true))
 
-  private def cellField(f: FieldDef): CellField = CellField(
+  /** The conf's column specs alone, for the kernels that only match cells:
+    * no value mapper is loaded or shipped. */
+  private def matchTable(conf: IndexerConf): Seq[CellField] = conf.fields.map(cellField(_, withMapper = false))
+
+  private def cellField(f: FieldDef, withMapper: Boolean): CellField = CellField(
     name = if (f.dynamicName) f.name.dropRight(1) else f.name,
     family = f.family,
     qualifier = f.qualifier,
@@ -43,7 +47,7 @@ object Mapping {
     // reference stringifies mapper outputs into the Solr doc); dynamic
     // fields always carry the raw value
     mapper =
-      if (f.dynamicName || isBuiltinType(f.typeName)) None
+      if (!withMapper || f.dynamicName || isBuiltinType(f.typeName)) None
       else {
         val m = ValueMapper.load(f.typeName)
         Some((v: String) => ValueMapper.safeMap(m, v))
@@ -51,24 +55,17 @@ object Mapping {
 
   // ---- cell-level predicates ----
 
-  /** Does this cell match the field's column spec? (reference
-    * SingleCellExtractor.isApplicable / AbstractPrefixMatchingExtractor
-    * .isApplicable). */
-  def cellMatches(cell: Column, f: FieldDef): Column = {
-    val fam = cell.getField("family") === lit(f.family)
-    if (f.prefixMatch) fam && cell.getField("qualifier").startsWith(f.qualifier)
-    else fam && cell.getField("qualifier") === lit(f.qualifier)
-  }
-
   /** Reference isRelevantKV (DefaultResultToSolrMapper.java:119-126):
-    * ≥1 configured extractor applies to the cell. */
+    * ≥1 configured extractor applies to the cell — it matches a field's
+    * column spec (SingleCellExtractor.isApplicable /
+    * AbstractPrefixMatchingExtractor.isApplicable). */
   def isRelevantCell(conf: IndexerConf)(cell: Column): Column =
-    conf.fields.map(f => cellMatches(cell, f)).reduceOption(_ || _).getOrElse(lit(false))
+    cell_matches(cell, matchTable(conf))
 
   /** Row-path event relevance (reference Indexer.java:300-311): any cell
     * relevant or any cell a delete. */
   def isRelevantEvent(conf: IndexerConf)(cells: Column): Column =
-    cells_relevant(cells, fieldTable(conf))
+    cells_relevant(cells, matchTable(conf))
 
   /** Reference containsRequiredData (DefaultResultToSolrMapper.java:109-116):
     * true iff the event's own put-cells already cover every configured
@@ -76,7 +73,7 @@ object Mapping {
     * AbstractPrefixMatchingExtractor.containsTarget:88-91). */
   def containsRequiredData(conf: IndexerConf)(cells: Column): Column =
     if (conf.fields.isEmpty || conf.fields.exists(_.prefixMatch)) lit(false)
-    else cells_complete(cells, fieldTable(conf))
+    else cells_complete(cells, matchTable(conf))
 
   // ---- extraction (the SELECT list) ----
 
@@ -88,7 +85,7 @@ object Mapping {
     * .java:57-71). */
   def extractRaw(cells: Column, f: FieldDef): Column =
     // raw values: the field's type is not applied (nor its class loaded)
-    cell_field_values(cells, cellField(f.copy(typeName = "string")))
+    cell_field_values(cells, cellField(f, withMapper = false))
 
   /** Built-in type names → Spark cast target (§1.2 of SURVEY.md). `None`
     * = string identity. `byte[]` is the morphline pass-through type

@@ -12,8 +12,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import scala.collection.mutable
 
-/** The compiled mapping kernels (doc map, event relevance, completeness,
-  * raw extraction, the put-cell sort) against a plain-Scala model of the
+/** The compiled mapping kernels (doc map, event and cell relevance,
+  * completeness, raw extraction, the put-cell sort) against a plain-Scala model of the
   * reference extraction, over random cell arrays and random confs. Sizes
   * are bounded and the seed fixed, so a failure replays exactly. */
 class MappingKernelSpec extends SparkSpec {
@@ -30,7 +30,9 @@ class MappingKernelSpec extends SparkSpec {
     value <- Gen.frequency(1 -> Gen.const(null), 5 -> Gen.oneOf("x", "7", "a#b", "#", "", "v1"))
   } yield C(family, qualifier, cellType, value)
 
-  private val cellsGen: Gen[Seq[C]] = Gen.choose(0, 8).flatMap(Gen.listOfN(_, cellGen))
+  // mostly short rows; a few wide ones give the sorts long runs
+  private val cellsGen: Gen[Seq[C]] =
+    Gen.frequency(9 -> Gen.choose(0, 8), 1 -> Gen.choose(33, 48)).flatMap(Gen.listOfN(_, cellGen))
 
   private def fieldGen(i: Int): Gen[FieldDef] = for {
     family <- Gen.frequency(6 -> Gen.oneOf(families), 1 -> Gen.const("h"))
@@ -92,6 +94,13 @@ class MappingKernelSpec extends SparkSpec {
       assert(r.getSeq[scala.collection.Seq[String]](6).map(_.toSeq) ==
         conf.fields.map(Model.raw(_, cells)), ctx)
     }
+    // the column path's per-cell relevance
+    val perCell = df.select(col("i"), posexplode(col("cells")))
+      .select(col("i"), col("pos"), Mapping.isRelevantCell(conf)(col("col")))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getBoolean(2)).toMap
+    assert(perCell.size == rows.map(_.length).sum)
+    for ((cells, i) <- rows.zipWithIndex; (c, pos) <- cells.zipWithIndex)
+      assert(perCell((i, pos)) == conf.fields.exists(Model.matches(_, c)), s"conf=${conf.fields} cell=$c")
   }
 
   private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
@@ -126,6 +135,7 @@ class MappingKernelSpec extends SparkSpec {
     assert(cases.exists { case (c, _) => c.fields.nonEmpty && !c.fields.exists(_.prefixMatch) })
     val cells = cases.flatMap(_._2).flatten
     assert(CellType.all.forall(t => cells.exists(_.cellType == t)) && cells.exists(_.value == null))
+    assert(cases.flatMap(_._2).exists(_.length > 32))
   }
 }
 
