@@ -2,9 +2,15 @@ package graft.batch
 
 import graft.conf.IndexerConf
 import graft.core.IndexerCore
+import java.nio.file.{Files, Path, Paths}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The batch path (reference hbase-indexer-mr, SURVEY §3.2): a pushed-down
   * snapshot scan through the same IndexerCore mapping calculus, then an
@@ -58,9 +64,17 @@ object BatchPipeline {
     * route (the reference's MR shuffle + SolrCloudPartitioner), then a
     * partitioned write — each `shard=N/` directory is an index segment
     * set. The reference's merge-tree (log_F(R/S) extra MR passes,
-    * HBaseMapReduceIndexerTool.java:462-520) is unnecessary: the shuffle
-    * already produces exactly `numShards` partitions, and AQE handles
-    * within-shard file sizing.
+    * HBaseMapReduceIndexerTool.java:462-520) is unnecessary: every shard
+    * lands whole in one write task, so each `shard=N/` holds one file.
+    *
+    * The shuffle has `numShards` partitions, but they are not one per
+    * shard: `repartition(numShards, shard)` places shard `k` at
+    * `pmod(murmur3(k, 42), numShards)`. With 8 shards, ids 0..7 go to
+    * partitions 7, 3, 6, 3, 6, 2, 1, 3, so shards 1, 3 and 7 share one
+    * write task, 2 and 4 share another, and 3 of the 8 tasks are empty.
+    * AQE does not resize a `REPARTITION_BY_NUM` exchange. A
+    * one-partition-per-shard layout did not move the build wall at 40k
+    * rows on 4 cores, so the layout stays as it is.
     *
     * `router` picks the route function, mirroring the reference's two
     * modes (HBaseMapReduceIndexerTool.java:397-417):
@@ -95,51 +109,100 @@ object BatchPipeline {
     * contract (GoLive.java:52-140 fails the WHOLE go-live if any shard
     * merge fails — a half-deployed index never serves). Pre-flip checks:
     * the build completed (`_SUCCESS`), at least one shard directory
-    * exists, all shard ids are < `numShards`, and the total row count
-    * matches `expectedRows` when given (the reference's analogue is the
-    * per-shard merge RPC succeeding). Only after every check passes is
-    * `serveDir/CURRENT` rewritten — the same pointer-flip commit as the
-    * streaming IndexState; a failed validation throws and leaves the old
-    * pointer (and thus the old live index) untouched. Returns the total
-    * row count gone live. */
+    * exists, every shard directory names an integer shard id below
+    * `numShards` (a null id routes to `shard=__HIVE_DEFAULT_PARTITION__`),
+    * every shard directory holds a data file, every data file's parquet
+    * footer reads and carries the same Spark schema, and the footer row
+    * counts sum to `expectedRows` when given (the reference's analogue is
+    * the per-shard merge RPC succeeding).
+    *
+    * Validation reads the footers on the driver and runs no Spark job.
+    * Only after every check passes is `serveDir/CURRENT` rewritten — the
+    * same pointer-flip commit as the streaming IndexState. The pointer
+    * holds the shard set's path and, on its second line, the schema it
+    * serves (the footer schema, nullable as a parquet read gives it, plus
+    * `shard int`), written in one rename so the two never disagree. A
+    * failed validation throws and leaves the old pointer (and thus the
+    * old live index) untouched. Returns the total row count gone live. */
   def goLive(spark: SparkSession, shardsDir: String, serveDir: String,
              numShards: Int, expectedRows: Option[Long] = None): Long = {
-    import java.nio.file.{Files, Paths}
     val root = Paths.get(shardsDir)
     require(Files.isDirectory(root), s"go-live: no shard build at $shardsDir")
     require(Files.exists(root.resolve("_SUCCESS")),
       s"go-live: build at $shardsDir is incomplete (no _SUCCESS marker)")
-    val shardDirs = {
-      val s = Files.list(root)
-      try s.iterator().asScala.filter(p => p.getFileName.toString.startsWith("shard=")).toSeq
-      finally s.close()
-    }
+    val shardDirs = list(root).filter(p => p.getFileName.toString.startsWith("shard="))
     require(shardDirs.nonEmpty, s"go-live: no shard directories under $shardsDir")
-    val ids = shardDirs.map(_.getFileName.toString.stripPrefix("shard=").toInt)
+    val ids = shardDirs.map { d =>
+      d.getFileName.toString.stripPrefix("shard=").toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"go-live: malformed shard directory $d (not an integer shard id)"))
+    }
     require(ids.forall(k => k >= 0 && k < numShards),
       s"go-live: unexpected shard ids ${ids.filterNot(k => k >= 0 && k < numShards)} (numShards=$numShards)")
-    shardDirs.foreach { d =>
-      val s = Files.list(d)
-      val hasData = try s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-      require(hasData, s"go-live: shard directory $d has no data files")
+    val footers = shardDirs.flatMap { d =>
+      // the files a parquet read of the directory scans: hidden names
+      // (`_SUCCESS`, `.crc` checksums) are skipped
+      val files = list(d).filter { f =>
+        val n = f.getFileName.toString
+        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+      }
+      require(files.nonEmpty, s"go-live: shard directory $d has no data files")
+      files.map(footer)
     }
-    val rows = spark.read.parquet(shardsDir).count()
+    val schemas = footers.groupBy(_._3)
+    require(schemas.size == 1, "go-live: shard files disagree on their schema: " +
+      schemas.map { case (s, fs) => s"${s.simpleString} in ${fs.head._1}" }.mkString("; "))
+    val rows = footers.map(_._2).sum
     expectedRows.foreach(e => require(rows == e,
       s"go-live: shard build holds $rows rows, expected $e"))
+    val served = StructType(nullable(schemas.head._1).asInstanceOf[StructType].fields :+
+      StructField("shard", IntegerType))
     Files.createDirectories(Paths.get(serveDir))
     // temp-file + rename, not truncate-in-place: a reader resolving the
     // pointer mid-flip must see the old index or the new one, never an
     // empty path
     graft.streaming.IndexState.atomicWriteString(
-      Paths.get(serveDir, "CURRENT"), root.toAbsolutePath.toString)
+      Paths.get(serveDir, "CURRENT"), s"${root.toAbsolutePath}\n${served.json}")
     rows
   }
 
-  /** The currently served index (whatever go-live last validated). */
+  /** The currently served index (whatever go-live last validated), read
+    * with the schema its pointer records, so resolving it runs no job. */
   def currentServing(spark: SparkSession, serveDir: String): Option[DataFrame] = {
-    import java.nio.file.{Files, Paths}
     val ptr = Paths.get(serveDir, "CURRENT")
-    if (Files.exists(ptr)) Some(spark.read.parquet(Files.readString(ptr).trim)) else None
+    Option.when(Files.exists(ptr)) {
+      val Array(dir, schema) = Files.readString(ptr).split("\n", 2)
+      spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(dir)
+    }
+  }
+
+  private def list(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toSeq.sorted finally s.close()
+  }
+
+  /** A data file, its footer's row count and the Spark schema its writer
+    * recorded there. */
+  private def footer(f: Path): (Path, Long, StructType) = {
+    val key = ParquetReadSupport.SPARK_METADATA_KEY
+    val (rows, schema) = try {
+      val r = ParquetFileReader.open(new LocalInputFile(f))
+      try (r.getRecordCount, Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(key))
+        .map(DataType.fromJson(_).asInstanceOf[StructType]))
+      finally r.close()
+    } catch {
+      case NonFatal(e) => throw new IllegalArgumentException(
+        s"go-live: unreadable parquet footer in $f (${e.getMessage})", e)
+    }
+    require(schema.nonEmpty, s"go-live: $f carries no Spark schema ($key)")
+    (f, rows, schema.get)
+  }
+
+  /** What a file-source read does to a data schema: every field, element
+    * and map value may be null. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +10,32 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Run `body` with session confs set, then restore the previous values. */
+  def withConf(kv: (String, String)*)(body: => Unit): Unit = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

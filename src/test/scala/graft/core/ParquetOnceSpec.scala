@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Pins for the per-process parquet schema memo: the point of
@@ -14,21 +13,6 @@ class ParquetOnceSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Count jobs started while `body` constructs (NOT executes) frames. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      // the listener bus is async; give queued events time to land
-      Thread.sleep(300)
-      (r, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("second read of a key resolves with zero jobs and identical rows") {
     val dir = tmp("pqonce_a")

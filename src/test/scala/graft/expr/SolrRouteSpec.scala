@@ -59,12 +59,18 @@ class SolrRouteSpec extends SparkSpec {
 
   test("SolrShard column expression equals the Scala router (codegen path)") {
     import spark.implicits._
-    val ids = (1 to 500).map(i =>
-      if (i % 3 == 0) s"seg${i % 5}!$i" else s"$i").toDF("id")
-    val got = ids.select(col("id"), hfunctions.solr_shard(col("id"), 8).as("shard"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    got.foreach { case (id, s) =>
-      assert(s == SolrRouteHash.shard(id, 8), id)
+    // an RDD, not a local relation: the optimizer would evaluate a
+    // projection over local rows itself, never reaching doGenCode; and no
+    // fallback, so generated code that does not compile fails the test
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false") {
+      val ids = spark.sparkContext.parallelize((1 to 500).map(i =>
+        if (i % 3 == 0) s"seg${i % 5}!$i" else s"$i"), 2).toDF("id")
+      val got = ids.select(col("id"), hfunctions.solr_shard(col("id"), 8).as("shard"))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(got.size == 500)
+      got.foreach { case (id, s) =>
+        assert(s == SolrRouteHash.shard(id, 8), id)
+      }
     }
   }
 

@@ -103,16 +103,6 @@ class MappingKernelSpec extends SparkSpec {
       assert(perCell((i, pos)) == conf.fields.exists(Model.matches(_, c)), s"conf=${conf.fields} cell=$c")
   }
 
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("compiled kernels ≡ the reference model over random cells and confs") {
     // no silent fallback to interpreted evaluation: generated code that
     // does not compile fails the test
