@@ -118,7 +118,7 @@ object BatchPipeline {
     * counts sum to `expectedRows` when given (the reference's analogue is
     * the per-shard merge RPC succeeding).
     *
-    * Validation reads the footers on the driver and runs no Spark job.
+    * Validation reads the footers in this JVM and runs no Spark job.
     * Only after every check passes is `serveDir/CURRENT` rewritten — the
     * same pointer-flip commit as the streaming IndexState. The pointer
     * holds the shard set's path and, on its second line, the schema it

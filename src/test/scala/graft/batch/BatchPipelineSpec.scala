@@ -3,6 +3,7 @@ package graft.batch
 import graft.SparkSpec
 import graft.conf.{FieldDef, IndexerConf, RowReadMode, ValueSource}
 import graft.core.Fixtures
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -88,7 +89,6 @@ class BatchPipelineSpec extends SparkSpec {
   private lazy val nAdds = ops.filter(col("kind") === "add").count()
 
   private def copyTree(from: String, to: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val src = Paths.get(from)
     val s = Files.walk(src)
     try s.forEach(p => Files.copy(p, Paths.get(to).resolve(src.relativize(p).toString)))
@@ -96,7 +96,7 @@ class BatchPipelineSpec extends SparkSpec {
   }
 
   test("the served set resolves with no job, to an inferring read's schema and rows") {
-    val work = java.nio.file.Files.createTempDirectory("graft_serve").toString
+    val work = Files.createTempDirectory("graft_serve").toString
     BatchPipeline.buildShards(ops, 4, s"$work/v1")
     BatchPipeline.goLive(spark, s"$work/v1", s"$work/serve", 4, Some(nAdds))
     val (served, jobs) = jobsDuring(BatchPipeline.currentServing(spark, s"$work/serve").get)
@@ -107,7 +107,7 @@ class BatchPipelineSpec extends SparkSpec {
   }
 
   test("go-live runs no job; a served read runs one job fewer than an inferring read") {
-    val work = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val work = Files.createTempDirectory("graft_jobs").toString
     BatchPipeline.buildShards(ops, 4, s"$work/v1")
     val (rows, goLiveJobs) = jobsDuring(
       BatchPipeline.goLive(spark, s"$work/v1", s"$work/serve", 4, Some(nAdds)))
@@ -121,7 +121,6 @@ class BatchPipelineSpec extends SparkSpec {
   /** A fresh work dir with `v1` live, and a check that go-live of another
     * build there is refused and leaves `v1` served. */
   private def withLive(prefix: String)(body: (String, String => IllegalArgumentException) => Unit): Unit = {
-    import java.nio.file.{Files, Paths}
     val work = Files.createTempDirectory(prefix).toString
     val serve = s"$work/serve"
     BatchPipeline.buildShards(ops, 4, s"$work/v1")
@@ -146,7 +145,6 @@ class BatchPipelineSpec extends SparkSpec {
   }
 
   test("go-live refuses a truncated parquet file") {
-    import java.nio.file.{Files, Paths}
     withLive("graft_truncated") { (work, refused) =>
       copyTree(s"$work/v1", s"$work/truncated")
       val dataFile = Files.list(Paths.get(s"$work/truncated/shard=1")).iterator()
