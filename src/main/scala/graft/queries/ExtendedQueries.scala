@@ -1485,7 +1485,7 @@ object ExtendedQueries {
 
     // streaming ANN ingest: the persisted IVF index tracks a GROWING
     // corpus — seed with half the vectors, stream the rest in file-backed
-    // micro-batches through foreachBatch → appendToIvfIndex (the frozen
+    // micro-batches through Drain.run → appendToIvfIndex (the frozen
     // codebook keeps old and new entries in one coordinate system), then
     // serve. Because append-with-frozen-codebook ≡ rebuild (pinned in
     // SimilaritySpec) and the codebook is trained on the full corpus,
@@ -1498,18 +1498,10 @@ object ExtendedQueries {
         codebook = Some(cents))
       corpus.filter(col("vec_id") % 2 === 1)
         .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1) // several genuine micro-batches
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      // one micro-batch per incoming file: several genuine appends
+      graft.streaming.Drain.run(s, s"$work/incoming", corpus.schema, s"$work/ckpt") {
+        (batch, _) => Similarity.appendToIvfIndex(batch, work)
+      }
       Similarity.ivfIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
         .orderBy(col("q_id"), col("rk"))
     }),
@@ -1527,18 +1519,9 @@ object ExtendedQueries {
         coarse = Some(co), books = Some(bo))
       corpus.filter(col("vec_id") % 2 === 1)
         .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfPqIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      graft.streaming.Drain.run(s, s"$work/incoming", corpus.schema, s"$work/ckpt") {
+        (batch, _) => Similarity.appendToIvfPqIndex(batch, work)
+      }
       Similarity.ivfPqIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
         .orderBy(col("q_id"), col("rk"))
     }),
@@ -1556,18 +1539,9 @@ object ExtendedQueries {
         coarse = Some(co), books = Some(bo))
       corpus.filter(col("vec_id") % 2 === 1)
         .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfPqIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      graft.streaming.Drain.run(s, s"$work/incoming", corpus.schema, s"$work/ckpt") {
+        (batch, _) => Similarity.appendToIvfPqIndex(batch, work)
+      }
       Similarity.ivfPqIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
         .orderBy(col("q_id"), col("rk"))
     }),

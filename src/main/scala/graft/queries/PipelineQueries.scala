@@ -2184,18 +2184,10 @@ object PipelineQueries {
         Thread.sleep(20)
       }
       val outDir = s"$work/out"
-      val q = s.readStream.schema(tracks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/log")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Multimodal.clipMatchesPrepared(b, clips, windowSamples = 4, k = 4)
-            .write.mode("append").parquet(outDir); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      graft.streaming.Drain.run(s, s"$work/log", tracks.schema, s"$work/ckpt") { (b, _) =>
+        Multimodal.clipMatchesPrepared(b, clips, windowSamples = 4, k = 4)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).orderBy(col("clip_id"), col("track_id"))
     }),
 
@@ -2225,19 +2217,11 @@ object PipelineQueries {
         Thread.sleep(20)
       }
       val outDir = s"$work/out"
-      val q = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/log")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Dedup.editContaminationIndexed(b, benchIdx, "doc_id", "text",
-              k = 8, minOverlap = 0.25, editSim = 0.8, maxDist = 200)
-            .write.mode("append").parquet(outDir); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      graft.streaming.Drain.run(s, s"$work/log", d.schema, s"$work/ckpt") { (b, _) =>
+        Dedup.editContaminationIndexed(b, benchIdx, "doc_id", "text",
+            k = 8, minOverlap = 0.25, editSim = 0.8, maxDist = 200)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).orderBy(col("doc_id"), col("bench_id"))
     }),
 

@@ -473,11 +473,9 @@ class IndexerSupervisor(
   /** The standing per-class admitted counters — the budget dashboard. */
   def quotaStatus(name: String): Map[String, Long] = {
     registry.get(name).getOrElse(throw new IllegalStateException(s"no such indexer: $name"))
-    graft.streaming.GenManifest.currentGen(s"${quotaDir(name)}/state") match {
+    graft.streaming.GenManifest.live(spark, s"${quotaDir(name)}/state") match {
       case None => Map.empty
-      case Some(gen) =>
-        spark.read.parquet(s"${quotaDir(name)}/state/$gen")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      case Some(st) => st.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
   }
 

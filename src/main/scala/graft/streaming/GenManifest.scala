@@ -2,11 +2,18 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import graft.core.ParquetOnce
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Atomic generation-pointer + high-water-mark manifest for the
-  * constant-size streaming rollups ([[StreamTransitions]],
-  * [[StreamAttribution]], [[StreamQuota]], [[StreamAspect]],
-  * [[StreamBurst]], [[StreamCalibration]], [[StreamDecodeHealth]],
-  * [[StreamPsi]], [[StreamUniqueTokens]]).
+  * single-state streaming monitors ([[StreamAspect]], [[StreamBurst]],
+  * [[StreamCalibration]], [[StreamDecodeHealth]], [[StreamKmv]],
+  * [[StreamGramCoverage]], [[StreamPsi]], [[StreamQuota]]): each keeps
+  * one constant-size state frame as immutable `g<batchId>` generation
+  * directories. [[advance]] is their one commit and [[live]] their one
+  * reader. The dual-state monitors keep the pointer in their store's
+  * metadata instead ([[GenMeta]]) and read this manifest only as the
+  * pre-fuse layout.
   *
   * One `_current` file holds `gen\tlo\thi`, written via temp +
   * ATOMIC_MOVE, so the state advance and the redelivery detector are a
@@ -18,7 +25,10 @@ import java.nio.file.{Files, Paths}
   * anywhere before the move replays the batch against the OLD generation
   * (correct: the fold is deterministic and the new generation directory
   * is simply rewritten), and a crash after the move is detected as a
-  * bit-exact redelivery by its (lo, hi) range and skipped.
+  * bit-exact redelivery by its (lo, hi) range and skipped. The
+  * idempotent folds ([[StreamKmv]], [[StreamGramCoverage]]) commit the
+  * `Long.MinValue` sentinel range and do not skip a replay; they fold it
+  * again into a fresh generation (see [[advance]]).
   *
   * Reads stay compatible with the pre-fuse layout (gen-only `_current`
   * plus sibling `_hwm`) so a long-running monitor restarted across the
@@ -68,6 +78,43 @@ object GenManifest {
     Files.deleteIfExists(Paths.get(dir, "_hwm"))
     ()
   }
+
+  /** The live generation as a frame, None before the first commit. The
+    * schema is the one [[advance]] wrote, so the read runs no footer
+    * inference job. */
+  def live(spark: SparkSession, dir: String): Option[DataFrame] =
+    currentGen(dir).map(g => ParquetOnce.read(spark, s"gen:$dir", s"$dir/$g"))
+
+  /** Commit `next` as the state after batch `batchId` with hwm (lo, hi):
+    * write it as a new generation, [[commit]] the pointer, then delete
+    * the generation it replaced.
+    *
+    * The live generation is never overwritten. `next` is derived from it,
+    * and a batch id can run twice: Structured Streaming reruns a batch
+    * whose `perBatch` committed here but whose own commit log entry was
+    * never written. Overwriting `g<batchId>` from a plan that reads
+    * `g<batchId>` deletes the input before the scan, so the write fails
+    * and leaves the pointer on an empty directory. A rerun of the live
+    * batch therefore writes `g<batchId>-r<nanos>`, as
+    * [[IndexState.commitWithMeta]] does with its versions. */
+  def advance(dir: String, batchId: Long, next: DataFrame, lo: Long, hi: Long): Unit = {
+    val prev = currentGen(dir)
+    val gen =
+      if (prev.contains(s"g$batchId")) s"g$batchId-r${System.nanoTime()}" else s"g$batchId"
+    ParquetOnce.seed(s"gen:$dir", next.schema)
+    next.write.mode("overwrite").parquet(s"$dir/$gen")
+    commit(dir, gen, lo, hi)
+    prev.foreach(g => deleteTree(Paths.get(dir, g)))
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  private[streaming] def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator().forEachRemaining(f => { Files.deleteIfExists(f); () })
+      finally walk.close()
+    }
 }
 
 /** The DUAL-STATE variant of [[GenManifest]]: monitors that keep a
@@ -227,12 +274,8 @@ object GenMeta {
           else { IndexState.atomicWriteString(stamp, now.toString); now }
         } else { IndexState.atomicWriteString(stamp, now.toString); now }
       val age = now - doomedAt
-      if (age >= graceMs || (rank >= graceKeep && age >= graceFloorMs)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().forEachRemaining(f => { Files.deleteIfExists(f); () })
-        finally walk.close()
-      }
+      if (age >= graceMs || (rank >= graceKeep && age >= graceFloorMs))
+        GenManifest.deleteTree(p)
     }
   }
 }

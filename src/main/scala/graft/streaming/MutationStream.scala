@@ -5,7 +5,7 @@ import graft.core.IndexerCore
 import graft.model.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -455,24 +455,17 @@ object MutationStream {
 
     val state = stateFactory(indexDir, spark)
 
-    source(spark, logDir, maxFilesPerTrigger)
+    val events = source(spark, logDir, maxFilesPerTrigger)
       // A7: engine-native meters (reference IndexingEventListener.java:62-67)
       // — per-batch ingress counts surface in StreamingQueryProgress
       // .observedMetrics under "graft.ingress"
       .observe("graft.ingress", count(lit(1)).as("events"),
         count(when(col("writeTime") >= lit(subscriptionTs), 1)).as("applicable"))
       .transform(IndexerCore.subscriptionFilter(subscriptionTs))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TriggerScope.scoped(batch) {
-          val ops = opsWithSinkMeta(conf, IndexerCore.rowPath(conf, snapshot)(batch))
-          applyBatch(spark, state, ops, batchId)
-        }
-        ()
-      }
-      .start()
+    Drain.start(events, checkpointDir) { (batch, batchId) =>
+      val ops = opsWithSinkMeta(conf, IndexerCore.rowPath(conf, snapshot)(batch))
+      applyBatch(spark, state, ops, batchId)
+    }
   }
 
   /** One micro-batch upsert against the bucketed state: resolve the ops'

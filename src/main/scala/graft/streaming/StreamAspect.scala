@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,13 +17,9 @@ import org.apache.spark.sql.functions._
   * m16 bit-for-bit. */
 object StreamAspect {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one (doc_id, mime, payload) micro-batch. */
   def applyBatch(aggDir: String, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("doc_id"), col("mime"), col("payload")).cache()
     try {
       val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
@@ -38,29 +32,19 @@ object StreamAspect {
         .groupBy(col("bucket_w"), col("bucket_h"))
         .agg(count(lit(1)).as("n_images"))
       val parts = Seq(Some(batchCensus),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenManifest.live(spark, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("bucket_w"), col("bucket_h"))
         .agg(sum(col("n_images")).as("n_images"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, lo, hi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+      GenManifest.advance(aggDir, batchId, next, lo, hi)
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing batch plan — m16's output shape (targets derived at
     * read time, pixel budget 4096). */
   def summary(spark: SparkSession, aggDir: String): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenManifest.live(spark, aggDir) match {
+      case Some(st) => st
         .withColumn("scale",
           floor(sqrt(expr("CAST(4096 div (bucket_w * bucket_h) AS DOUBLE)"))))
         .select(col("bucket_w"), col("bucket_h"),
@@ -75,16 +59,9 @@ object StreamAspect {
             ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(aggDir, b, id)
+    }
     summary(spark, aggDir)
   }
 }

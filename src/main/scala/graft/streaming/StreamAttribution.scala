@@ -167,16 +167,9 @@ object StreamAttribution {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("user_id", "long").add("event_id", "long")
       .add("event_type", "string").add("value", "double")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(touches, aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(touches, aggDir, b, id)
+    }
     summary(spark, touches, aggDir)
   }
 }

@@ -23,16 +23,9 @@ object StreamBlankGate {
             ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(b, outPath)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(b, outPath)
+    }
     spark.read.parquet(outPath)
   }
 }

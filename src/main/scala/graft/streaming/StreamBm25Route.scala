@@ -36,9 +36,10 @@ object StreamBm25Route {
     * return the accumulated routes. */
   def drain(spark: SparkSession, queries: Seq[(Long, Seq[String])],
             df: Map[String, Long], nDocs: Long, totalTokens: Long,
-            inPath: String, outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, q_id long, score_q long") {
-      (b, _) => applyBatch(b, queries, df, nDocs, totalTokens, outPath)
+            inPath: String, outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(b, queries, df, nDocs, totalTokens, outPath)
     }
+    spark.read.schema("doc_id long, q_id long, score_q long").parquet(outPath)
+  }
 }

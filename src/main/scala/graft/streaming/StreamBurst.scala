@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,14 +23,10 @@ import org.apache.spark.sql.functions._
   * q30 bit-for-bit. */
 object StreamBurst {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one (event_id, event_type, ts_s) micro-batch. */
   def applyBatch(aggDir: String, batch: DataFrame, batchId: Long,
                  bucketSecs: Long = 3600L): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("event_id"), col("event_type"),
       expr(s"ts_s div ${bucketSecs}L").as("bucket")).cache()
     try {
@@ -45,28 +39,17 @@ object StreamBurst {
       val batchCensus = b.groupBy(col("event_type"), col("bucket"))
         .agg(count(lit(1)).as("n"))
       val parts = Seq(Some(batchCensus),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenManifest.live(spark, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("event_type"), col("bucket")).agg(sum(col("n")).as("n"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, lo, hi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+      GenManifest.advance(aggDir, batchId, next, lo, hi)
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing burst report — batch q30's output shape. */
   def summary(spark: SparkSession, aggDir: String, factor: Long = 2L): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.ops.Relational.burstFromCounts(
-        graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"), factor)
+    GenManifest.live(spark, aggDir) match {
+      case Some(st) => graft.ops.Relational.burstFromCounts(st, factor)
       case None => throw new IllegalStateException("no burst state committed yet")
     }
 
@@ -75,16 +58,9 @@ object StreamBurst {
             ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("event_id", "long").add("event_type", "string").add("ts_s", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(aggDir, b, id)
+    }
     summary(spark, aggDir)
   }
 }

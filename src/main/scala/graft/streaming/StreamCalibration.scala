@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,16 +25,12 @@ import org.apache.spark.sql.functions._
   * labeled rows, bit-for-bit. */
 object StreamCalibration {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one labeled (doc_id, text, lab) micro-batch. */
   def applyBatch(model: DataFrame, consts: DataFrame, aggDir: String,
                  batch: DataFrame, batchId: Long,
                  binWidth: Long = 200000L, lo: Long = -1000000L,
                  hi: Long = 999999L): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("doc_id"), col("text"), col("lab")).cache()
     try {
       val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
@@ -56,28 +50,18 @@ object StreamCalibration {
           sum(when(col("lab"), lit(1L)).otherwise(lit(0L))).as("n_pos"))
 
       val parts = Seq(Some(batchBands),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenManifest.live(spark, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("bin"))
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_pos")).as("n_pos"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, rlo, rhi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+      GenManifest.advance(aggDir, batchId, next, rlo, rhi)
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing curve — calibrationCurve's output shape. */
   def summary(spark: SparkSession, aggDir: String): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenManifest.live(spark, aggDir) match {
+      case Some(st) => st
         .withColumn("pos_ppm", expr("(n_pos * 1000000L) div n_docs"))
         .select(col("bin"), col("n_docs"), col("n_pos"), col("pos_ppm"))
       case None => throw new IllegalStateException("no calibration state committed yet")
@@ -88,17 +72,9 @@ object StreamCalibration {
             aggDir: String, inPath: String, ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string").add("lab", "boolean")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(model, consts, aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(model, consts, aggDir, b, id)
+    }
     summary(spark, aggDir)
   }
 }

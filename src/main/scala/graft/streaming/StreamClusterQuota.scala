@@ -45,17 +45,9 @@ object StreamClusterQuota {
       .add("vec_id", "long")
       .add("embedding", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(b, "vec_id", "embedding", cents, quotas, stateDir, outPath, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(b, "vec_id", "embedding", cents, quotas, stateDir, outPath, id)
+    }
     // drop the batch-tag partition column (StreamQuota's idempotent output)
     spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))
   }

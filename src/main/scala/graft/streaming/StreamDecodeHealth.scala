@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,13 +13,9 @@ import org.apache.spark.sql.functions._
   * at READ time. Drained census ≡ batch m20 bit-for-bit. */
 object StreamDecodeHealth {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one (doc_id, mime, payload) micro-batch. */
   def applyBatch(aggDir: String, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("doc_id"), col("mime"), col("payload")).cache()
     try {
       val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
@@ -33,28 +27,18 @@ object StreamDecodeHealth {
       val batchCensus = graft.ops.Multimodal.decodeHealth(b)
         .select(col("mime"), col("n"), col("n_decodable"))
       val parts = Seq(Some(batchCensus),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenManifest.live(spark, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("mime"))
         .agg(sum(col("n")).as("n"), sum(col("n_decodable")).as("n_decodable"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, lo, hi) // gen + hwm in ONE atomic move
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+      GenManifest.advance(aggDir, batchId, next, lo, hi) // gen + hwm in ONE atomic move
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing census — batch m20's output shape. */
   def summary(spark: SparkSession, aggDir: String): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenManifest.live(spark, aggDir) match {
+      case Some(st) => st
         .withColumn("ok_ppm", expr("(n_decodable * 1000000L) div n"))
         .select(col("mime"), col("n"), col("n_decodable"), col("ok_ppm"))
       case None => throw new IllegalStateException("no decode-health state committed yet")
@@ -65,16 +49,9 @@ object StreamDecodeHealth {
             ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(aggDir, b, id)
+    }
     summary(spark, aggDir)
   }
 }

@@ -55,17 +55,9 @@ object StreamDrift {
             outDir: String, ckptPath: String, lowFit: Double = 0.5): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("vec_id", "long").add("q", "array<long>").add("nq", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(outDir, cents, b, id, lowFit)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(outDir, cents, b, id, lowFit)
+    }
     summary(spark, outDir)
   }
 }

@@ -38,9 +38,10 @@ object StreamDsirGate {
     * [[applyBatch]], return the accumulated admitted documents. */
   def drain(spark: SparkSession, model: DataFrame, consts: DataFrame,
             buckets: Int, inPath: String, outPath: String,
-            ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_feats long, logw_q long") {
-      (b, _) => applyBatch(model, consts, buckets, b, "doc_id", "text", outPath)
+            ckptPath: String): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(model, consts, buckets, b, "doc_id", "text", outPath)
     }
+    spark.read.schema("doc_id long, n_feats long, logw_q long").parquet(outPath)
+  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,43 +29,28 @@ import org.apache.spark.sql.functions._
   * verbatim. */
 object StreamGramCoverage {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** The standing seen-gram set (one `g` column); empty before the
     * first commit. */
   def readState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    currentGen(stateDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
+    GenManifest.live(spark, stateDir)
 
   /** Union one micro-batch's benchmark-gram hits into the state.
     * `probeGrams` is the FROZEN distinct benchmark gram set (a `g`
     * column) — plan-stable across triggers so scores are comparable. */
   def applyBatch(batch: DataFrame, idCol: String, textCol: String, n: Int,
                  probeGrams: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val prev = currentGen(stateDir)
     val batchGrams = graft.ops.Dedup
       .shingleHashSets(batch, idCol, textCol, n)
       .select(explode(col("hs")).as("g"))
     val survivors = batchGrams
       .join(broadcast(probeGrams), Seq("g"), "left_semi").distinct()
-    val merged = prev match {
-      case Some(g) =>
-        graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g").unionByName(survivors).distinct()
+    val merged = GenManifest.live(batch.sparkSession, stateDir) match {
+      case Some(st) => st.unionByName(survivors).distinct()
       case None => survivors
     }
-    val gen = s"g$batchId"
-    graft.core.ParquetOnce.seed(s"gen:$stateDir", merged.schema)
-    merged.write.mode("overwrite").parquet(s"$stateDir/$gen")
     // idempotent set-union ⇒ no hwm by design; the sentinel keeps the
     // manifest format uniform across every monitor (one reader, no drift)
-    GenManifest.commit(stateDir, gen, Long.MinValue, Long.MinValue)
-    prev.filter(_ != gen).foreach { g => // vacuum the superseded generation
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      rm(Paths.get(stateDir, g).toFile)
-    }
+    GenManifest.advance(stateDir, batchId, merged, Long.MinValue, Long.MinValue)
   }
 
   /** Drain a (doc_id, text) log through the audit; return the per-probe
@@ -81,17 +64,9 @@ object StreamGramCoverage {
       .select("g").distinct().localCheckpoint()
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(b, "doc_id", textCol, n, probeGrams, stateDir, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(b, "doc_id", textCol, n, probeGrams, stateDir, id)
+    }
     val seen = readState(spark, stateDir)
       .getOrElse(sys.error(s"StreamGramCoverage: no state under $stateDir"))
     graft.ops.Dedup.coverageFromSeen(benchmark, idCol, textCol, n, seen)

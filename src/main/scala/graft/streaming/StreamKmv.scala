@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,48 +21,31 @@ import org.apache.spark.sql.functions._
   *
   * Crash safety: generations are immutable; the pointer flips AFTER the
   * new generation lands, and a replayed batch re-merges to the identical
-  * sketch. Superseded generations are vacuumed opportunistically (each
-  * is groups×k longs, so even leaking a few is harmless). */
+  * sketch in a fresh generation ([[GenManifest.advance]]). */
 object StreamKmv {
-
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
 
   /** Read the standing (group, mins) sketch frame, empty before the
     * first commit. */
   def readState(spark: SparkSession, stateDir: String, groupCol: String): Option[DataFrame] =
-    currentGen(stateDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
+    GenManifest.live(spark, stateDir)
 
   /** Fold one micro-batch into the standing sketches. */
   def applyBatch(batch: DataFrame, groupCol: String, textCol: String, k: Int,
                  stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val prev = currentGen(stateDir)
     val batchMins = graft.ops.CorpusStats
       .kmvShingleSketch(batch, groupCol, textCol, k)
       .select(col(groupCol), explode(col("mins")).as("h"))
-    val merged = prev match {
-      case Some(g) =>
-        graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g")
-          .select(col(groupCol), explode(col("mins")).as("h"))
-          .unionByName(batchMins)
+    val merged = GenManifest.live(batch.sparkSession, stateDir) match {
+      case Some(st) =>
+        st.select(col(groupCol), explode(col("mins")).as("h")).unionByName(batchMins)
       case None => batchMins
     }
     // the union is ≤ 2·groups×k rows: re-sketching it IS the KMV merge
     val next = merged.groupBy(col(groupCol))
       .agg(graft.expr.hfunctions.kmv_sketch(col("h"), k).as("mins"))
-    val gen = s"g$batchId"
-    graft.core.ParquetOnce.seed(s"gen:$stateDir", next.schema)
-    next.write.mode("overwrite").parquet(s"$stateDir/$gen")
     // idempotent merge ⇒ no hwm by design; the sentinel keeps the
     // manifest format uniform across every monitor (one reader, no drift)
-    GenManifest.commit(stateDir, gen, Long.MinValue, Long.MinValue)
-    prev.filter(_ != gen).foreach { g => // vacuum the superseded generation
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      rm(Paths.get(stateDir, g).toFile)
-    }
+    GenManifest.advance(stateDir, batchId, next, Long.MinValue, Long.MinValue)
   }
 
   /** Convenience drain: stream a (doc_id, text, `groupCol`) log through
@@ -73,17 +54,9 @@ object StreamKmv {
             ckptPath: String, groupCol: String, k: Int): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string").add(groupCol, "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(b, groupCol, "text", k, stateDir, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(b, groupCol, "text", k, stateDir, id)
+    }
     val st = readState(spark, stateDir, groupCol)
       .getOrElse(sys.error(s"StreamKmv: no state committed under $stateDir"))
     graft.ops.CorpusStats.kmvSummary(st, groupCol, k)

@@ -104,17 +104,9 @@ object StreamMediaGate {
             outPath: String, ckptPath: String, maxHamming: Int = 3): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(state, b, outPath, id, maxHamming)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(state, b, outPath, id, maxHamming)
+    }
     summary(spark, outPath)
   }
 }

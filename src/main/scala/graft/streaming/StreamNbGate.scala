@@ -41,9 +41,10 @@ object StreamNbGate {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated admitted documents. */
   def drain(spark: SparkSession, model: DataFrame, consts: DataFrame,
-            inPath: String, outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_tokens long, score_q long") {
-      (b, _) => applyBatch(model, consts, b, "doc_id", "text", outPath)
+            inPath: String, outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(model, consts, b, "doc_id", "text", outPath)
     }
+    spark.read.schema("doc_id long, n_tokens long, score_q long").parquet(outPath)
+  }
 }

@@ -30,15 +30,8 @@ import java.nio.file.{Files, Paths}
   * recent batch is tolerated — at-least-once replays are expected). */
 private[streaming] object KgramStreamCore {
 
-  private val trace = sys.env.contains("GRAFT_TRACE")
-  private[streaming] def timed[A](label: String)(body: => A): A =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[trace] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
+  /** The (doc_id, text) document log every k-gram drain reads. */
+  val docLog: StructType = StructType.fromDDL("doc_id long, text string")
 
   /** Validate the ascending-arrival contract: the batch's min doc_id
     * must exceed the stored high-water mark (the previous batch's max).
@@ -269,7 +262,7 @@ private[streaming] object KgramStreamCore {
     * join machinery). */
   def probeSeen(state: DocStateStore, sum: KgramSummary,
                 spark: SparkSession): Array[Long] =
-    timed("probeSeen")(state.readBuckets(sum.touched) match {
+    Drain.timed("probeSeen")(state.readBuckets(sum.touched) match {
       case None => Array.emptyLongArray
       case Some(df) =>
         import spark.implicits._
@@ -324,41 +317,12 @@ private[streaming] object KgramStreamCore {
           }
         }
         .toDF("id")
-      timed("commitAppend")(state.commitAppend(freshDf, f"n$batchId%09d", sum.touched))
+      Drain.timed("commitAppend")(state.commitAppend(freshDf, f"n$batchId%09d", sum.touched))
       // destroy once the commit action has consumed it: millions of
       // packed longs per char-granular trigger must not wait on the
       // GC-driven ContextCleaner across a long drain
     } finally bc.destroy()
-    timed("maintain")(state.maintain())
-  }
-
-  /** Drain an ordered document log (doc_id long, text string) file-by-
-    * file through `perBatch`, then read back the accumulated output.
-    *
-    * Per-trigger scheduling discipline (the rank-loop lesson applied to
-    * drains): every frame inside a trigger is TRIGGER-sized, so the
-    * session's shuffle width is pure task-scheduling tax on small
-    * triggers, and AQE's per-stage materialization is a fixed tax per
-    * shuffle with nothing to re-plan (the partition count is derived
-    * from the trigger's own split count). Both are scoped to the
-    * foreachBatch body and restored in `finally`; a cluster-scale
-    * trigger (many input splits) keeps the session width. */
-  def drain(spark: SparkSession, inPath: String, outPath: String,
-            ckptPath: String, outSchema: String)
-           (perBatch: (DataFrame, Long) => Unit): DataFrame = {
-    val schema = new StructType().add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        timed(s"perBatch $id")(TriggerScope.scoped(b)(perBatch(b, id)))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    timed("awaitTermination")(q.awaitTermination())
-    spark.read.schema(outSchema).parquet(outPath)
+    Drain.timed("maintain")(state.maintain())
   }
 }
 
@@ -396,11 +360,11 @@ object StreamNovelty {
                  batchId: Long): Seq[Int] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val sum = KgramStreamCore.timed("summarize")(
+    val sum = Drain.timed("summarize")(
       KgramStreamCore.summarize(batch, idCol, textCol, k, state.buckets))
     KgramStreamCore.checkAscending(outPath, sum.range)
     val seen = KgramStreamCore.probeSeen(state, sum, spark)
-    KgramStreamCore.timed("output") {
+    Drain.timed("output") {
       // novel per doc = its fresh winner count, folded driver-side from
       // the summary (the retired relational tag-union aggregation moved
       // trigger-sized frames through a shuffle to compute the same sums)
@@ -432,11 +396,13 @@ object StreamNovelty {
     * (doc_id long, text string) file-by-file, gate every batch through
     * [[applyBatch]], return the accumulated per-doc novelty scores. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 8): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_windows long, n_novel long, novelty double") {
-      (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
+            outPath: String, ckptPath: String, k: Int = 8): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, id) =>
+      applyBatch(state, b, "doc_id", "text", k, outPath, id)
     }
+    spark.read.schema("doc_id long, n_windows long, n_novel long, novelty double")
+      .parquet(outPath)
+  }
 }
 
 /** Streaming DOC-LEVEL exact dedup — [[graft.ops.Dedup.exactGroups]]'
@@ -505,11 +471,12 @@ object StreamExactDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated keep decisions. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, kept boolean") {
-      (b, id) => applyBatch(state, b, "doc_id", "text", outPath, id); ()
+            outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, id) =>
+      applyBatch(state, b, "doc_id", "text", outPath, id)
     }
+    spark.read.schema("doc_id long, kept boolean").parquet(outPath)
+  }
 }
 
 /** Streaming EXACT-SUBSTRING span dedup — [[graft.ops.Dedup.dedupSpans]]
@@ -538,11 +505,11 @@ object StreamSpanDedup {
     // ~a third of this drain's per-trigger wall for pure recomputation
     val hashed = KgramStreamCore.hashedDocs(batch, idCol, textCol, k).persist()
     try {
-      val sum = KgramStreamCore.timed("summarize")(
+      val sum = Drain.timed("summarize")(
         KgramStreamCore.summarizeHashed(hashed, state.buckets))
       KgramStreamCore.checkAscending(outPath, sum.range)
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      KgramStreamCore.timed("output") {
+      Drain.timed("output") {
         // duplicate starts: every occurrence of a previously-seen k-gram,
         // plus every non-winner occurrence within the batch — decided per
         // occurrence in one map-only pass over the cached hashes against
@@ -595,11 +562,13 @@ object StreamSpanDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated cleaned documents. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 8): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_tokens long, n_removed long, clean_text string") {
-      (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
+            outPath: String, ckptPath: String, k: Int = 8): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, id) =>
+      applyBatch(state, b, "doc_id", "text", k, outPath, id)
     }
+    spark.read.schema("doc_id long, n_tokens long, n_removed long, clean_text string")
+      .parquet(outPath)
+  }
 }
 
 /** Streaming CHAR-granular exact-substring span dedup —
@@ -632,11 +601,11 @@ object StreamCharSpanDedup {
         (d, t, if (t == null) null else graft.expr.TextHash.charKgramHashes60(t, k))
       }.persist()
     try {
-      val sum = KgramStreamCore.timed("summarize")(
+      val sum = Drain.timed("summarize")(
         KgramStreamCore.summarizeHashed(hashed, state.buckets))
       KgramStreamCore.checkAscending(outPath, sum.range)
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      KgramStreamCore.timed("output") {
+      Drain.timed("output") {
         val bcHs = spark.sparkContext.broadcast(sum.hs)
         val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
         val bcPos = spark.sparkContext.broadcast(sum.winPos)
@@ -683,11 +652,13 @@ object StreamCharSpanDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated cleaned documents. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 25): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_chars long, n_removed long, clean_text string") {
-      (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
+            outPath: String, ckptPath: String, k: Int = 25): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, id) =>
+      applyBatch(state, b, "doc_id", "text", k, outPath, id)
     }
+    spark.read.schema("doc_id long, n_chars long, n_removed long, clean_text string")
+      .parquet(outPath)
+  }
 }
 
 /** Streaming CHAR-granular benchmark DECONTAMINATION —
@@ -719,11 +690,12 @@ object StreamCharDecontamination {
             outPath: String, ckptPath: String, k: Int = 25,
             maxBenchGrams: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val bg = graft.ops.Dedup.charBenchGrams(benchmark, "text", k, maxBenchGrams)
-    try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_windows long, n_hits long, contaminated boolean") {
-      (b, _) => applyBatch(bg, b, "doc_id", "text", k, outPath)
+    try Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(bg, b, "doc_id", "text", k, outPath)
     }
     finally bg.destroy()
+    spark.read.schema("doc_id long, n_windows long, n_hits long, contaminated boolean")
+      .parquet(outPath)
   }
 }
 
@@ -758,12 +730,12 @@ object StreamContaminationCensus {
             outPath: String, ckptPath: String, k: Int = 25,
             maxPairs: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val idx = graft.ops.Dedup.charBenchGramIndex(benchmark, "bench_id", "text", k, maxPairs)
-    val pairs =
-      try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-        "doc_id long, bench_id long, shared_windows long") {
-        (b, _) => applyBatch(idx, b, "doc_id", "text", k, outPath)
-      }
-      finally idx.destroy()
+    try Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(idx, b, "doc_id", "text", k, outPath)
+    }
+    finally idx.destroy()
+    val pairs = spark.read.schema("doc_id long, bench_id long, shared_windows long")
+      .parquet(outPath)
     graft.ops.Dedup.charCensusOf(
       pairs.groupBy(col("bench_id"), col("doc_id"))
         .agg(max(col("shared_windows")).as("shared_windows")),
@@ -797,10 +769,11 @@ object StreamCharSpanDecontamination {
             outPath: String, ckptPath: String, k: Int = 25,
             maxBenchGrams: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val bg = graft.ops.Dedup.charBenchGrams(benchmark, "text", k, maxBenchGrams)
-    try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_chars long, n_removed long, clean_text string") {
-      (b, _) => applyBatch(bg, b, "doc_id", "text", k, outPath)
+    try Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(bg, b, "doc_id", "text", k, outPath)
     }
     finally bg.destroy()
+    spark.read.schema("doc_id long, n_chars long, n_removed long, clean_text string")
+      .parquet(outPath)
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,13 +18,9 @@ import org.apache.spark.sql.functions._
   * loudly. */
 object StreamPsi {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** Fold one (doc_id, bin) micro-batch into the current-side histogram. */
   def applyBatch(stateDir: String, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
     val b = batch.select(col("doc_id"), col("bin")).cache()
     try {
       val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
@@ -35,33 +29,20 @@ object StreamPsi {
       if (GenManifest.isRedelivery(stateDir, lo, hi,
         "additive histogram counts must not re-fold")) return
       val batchCounts = b.groupBy(col("bin")).agg(count(lit(1)).as("n_cur"))
-      val prior = currentGen(stateDir)
-        .map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
+      val prior = GenManifest.live(spark, stateDir)
       val next = (prior match {
         case Some(p) => p.unionByName(batchCounts)
         case None => batchCounts
       }).groupBy(col("bin")).agg(sum(col("n_cur")).as("n_cur"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(stateDir)
-      graft.core.ParquetOnce.seed(s"gen:$stateDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-      GenManifest.commit(stateDir, gen, lo, hi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(stateDir, g).toFile)
-      }
+      GenManifest.advance(stateDir, batchId, next, lo, hi)
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The drift summary against a reference (doc_id-free) binned frame —
     * the t25 output shape, computed on the standing histogram. */
   def summary(spark: SparkSession, stateDir: String, ref: DataFrame): DataFrame = {
-    val cur = currentGen(stateDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g")
-      case None => throw new IllegalStateException("no PSI state committed yet")
-    }
+    val cur = GenManifest.live(spark, stateDir)
+      .getOrElse(throw new IllegalStateException("no PSI state committed yet"))
     val refCounts = ref.groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
     graft.ops.CorpusStats.psiFromCounts(refCounts, cur)
   }
@@ -71,16 +52,9 @@ object StreamPsi {
             inPath: String, ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("bin", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(stateDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(stateDir, b, id)
+    }
     summary(spark, stateDir, ref)
   }
 }

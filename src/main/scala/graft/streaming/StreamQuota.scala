@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,15 +25,11 @@ import org.apache.spark.sql.functions._
   * size, state I/O ∝ |classes|. */
 object StreamQuota {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** Fold one (doc_id, cls) micro-batch: append admitted rows
     * (doc_id, cls, adm_rk) to `outPath`, advance the counters. */
   def applyBatch(stateDir: String, quotas: Map[String, Long],
                  batch: DataFrame, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
     val b = batch.select(col("doc_id"), col("cls")).cache()
     try {
       val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
@@ -49,8 +43,7 @@ object StreamQuota {
       val w = Window.partitionBy(col("cls")).orderBy(col("doc_id"))
       val ranked = b.withColumn("_rk", row_number().over(w))
 
-      val prior = currentGen(stateDir)
-        .map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
+      val prior = GenManifest.live(spark, stateDir)
       val withPrior = prior match {
         case Some(p) => ranked.join(broadcast(p), Seq("cls"), "left")
           .withColumn("_n0", coalesce(col("n_adm"), lit(0L))).drop("n_adm")
@@ -77,21 +70,10 @@ object StreamQuota {
           case Some(p) => p.unionByName(batchCounts)
           case None => batchCounts
         }).groupBy(col("cls")).agg(sum(col("n_adm")).as("n_adm"))
-        val gen = s"g$batchId"
-        val prevGen = currentGen(stateDir)
-        graft.core.ParquetOnce.seed(s"gen:$stateDir", next.schema)
-        next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-
         // ONE atomic commit point carrying gen + hwm, AFTER the output
         // lands: earlier crashes replay into the idempotent overwrite
         // above, later ones are detected redeliveries and skipped
-        GenManifest.commit(stateDir, gen, lo, hi)
-        prevGen.filter(_ != gen).foreach { g =>
-          def rm(f: java.io.File): Unit = {
-            val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-          }
-          rm(Paths.get(stateDir, g).toFile)
-        }
+        GenManifest.advance(stateDir, batchId, next, lo, hi)
       } finally { admitted.unpersist(blocking = false); () }
     } finally { b.unpersist(blocking = false); () }
   }
@@ -102,17 +84,9 @@ object StreamQuota {
             inPath: String, outPath: String, ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("cls", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(stateDir, quotas, b, outPath, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(stateDir, quotas, b, outPath, id)
+    }
     // drop the batch-tag partition column — consumers see the same
     // (doc_id, cls, adm_rk) shape as before the idempotent-output fix
     spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))

@@ -30,11 +30,14 @@ object StreamRepetitionGate {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated feature rows. */
   def drain(spark: SparkSession, inPath: String, outPath: String,
-            ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
+            ckptPath: String): DataFrame = {
+    Drain.run(spark, inPath, KgramStreamCore.docLog, ckptPath) { (b, _) =>
+      applyBatch(b, "doc_id", "text", outPath)
+    }
+    spark.read.schema(
       "doc_id long, n_lines long, dup_line_ppm long, dup_line_char_ppm long, " +
         "n_paras long, dup_para_ppm long, dup_para_char_ppm long, " +
-        "top2_char_ppm long, n_chars long, dup5_char_ppm long, rep_pass long") {
-      (b, _) => applyBatch(b, "doc_id", "text", outPath)
-    }
+        "top2_char_ppm long, n_chars long, dup5_char_ppm long, rep_pass long")
+      .parquet(outPath)
+  }
 }

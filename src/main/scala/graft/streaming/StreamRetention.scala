@@ -70,16 +70,9 @@ object StreamRetention {
             ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("user_id", "long").add("day", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(state, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(state, b, id)
+    }
     summary(state)
   }
 }

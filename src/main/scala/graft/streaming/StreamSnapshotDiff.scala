@@ -152,17 +152,9 @@ object StreamSnapshotDiff {
             threshold: Double = 0.5): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(baseline, verdicts, b, id, "doc_id", "text", n, threshold)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(baseline, verdicts, b, id, "doc_id", "text", n, threshold)
+    }
     summary(baseline, verdicts)
   }
 }

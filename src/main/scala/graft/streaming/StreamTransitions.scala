@@ -144,16 +144,9 @@ object StreamTransitions {
             inPath: String, ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("user_id", "long").add("event_id", "long").add("event_type", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(lasts, countsDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(lasts, countsDir, b, id)
+    }
     summary(spark, lasts, countsDir)
   }
 }

@@ -157,16 +157,9 @@ object StreamUniqueTokens {
             inPath: String, ckptPath: String): DataFrame = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("source", "string").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(seen, aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, inPath, schema, ckptPath) { (b, id) =>
+      applyBatch(seen, aggDir, b, id)
+    }
     summary(spark, seen, aggDir)
   }
 }

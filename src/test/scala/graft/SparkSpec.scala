@@ -22,6 +22,16 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` with expressions compiled only: no interpreted factory
+    * and no fallback, so generated code that does not compile fails the
+    * test instead of logging an error and running interpreted. Feed such
+    * a test from an RDD (`sparkContext.parallelize(...).toDF`), not a
+    * local relation: the optimizer evaluates projections over local rows
+    * itself and never reaches the generated code. */
+  def codegenOnly(body: => Unit): Unit =
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(body)
+
   /** `body`'s result and the number of Spark jobs it started. */
   def jobsDuring[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -10,50 +10,55 @@ class GraftExtensionsSpec extends SparkSpec {
   test("registered kernels are callable from SQL and match the Scala API") {
     GraftExtensions.register(spark)
     import spark.implicits._
-
-    assert(spark.sql("SELECT long_dot(array(1L,2L,3L), array(4L,5L,6L)) AS d")
-      .head.getLong(0) == 32L)
-
-    assert(spark.sql("SELECT md5_shard('abc', 8) AS s").head.getInt(0) ==
-      graft.sink.Sharding.md5Shard("abc", 8))
-
-    val df = Seq("the quick brown fox jumps over the lazy dog").toDF("t")
+    // every kernel reads a column of an RDD-backed view, so each call runs
+    // compiled (literal-only calls would be constant-folded, interpreted)
+    val df = spark.sparkContext.parallelize(Seq(
+      ("the quick brown fox jumps over the lazy dog", Seq(1L, 2L, 3L), Seq(4L, 5L, 6L),
+        "abc", "my-table", "row-1", 42L, "kitten", "sitting")), 1)
+      .toDF("t", "a", "b", "k", "tbl", "row", "n", "s1", "s2")
     df.createOrReplaceTempView("gx_t")
-    val viaSql = spark.sql(
-      """SELECT simhash(t, 32) AS sh, winnow_hashes(t, 3, 4) AS wh,
-        |       minhash_sig(shingle_hashes60(t, 3), 4) AS mh FROM gx_t""".stripMargin).head
-    val viaScala = df.select(
-      hfunctions.simhash_c(col("t"), 32).as("sh"),
-      hfunctions.winnow_hashes(col("t"), 3, 4).as("wh"),
-      hfunctions.minhash_sig(hfunctions.shingle_hashes60(col("t"), 3), 4).as("mh")).head
-    assert(viaSql == viaScala)
+    codegenOnly {
+      assert(spark.sql("SELECT long_dot(a, b) AS d FROM gx_t").head.getLong(0) == 32L)
 
-    val spans = spark.sql(
-      """SELECT kgram_hashes60(t, 3) AS kh,
-        |       remove_token_spans(t, array(2L), 3) AS rs FROM gx_t""".stripMargin).head
-    val spansScala = df.select(
-      hfunctions.kgram_hashes60(col("t"), 3).as("kh"),
-      hfunctions.remove_token_spans(col("t"), array(lit(2L)), 3).as("rs")).head
-    assert(spans == spansScala)
-    assert(spans.getString(1) == "the jumps over the lazy dog",
-      "window at 2 covers tokens 2-4 (quick brown fox)")
+      assert(spark.sql("SELECT md5_shard(k, 8) AS s FROM gx_t").head.getInt(0) ==
+        graft.sink.Sharding.md5Shard("abc", 8))
 
-    val rt = spark.sql("SELECT unformat_key(format_key('my-table', 'row-1')) AS ks")
-      .head.getSeq[String](0)
-    assert(rt == Seq("my-table", "row-1"))
+      val viaSql = spark.sql(
+        """SELECT simhash(t, 32) AS sh, winnow_hashes(t, 3, 4) AS wh,
+          |       minhash_sig(shingle_hashes60(t, 3), 4) AS mh FROM gx_t""".stripMargin).head
+      val viaScala = df.select(
+        hfunctions.simhash_c(col("t"), 32).as("sh"),
+        hfunctions.winnow_hashes(col("t"), 3, 4).as("wh"),
+        hfunctions.minhash_sig(hfunctions.shingle_hashes60(col("t"), 3), 4).as("mh")).head
+      assert(viaSql == viaScala)
 
-    val codec = spark.sql("SELECT hbase_decode(hbase_encode(42L, 'long'), 'long') AS v")
-      .head.getLong(0)
-    assert(codec == 42L)
+      val spans = spark.sql(
+        """SELECT kgram_hashes60(t, 3) AS kh,
+          |       remove_token_spans(t, array(2L), 3) AS rs FROM gx_t""".stripMargin).head
+      val spansScala = df.select(
+        hfunctions.kgram_hashes60(col("t"), 3).as("kh"),
+        hfunctions.remove_token_spans(col("t"), array(lit(2L)), 3).as("rs")).head
+      assert(spans == spansScala)
+      assert(spans.getString(1) == "the jumps over the lazy dog",
+        "window at 2 covers tokens 2-4 (quick brown fox)")
 
-    // the r12 kernels: banded edit distance + char shingles
-    val lev = spark.sql(
-      "SELECT bounded_levenshtein('kitten', 'sitting', 10) AS d," +
-        " bounded_levenshtein('kitten', 'sitting', 2) AS capped").head
-    assert(lev.getLong(0) == 3L && lev.getLong(1) == -1L)
-    val cs = spark.sql("SELECT char_shingles60(t, 4) AS cs FROM gx_t").head
-    val csScala = df.select(hfunctions.char_shingles60(col("t"), 4).as("cs")).head
-    assert(cs == csScala)
+      val rt = spark.sql("SELECT unformat_key(format_key(tbl, row)) AS ks FROM gx_t")
+        .head.getSeq[String](0)
+      assert(rt == Seq("my-table", "row-1"))
+
+      val codec = spark.sql("SELECT hbase_decode(hbase_encode(n, 'long'), 'long') AS v FROM gx_t")
+        .head.getLong(0)
+      assert(codec == 42L)
+
+      // the r12 kernels: banded edit distance + char shingles
+      val lev = spark.sql(
+        "SELECT bounded_levenshtein(s1, s2, 10) AS d," +
+          " bounded_levenshtein(s1, s2, 2) AS capped FROM gx_t").head
+      assert(lev.getLong(0) == 3L && lev.getLong(1) == -1L)
+      val cs = spark.sql("SELECT char_shingles60(t, 4) AS cs FROM gx_t").head
+      val csScala = df.select(hfunctions.char_shingles60(col("t"), 4).as("cs")).head
+      assert(cs == csScala)
+    }
   }
 
   test("topk_by works as a SQL aggregate with map-side partials") {

@@ -59,10 +59,7 @@ class SolrRouteSpec extends SparkSpec {
 
   test("SolrShard column expression equals the Scala router (codegen path)") {
     import spark.implicits._
-    // an RDD, not a local relation: the optimizer would evaluate a
-    // projection over local rows itself, never reaching doGenCode; and no
-    // fallback, so generated code that does not compile fails the test
-    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false") {
+    codegenOnly {
       val ids = spark.sparkContext.parallelize((1 to 500).map(i =>
         if (i % 3 == 0) s"seg${i % 5}!$i" else s"$i"), 2).toDF("id")
       val got = ids.select(col("id"), hfunctions.solr_shard(col("id"), 8).as("shard"))
@@ -76,9 +73,11 @@ class SolrRouteSpec extends SparkSpec {
 
   test("buildShards router=solrcloud routes every doc to its NRT shard") {
     import spark.implicits._
-    val ops = (1 to 200).map(i => ("add", s"id-$i", i)).toDF("kind", "id", "v")
+    val ops = spark.sparkContext
+      .parallelize((1 to 200).map(i => ("add", s"id-$i", i)), 2).toDF("kind", "id", "v")
     val out = java.nio.file.Files.createTempDirectory("graft_solrshards").toString + "/s"
-    graft.batch.BatchPipeline.buildShards(ops, 8, out, router = "solrcloud")
+    // the write runs the generated routing code
+    codegenOnly(graft.batch.BatchPipeline.buildShards(ops, 8, out, router = "solrcloud"))
     val back = graft.batch.BatchPipeline.readShards(spark, out)
       .select(col("id"), col("shard").cast("int"))
       .collect().map(r => r.getString(0) -> r.getInt(1))

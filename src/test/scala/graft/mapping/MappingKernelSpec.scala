@@ -104,9 +104,7 @@ class MappingKernelSpec extends SparkSpec {
   }
 
   test("compiled kernels ≡ the reference model over random cells and confs") {
-    // no silent fallback to interpreted evaluation: generated code that
-    // does not compile fails the test
-    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false") {
+    codegenOnly {
       cases.foreach { case (conf, rows) => check(conf, rows) }
     }
   }

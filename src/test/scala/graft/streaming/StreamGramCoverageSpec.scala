@@ -67,4 +67,21 @@ class StreamGramCoverageSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("g"))
     assert(gens.length == 1, gens.mkString(","))
   }
+
+  test("a replayed batch id (commit landed, streaming commit log did not) leaves the state unchanged") {
+    val work = Files.createTempDirectory("graft_sgc3").toString
+    val pg = probeGrams
+    // TriggerScope turns AQE off, as in a drain
+    def fold(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      TriggerScope.scoped(b)(
+        StreamGramCoverage.applyBatch(b, "doc_id", "text", 5, pg, s"$work/state", id))
+    def state = StreamGramCoverage.readState(spark, s"$work/state").get
+      .orderBy(col("g")).collect().toSeq
+    fold(corpus.filter(col("doc_id") <= 2), 0L)
+    fold(corpus.filter(col("doc_id") > 2), 1L)
+    val once = state
+    assert(once.nonEmpty)
+    fold(corpus.filter(col("doc_id") > 2), 1L)
+    assert(state === once)
+  }
 }
