@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Structured Streaming runs `foreachBatch` at least once: a driver that
   * dies after `perBatch` returns but before the commit log records the
-  * batch runs the same batch id again on restart. Every `perBatch` must
-  * therefore be idempotent per batch id (the monitors skip a replay by
-  * its high-water mark or fold it idempotently; [[GenManifest.advance]]
-  * never overwrites the generation a replay reads from).
+  * batch runs the same batch id again on restart. A `perBatch` whose
+  * effect must not apply twice has to tolerate that: the monitors skip a
+  * replay by its high-water mark or fold it idempotently, and
+  * [[GenManifest.advance]] never overwrites the generation a replay reads
+  * from.
   *
   * With `GRAFT_TRACE` set in the environment, each micro-batch and the
   * wait for the drain print their wall time. */
