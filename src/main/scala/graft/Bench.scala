@@ -1,30 +1,125 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.{ListenerBusDrain, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The Spark work of one timed rep. Job, stage and task counts and byte
+  * totals do not depend on host load, so they are the regression signal
+  * where a wall clock is too noisy; `driverGapMs` is the part of the
+  * wall in which no job ran (planning, scheduling, driver-side work). */
+final case class RepCounts(jobs: Int, stages: Int, tasks: Long, cpuMs: Long,
+                           inputBytes: Long, shuffleReadBytes: Long,
+                           shuffleWriteBytes: Long, driverGapMs: Long) {
+  def json: String =
+    s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"cpu_ms":$cpuMs,""" +
+      s""""input_b":$inputBytes,"shuffle_read_b":$shuffleReadBytes,""" +
+      s""""shuffle_write_b":$shuffleWriteBytes,"driver_gap_ms":$driverGapMs}"""
+}
+
+/** Counts the Spark work of a block of code: a listener on `sc` that
+  * [[measure]] resets before the block and reads once the listener bus
+  * has delivered every event the block caused. One block at a time. */
+final class RepCounter(sc: SparkContext) extends SparkListener {
+  private val jobSpans = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+  private var stages = 0
+  private var tasks, cpuNs, input, shuffleRead, shuffleWrite = 0L
+  sc.addSparkListener(this)
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+    jobSpans(j.jobId) = (j.time, Long.MaxValue)
+  }
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+    jobSpans.get(j.jobId).foreach { case (start, _) => jobSpans(j.jobId) = (start, j.time) }
+  }
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
+    stages += 1
+    tasks += s.stageInfo.numTasks
+    Option(s.stageInfo.taskMetrics).foreach { m =>
+      cpuNs += m.executorCpuTime
+      input += m.inputMetrics.bytesRead
+      shuffleRead += m.shuffleReadMetrics.totalBytesRead
+      shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+    }
+  }
+
+  /** `body`'s result and the Spark work it did. */
+  def measure[A](body: => A): (A, RepCounts) = {
+    ListenerBusDrain(sc)
+    synchronized {
+      jobSpans.clear(); stages = 0
+      tasks = 0L; cpuNs = 0L; input = 0L; shuffleRead = 0L; shuffleWrite = 0L
+    }
+    val t0 = System.currentTimeMillis()
+    val result = body
+    val t1 = System.currentTimeMillis()
+    ListenerBusDrain(sc)
+    synchronized {
+      // wall minus the union of the job spans, clipped to the wall
+      var covered = 0L
+      var reach = t0
+      jobSpans.values.toSeq.sortBy(_._1).foreach { case (start, end) =>
+        val (s, e) = (math.max(start, reach), math.min(end, t1))
+        if (e > s) { covered += e - s; reach = e }
+      }
+      (result, RepCounts(jobSpans.size, stages, tasks, cpuNs / 1000000L, input,
+        shuffleRead, shuffleWrite, (t1 - t0) - covered))
+    }
+  }
+}
 
 object Bench {
+
+  /** One line of exchange accounting over the planned (not executed)
+    * plan: shuffle exchanges, reuse groups (two or more canonically
+    * equal copies, which AQE materializes once) and near-miss groups (two
+    * or more exchanges with the same child schema but different canonical
+    * forms: the asymmetric-pushdown signature of a shared subtree that
+    * silently materializes twice). */
+  private def exchangeLine(name: String, df: DataFrame): String = {
+    val ex = df.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    val reused = ex.groupBy(_.canonicalized).values.count(_.size >= 2)
+    val nearMiss = ex.groupBy(_.child.schema.map(f => (f.name, f.dataType)).toIndexedSeq)
+      .values.count(g => g.size >= 2 && g.map(_.canonicalized).distinct.size > 1)
+    s"[exchanges] $name exchanges=${ex.size} reuseGroups=$reused nearMissGroups=$nearMiss" +
+      (if (nearMiss > 0) " <-- CHECK" else "")
+  }
+
+  /** Plan mode: per query, the optimized logical plan, the formatted
+    * physical plan, the exchange line and, after one noop run, the final
+    * adaptive plan (runtime stage and exchange reuse only show there). */
+  private def printPlans(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    @volatile var lastPlan = ""
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = lastPlan = qe.executedPlan.toString
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    })
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      println(s"=== $name: optimized logical ===")
+      println(df.queryExecution.optimizedPlan.treeString)
+      println(s"=== $name: physical (formatted) ===")
+      println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      println(exchangeLine(name, df))
+      lastPlan = ""
+      df.write.format("noop").mode("overwrite").save()
+      ListenerBusDrain(spark.sparkContext)
+      println(s"=== $name: physical (final adaptive) ===")
+      println(lastPlan)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // AQE coalesces post-shuffle partitions down to minPartitionSize
-      // (default 1m) — at bench scale a 4-5 MB exchange collapses to 4
-      // tasks even when the stage ABOVE it explodes 4.7 MB -> 81 MB of
-      // pair rows (d12's candidate generate ran on 4 of 32 cores). The
-      // lower floor restores reduce-side parallelism for small-input/
-      // big-output stages; at cluster scale partitions sit far above
-      // either floor, so this is a local-window knob, not a prod tune
-      // (env-overridable for A/B).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
 
     // noop sink: forces full evaluation of every output column — count()
     // would let the optimizer prune projection-only work and under-report
@@ -48,10 +143,14 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       }
 
-    def timed(name: String): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = run(name)
-      ((System.nanoTime() - t0) / 1e9, err)
+    val counter = new RepCounter(spark.sparkContext)
+    def timed(name: String): (Double, Option[String], RepCounts) = {
+      val ((secs, err), counts) = counter.measure {
+        val t0 = System.nanoTime()
+        val err = run(name)
+        ((System.nanoTime() - t0) / 1e9, err)
+      }
+      (secs, err, counts)
     }
 
     // LOAD SENTINEL: a fixed-cost, map-only control (~0.3 s of pure CPU —
@@ -68,7 +167,7 @@ object Bench {
       val t0 = System.nanoTime()
       // pmod keeps the running sum ≤ 2e14 — a raw sum(xxhash64) randomly
       // overflows Long and ANSI mode turns that into a fatal throw
-      try spark.range(0L, 200000000L, 1L, cpus.toInt)
+      try spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) as h")
         .write.format("noop").mode("overwrite").save()
       catch {
@@ -131,6 +230,11 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
+    if (sys.env.get("SPARK_GRAFT_PLAN").contains("1")) {
+      printPlans(spark, sfDir, names)
+      spark.stop()
+      return
+    }
     // one full untimed pass first: JIT/codegen-cache/parquet-footer costs
     // land here, so ~1s run-order noise can't masquerade as a regression
     // on the sub-second shuffle-free queries
@@ -159,6 +263,7 @@ object Bench {
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val spreads = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[RepCounts]]
     val results = names.zipWithIndex.map { case (name, qi) =>
       if (qi > 0 && qi % sentinelEvery == 0) {
         sentinelSamples += sentinelOnce()
@@ -171,6 +276,7 @@ object Bench {
           Seq(first, timed(name), timed(name))
         else Seq(first)
       runs.flatMap(_._2).headOption.foreach(errors.put(name, _))
+      counts.put(name, runs.map(_._3))
       // a failed query must be distinguishable from a fast one: -1 marker
       val secs =
         if (runs.exists(_._2.isDefined)) -1.0
@@ -186,6 +292,8 @@ object Bench {
     val es = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     val sp = spreads.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val cs = counts.map { case (k, v) => s"\"" + k + "\":" + v.map(_.json).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = r3(results.collect { case (_, v) if v >= 0 => v }.sum)
     val sentMaxRatio =
@@ -274,7 +382,7 @@ object Bench {
       .mkString("{", ",", "}")
 
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","ambient":"$ambient","sentinel":$sentJson,"ambient_io":"$ambientIo","sentinel_io":$ioSentJson,"adjudicated":$adjJson,"adjudication_sentinel_ratio":$adjSentinel,"queries":$qs,"errors":$es,"spread":$sp,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","ambient":"$ambient","sentinel":$sentJson,"ambient_io":"$ambientIo","sentinel_io":$ioSentJson,"adjudicated":$adjJson,"adjudication_sentinel_ratio":$adjSentinel,"queries":$qs,"errors":$es,"spread":$sp,"counters":$cs,"sf":"$sfDir"}"""
     // Persist the full per-query artifact on disk (it survives any stdout
     // capture limits) and print it for human logs.
     try java.nio.file.Files.writeString(java.nio.file.Path.of(outPath), line + "\n")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -70,35 +69,21 @@ object ScaleProbe {
     val reportPath = java.nio.file.Path.of(
       sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "SCALE_PROBE.json"))
       .toAbsolutePath
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate() // heap comes from build.sbt's forked -Xmx (16g default)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     generate(spark, sf01, sf1)
 
-    val shuffle = new SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-      }
-    }
-    spark.sparkContext.addSparkListener(shuffle)
-
+    val counter = new RepCounter(spark.sparkContext)
     def measure(body: => Unit): (Double, Long) = {
-      val b0 = shuffle.bytes
-      val t0 = System.nanoTime()
-      body
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      Thread.sleep(200) // let straggler stage-completed events land
-      (secs, shuffle.bytes - b0)
+      val (secs, counts) = counter.measure {
+        val t0 = System.nanoTime()
+        body
+        val secs = (System.nanoTime() - t0) / 1e9
+        spark.sharedState.cacheManager.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        secs
+      }
+      (secs, counts.shuffleWriteBytes)
     }
 
     def once(name: String, dir: String): (Double, Long) = measure {

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // older fixture generations carry INT64 TIMESTAMP(NANOS) — surface as
-      // raw longs; current TIMESTAMP(MICROS) fixtures are normalized by
-      // Fixtures.normalizeEventTs instead (this flag ignores MICROS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // see Bench: reduce-side parallelism floor for small-input/
-      // big-output stages at fixture scale; no-op at cluster scale
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=t11_tfidf_terms,p07_quota_sample → targeted re-check
     // (same contract as Bench); the oracle dump is filtered to match so

@@ -67,14 +67,11 @@ object ParquetOnce {
   }
 
   /** Writer-side pre-seed (unpartitioned writes only — see class doc).
-    * First seed wins; identical by construction when racing a reader's
-    * inference of the same files. */
+    * The writer has just written the files, so its schema replaces any
+    * cached one: a location deleted and rebuilt with a different schema
+    * must not be read through the old one. */
   def seed(key: String, schema: StructType): Unit = {
-    schemas.putIfAbsent(key, asNullable(schema))
+    schemas.put(key, asNullable(schema))
     ()
   }
-
-  /** Drop every cached schema — tests that rewrite one location with a
-    * different shape under a reused key call this between cases. */
-  private[graft] def clear(): Unit = schemas.clear()
 }

@@ -46,7 +46,7 @@ object Dedup {
     * repartition (guide §2.5: `pmod(xxhash64(...), 100·p)` — 100× more
     * distinct key values than partitions spreads evenly). Round-robin
     * `repartition(p)` is NOT used deliberately, for two measured reasons:
-    *  - AQE stage reuse never fires on round-robin exchanges (ReuseProbe:
+    *  - AQE stage reuse never fires on round-robin exchanges (OPTIMIZATION_r20 §7:
     *    an identical repartition(n) feeder consumed twice materializes
     *    twice, 6 jobs; the same feeder hash-keyed materializes once,
     *    5 jobs + ReusedQueryStage) — and the span-dedup family consumes

@@ -74,6 +74,41 @@ object ExtendedQueries {
       in
     })
 
+  /** Write a streaming input log at `path`: `df` filtered by each of
+    * `chunks` in turn, one parquet file per chunk. The file source takes
+    * a log oldest-first by modification time, so each chunk's files get
+    * an explicit mtime one second after the previous chunk's, starting
+    * now (so `maxFileAge` drops none): arrival order does not depend on
+    * the filesystem's mtime granularity. */
+  private[graft] def writeLog(df: DataFrame, path: String, chunks: Column*): Unit = {
+    val dir = java.nio.file.Paths.get(path)
+    def files(): Set[java.nio.file.Path] =
+      if (!java.nio.file.Files.isDirectory(dir)) Set.empty
+      else {
+        val ls = java.nio.file.Files.list(dir)
+        try { import scala.jdk.CollectionConverters._; ls.iterator().asScala.toSet }
+        finally ls.close()
+      }
+    val t0 = System.currentTimeMillis()
+    chunks.zipWithIndex.foreach { case (p, i) =>
+      val before = files()
+      df.filter(p).coalesce(1).write.mode("append").parquet(path)
+      val mtime = java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L)
+      (files() -- before).foreach(java.nio.file.Files.setLastModifiedTime(_, mtime))
+    }
+  }
+
+  /** Three ascending ranges of the long column `c` that split its span
+    * in thirds: chunks for a log whose operator enforces ascending
+    * arrival. */
+  private[graft] def thirds(df: DataFrame, c: String): Seq[Column] = {
+    val b = df.agg(min(col(c)), max(col(c))).first()
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val c1 = lo + (hi - lo) / 3
+    val c2 = lo + 2 * (hi - lo) / 3
+    Seq(col(c) <= c1, col(c) > c1 && col(c) <= c2, col(c) > c2)
+  }
+
   /** FREEZE a derived frame before handing it to a streaming drain: a
     * DataFrame captured in a `foreachBatch` closure (or the static side
     * of a stream-static join) is RE-EXECUTED from its source on every
@@ -649,11 +684,9 @@ object ExtendedQueries {
       val in = onceLog("s19", dir) { path =>
         val ev = eventsSec(s, dir)
           .select(col("user_id"), expr("ts_s div 86400").as("day"))
-        Seq(col("user_id") % 3 === 0, col("user_id") % 3 === 1,
-            col("user_id") % 3 === 2).foreach { p =>
-          ev.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic arrival order
-        }
+        writeLog(ev, path,
+            col("user_id") % 3 === 0, col("user_id") % 3 === 1,
+            col("user_id") % 3 === 2)
       }
       val state = new graft.streaming.TxnLogState(s"$work/state", s, 16)
       graft.streaming.StreamRetention.drain(s, state, in, s"$work/ckpt")
@@ -668,11 +701,9 @@ object ExtendedQueries {
       val in = onceLog("s21", dir) { path =>
         val ev = t(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"))
-        Seq(col("user_id") % 3 === 0, col("user_id") % 3 === 1,
-            col("user_id") % 3 === 2).foreach { p =>
-          ev.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20)
-        }
+        writeLog(ev, path,
+            col("user_id") % 3 === 0, col("user_id") % 3 === 1,
+            col("user_id") % 3 === 2)
       }
       val state = new graft.streaming.TxnLogState(s"$work/state", s, 16)
       graft.streaming.StreamFunnel.drain(s, state, in, s"$work/ckpt")
@@ -691,17 +722,8 @@ object ExtendedQueries {
       val in = onceLog("s20", dir) { path =>
         val ev = t(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"))
-        val b = ev.agg(min(col("event_id")), max(col("event_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
         // ascending event_id chunks — the ordering contract the operator enforces
-        Seq(col("event_id") <= c1,
-            col("event_id") > c1 && col("event_id") <= c2,
-            col("event_id") > c2).foreach { p =>
-          ev.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(ev, path, thirds(ev, "event_id"): _*)
       }
       val lasts = new graft.streaming.TxnLogState(s"$work/lasts", s, 16)
       graft.streaming.StreamTransitions
@@ -725,16 +747,7 @@ object ExtendedQueries {
               .as("source"),
             concat(lit(" "), col("text"), lit("  ")).as("text"))
         val all = d.unionByName(mirrored)
-        val b = all.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          all.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(all, path, thirds(all, "doc_id"): _*)
       }
       val seen = new graft.streaming.TxnLogState(s"$work/seen", s, 16)
       graft.streaming.StreamUniqueTokens.drain(s, seen, s"$work/agg", in, s"$work/ckpt")
@@ -751,16 +764,7 @@ object ExtendedQueries {
       val in = onceLog("s35", dir) { path =>
         val d = t(s, dir, "documents")
           .select(col("doc_id"), col("source").as("grp"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val state = new graft.streaming.TxnLogState(s"$work/vocab", s, 16)
       graft.streaming.StreamVocab.drain(s, state, in, s"$work/ckpt")
@@ -775,16 +779,7 @@ object ExtendedQueries {
       val work = scratchDir("graft_s34")
       val in = onceLog("s34", dir) { path =>
         val ev = eventsSec(s, dir).select(col("event_id"), col("event_type"), col("ts_s"))
-        val b = ev.agg(min(col("event_id")), max(col("event_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("event_id") <= c1,
-            col("event_id") > c1 && col("event_id") <= c2,
-            col("event_id") > c2).foreach { p =>
-          ev.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(ev, path, thirds(ev, "event_id"): _*)
       }
       graft.streaming.StreamBurst.drain(s, s"$work/agg", in, s"$work/ckpt")
         .orderBy(col("event_type"), col("bucket"))
@@ -802,17 +797,8 @@ object ExtendedQueries {
       val in = onceLog("s32", dir) { path =>
         val ev = t(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-        val b = ev.agg(min(col("event_id")), max(col("event_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
         // ascending event_id chunks — the ordering contract the operator enforces
-        Seq(col("event_id") <= c1,
-            col("event_id") > c1 && col("event_id") <= c2,
-            col("event_id") > c2).foreach { p =>
-          ev.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(ev, path, thirds(ev, "event_id"): _*)
       }
       val touches = new graft.streaming.TxnLogState(s"$work/touches", s, 16)
       graft.streaming.StreamAttribution
@@ -840,11 +826,9 @@ object ExtendedQueries {
         val v2 = recrawl.unionByName(
           v1.filter(col("doc_id") % 11 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"), col("text")))
-        Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
-            col("doc_id") % 3 === 2).foreach { p =>
-          v2.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic chunking
-        }
+        writeLog(v2, path,
+            col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
+            col("doc_id") % 3 === 2)
       }
       val baseline = new graft.streaming.TxnLogState(s"$work/base", s, 16)
       val verdicts = new graft.streaming.TxnLogState(s"$work/verd", s, 16)
@@ -864,11 +848,9 @@ object ExtendedQueries {
       val corpus = Similarity.prep(t(s, dir, "embeddings"), "vec_id", "embedding")
       val cents = Similarity.trainCentroids(corpus, 8, 2)
       val in = onceLog("s24", dir) { path =>
-        Seq(col("vec_id") % 3 === 0, col("vec_id") % 3 === 1,
-            col("vec_id") % 3 === 2).foreach { p =>
-          corpus.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20)
-        }
+        writeLog(corpus, path,
+            col("vec_id") % 3 === 0, col("vec_id") % 3 === 1,
+            col("vec_id") % 3 === 2)
       }
       graft.streaming.StreamDrift.drain(s, cents, in, s"$work/reports", s"$work/ckpt")
     }),
@@ -1439,16 +1421,7 @@ object ExtendedQueries {
       val work = scratchDir("graft_s16")
       val in = onceLog("s16", dir) { path =>
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val d = t(s, dir, "documents")
       val (n, tt) = graft.ops.Search.corpusTokenStats(d, "text")
@@ -1566,16 +1539,7 @@ object ExtendedQueries {
         val succ = d.select((col("doc_id") - 1).as("doc_id"), col("text").as("next_text"))
         val synth = d.join(succ, Seq("doc_id"))
           .select(col("doc_id"), concat_ws(" ", col("text"), col("next_text")).as("text"))
-        val b = synth.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          synth.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(synth, path, thirds(synth, "doc_id"): _*)
       }
       val state = new graft.streaming.TxnLogState(s"$work/seen", s, 16,
         autoCompactEvery = 2, maintenanceGraceMs = 0L)
@@ -1918,16 +1882,7 @@ object ExtendedQueries {
         .map(r => r.getLong(0).toString -> r.getLong(1)).toMap
       val in = onceLog("s31", dir) { path =>
         val d = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-        val b = d.agg(min(col("vec_id")), max(col("vec_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("vec_id") <= c1,
-            col("vec_id") > c1 && col("vec_id") <= c2,
-            col("vec_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "vec_id"): _*)
       }
       graft.streaming.StreamClusterQuota.drain(s, in, cents, quotas,
           s"$work/state", s"$work/out", s"$work/ckpt")
@@ -1949,16 +1904,7 @@ object ExtendedQueries {
         val cur = binned(d.filter(col("doc_id") % 2 === 1)
             .withColumn("text", concat_ws(" ", col("text"), col("text"))))
           .select(col("doc_id"), col("bin"))
-        val b = cur.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          cur.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(cur, path, thirds(cur, "doc_id"): _*)
       }
       graft.streaming.StreamPsi.drain(s, s"$work/state", ref, in, s"$work/ckpt")
         .orderBy(col("bin"))
@@ -1977,11 +1923,9 @@ object ExtendedQueries {
         .withColumn("text", when(col("doc_id") % 34 === 0, col("text"))
           .otherwise(translate(col("text"), "e", "3")))
       val in = onceLog("s30", dir) { path =>
-        Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
-            col("doc_id") % 3 === 2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic arrival order
-        }
+        writeLog(d, path,
+            col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
+            col("doc_id") % 3 === 2)
       }
       graft.streaming.StreamGramCoverage.drain(s, in, s"$work/state",
           s"$work/ckpt", bench, "doc_id", "text", n = 5)
@@ -2059,16 +2003,7 @@ object ExtendedQueries {
       val work = scratchDir("graft_s40")
       val in = onceLog("s40", dir) { path =>
         val pages = repetitionPages(t(s, dir, "documents"))
-        val b = pages.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          pages.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(pages, path, thirds(pages, "doc_id"): _*)
       }
       graft.streaming.StreamRepetitionGate
         .drain(s, in, s"$work/out", s"$work/ckpt")

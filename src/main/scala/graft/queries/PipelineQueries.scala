@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ops.{BpeTrainer, CorpusStats, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.queries.ExtendedQueries.{thirds, writeLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -849,16 +850,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s28")
       val in = graft.queries.ExtendedQueries.onceLog("s28", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("lang").as("cls"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       graft.streaming.StreamQuota.drain(s, s"$work/state",
           Map("en" -> 60L, "de" -> 25L, "fr" -> 20L, "es" -> 25L, "zh" -> 30L),
@@ -873,16 +865,7 @@ object PipelineQueries {
         val noisy = d.select((col("doc_id") + 100000).as("doc_id"),
           concat(lit("  "), col("text"), lit("   ")).as("text"))
         val all = d.unionByName(noisy)
-        val b = all.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          all.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(all, path, thirds(all, "doc_id"): _*)
       }
       val state = new graft.streaming.TxnLogState(s"$work/seen", s, 16,
         autoCompactEvery = 2, maintenanceGraceMs = 0L)
@@ -901,16 +884,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s14")
       val in = graft.queries.ExtendedQueries.onceLog("s14", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val d = docs(s, dir)
       val seed = d.filter(col("source") === "src0" || col("doc_id") % 3 === 0)
@@ -936,16 +910,7 @@ object PipelineQueries {
       val in = graft.queries.ExtendedQueries.onceLog("s33", dir) { path =>
         val labeled = d.join(seed, Seq("doc_id"))
           .select(col("doc_id"), col("text"), col("lab"))
-        val b = labeled.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          labeled.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(labeled, path, thirds(labeled, "doc_id"): _*)
       }
       val (model, consts) = graft.ops.CorpusStats.nbTrain(d, "doc_id", "text", seed)
       graft.streaming.StreamCalibration.drain(s,
@@ -964,16 +929,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s15")
       val in = graft.queries.ExtendedQueries.onceLog("s15", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val d = docs(s, dir)
       val (model, consts) = graft.ops.CorpusStats.dsirTrain(
@@ -996,16 +952,7 @@ object PipelineQueries {
         val succ = d.select((col("doc_id") - 1).as("doc_id"), col("text").as("next_text"))
         val synth = d.join(succ, Seq("doc_id"))
           .select(col("doc_id"), concat_ws(" ", col("text"), col("next_text")).as("text"))
-        val b = synth.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          synth.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(synth, path, thirds(synth, "doc_id"): _*)
       }
       val state = new graft.streaming.TxnLogState(s"$work/seen", s, 16,
         autoCompactEvery = 2, maintenanceGraceMs = 0L)
@@ -1026,16 +973,7 @@ object PipelineQueries {
         val succ = d.select((col("doc_id") - 1).as("doc_id"), col("text").as("next_text"))
         val synth = d.join(succ, Seq("doc_id"))
           .select(col("doc_id"), concat_ws(" ", col("text"), col("next_text")).as("text"))
-        val b = synth.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          synth.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(synth, path, thirds(synth, "doc_id"): _*)
       }
       val state = new graft.streaming.TxnLogState(s"$work/seen", s, 16,
         autoCompactEvery = 2, maintenanceGraceMs = 0L)
@@ -1098,16 +1036,7 @@ object PipelineQueries {
       // two drains the other's log depending on run order
       val in = graft.queries.ExtendedQueries.onceLog("s40c", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val bench = docs(s, dir).filter(col("doc_id") % 37 === 0)
         .select(substring(col("text"), 40, 120).as("text"))
@@ -1136,16 +1065,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s42")
       val in = graft.queries.ExtendedQueries.onceLog("s42", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val bench = docs(s, dir).filter(col("doc_id") % 37 === 0)
         .select(substring(col("text"), 40, 120).as("text"))
@@ -1164,16 +1084,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s41")
       val in = graft.queries.ExtendedQueries.onceLog("s41", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       val bench = docs(s, dir).filter(col("doc_id") % 37 === 0)
         .select(col("doc_id").as("bench_id"),
@@ -1571,16 +1482,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s17")
       val in = graft.queries.ExtendedQueries.onceLog("s17", dir) { path =>
         val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
-        val b = d.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          d.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → deterministic oldest-first arrival
-        }
+        writeLog(d, path, thirds(d, "doc_id"): _*)
       }
       graft.streaming.StreamKmv.drain(s, in, s"$work/state", s"$work/ckpt",
           groupCol = "source", k = 32)
@@ -1918,16 +1820,7 @@ object PipelineQueries {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s36")
       val in = graft.queries.ExtendedQueries.onceLog("s36", dir) { path =>
         val media = solidPngMedia(s, dir)
-        val b = media.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          media.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(media, path, thirds(media, "doc_id"): _*)
       }
       graft.streaming.StreamAspect.drain(s, s"$work/agg", in, s"$work/ckpt")
         .orderBy(col("bucket_w"), col("bucket_h"))
@@ -1941,16 +1834,7 @@ object PipelineQueries {
         val media = patternPngMedia(s, dir).unionByName(
           solidPngMedia(s, dir)
             .select((col("doc_id") + 500000L).as("doc_id"), col("mime"), col("payload")))
-        val b = media.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          media.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(media, path, thirds(media, "doc_id"): _*)
       }
       graft.streaming.StreamBlankGate.drain(s, in, s"$work/out", s"$work/ckpt")
         .orderBy(col("doc_id"))
@@ -1980,16 +1864,7 @@ object PipelineQueries {
             .otherwise(lit("image/png")).as("mime"),
           when(col("doc_id") % 9 === 0, expr("substring(payload, 1, 8)"))
             .otherwise(col("payload")).as("payload"))
-        val b = media.agg(min(col("doc_id")), max(col("doc_id"))).first()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        Seq(col("doc_id") <= c1,
-            col("doc_id") > c1 && col("doc_id") <= c2,
-            col("doc_id") > c2).foreach { p =>
-          media.filter(p).coalesce(1).write.mode("append").parquet(path)
-          Thread.sleep(20) // distinct mtimes → oldest-first arrival
-        }
+        writeLog(media, path, thirds(media, "doc_id"): _*)
       }
       graft.streaming.StreamDecodeHealth.drain(s, s"$work/agg", in, s"$work/ckpt")
         .orderBy(col("mime"))
@@ -2178,11 +2053,9 @@ object PipelineQueries {
       // scan, not a clip-set decode + fingerprint pass
       val clips = graft.queries.ExtendedQueries.freeze(
         Multimodal.clipPrints(clipsSrc, windowSamples = 4, k = 4), s"$work/clips")
-      Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
-          col("doc_id") % 3 === 2).foreach { p =>
-        tracks.filter(p).coalesce(1).write.mode("append").parquet(s"$work/log")
-        Thread.sleep(20)
-      }
+      writeLog(tracks, s"$work/log",
+          col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
+          col("doc_id") % 3 === 2)
       val outDir = s"$work/out"
       graft.streaming.Drain.run(s, s"$work/log", tracks.schema, s"$work/ckpt") { (b, _) =>
         Multimodal.clipMatchesPrepared(b, clips, windowSamples = 4, k = 4)
@@ -2211,11 +2084,9 @@ object PipelineQueries {
       // inverted gram index built ONCE (collect + broadcast) — the
       // per-trigger work is then a map-only probe of the arriving chunk
       val benchIdx = Dedup.editBenchIndex(bench)
-      Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
-          col("doc_id") % 3 === 2).foreach { p =>
-        d.filter(p).coalesce(1).write.mode("append").parquet(s"$work/log")
-        Thread.sleep(20)
-      }
+      writeLog(d, s"$work/log",
+          col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
+          col("doc_id") % 3 === 2)
       val outDir = s"$work/out"
       graft.streaming.Drain.run(s, s"$work/log", d.schema, s"$work/ckpt") { (b, _) =>
         Dedup.editContaminationIndexed(b, benchIdx, "doc_id", "text",
@@ -2234,11 +2105,10 @@ object PipelineQueries {
     "s25_stream_media_gate" -> ((s, dir) => {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_s25")
       val media = tweakedPngMedia(s, dir)
-      Seq(col("doc_id") < 100, col("doc_id") >= 100 && col("doc_id") < 200,
-          col("doc_id") >= 200).foreach { p =>
-        media.filter(p).coalesce(1).write.mode("append").parquet(s"$work/log")
-        Thread.sleep(20) // ascending-id chunks — the enforced contract
-      }
+      // ascending-id chunks — the enforced contract
+      writeLog(media, s"$work/log",
+          col("doc_id") < 100, col("doc_id") >= 100 && col("doc_id") < 200,
+          col("doc_id") >= 200)
       val state = new graft.streaming.TxnLogState(s"$work/state", s, 16)
       graft.streaming.StreamMediaGate
         .drain(s, state, s"$work/log", s"$work/out", s"$work/ckpt", maxHamming = 3)

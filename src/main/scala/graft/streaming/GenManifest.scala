@@ -12,27 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one constant-size state frame as immutable `g<batchId>` generation
   * directories. [[advance]] is their one commit and [[live]] their one
   * reader. The dual-state monitors keep the pointer in their store's
-  * metadata instead ([[GenMeta]]) and read this manifest only as the
-  * pre-fuse layout.
+  * metadata instead ([[GenMeta]]).
   *
   * One `_current` file holds `gen\tlo\thi`, written via temp +
   * ATOMIC_MOVE, so the state advance and the redelivery detector are a
-  * SINGLE commit point. The previous layout (a `_current` pointer flip
-  * followed by a separate `_hwm` write) had a crash window between the
-  * two files: on replay the hwm check would not skip the batch (hwm
-  * stale) but the rollup generation had already folded it — the batch's
-  * additive counts were double-counted. With the fused manifest a crash
-  * anywhere before the move replays the batch against the OLD generation
-  * (correct: the fold is deterministic and the new generation directory
-  * is simply rewritten), and a crash after the move is detected as a
-  * bit-exact redelivery by its (lo, hi) range and skipped. The
-  * idempotent folds ([[StreamKmv]], [[StreamGramCoverage]]) commit the
+  * SINGLE commit point: a crash anywhere before the move replays the
+  * batch against the OLD generation (correct: the fold is deterministic
+  * and the new generation directory is simply rewritten), and a crash
+  * after the move is detected as a bit-exact redelivery by its (lo, hi)
+  * range and skipped. The idempotent folds ([[StreamKmv]], [[StreamGramCoverage]]) commit the
   * `Long.MinValue` sentinel range and do not skip a replay; they fold it
   * again into a fresh generation (see [[advance]]).
-  *
-  * Reads stay compatible with the pre-fuse layout (gen-only `_current`
-  * plus sibling `_hwm`) so a long-running monitor restarted across the
-  * upgrade keeps its redelivery guard.
   */
 object GenManifest {
 
@@ -42,12 +32,6 @@ object GenManifest {
     if (!Files.exists(cur)) None
     else Files.readString(cur).trim.split("\t") match {
       case Array(g, lo, hi) => Some((g, lo.toLong, hi.toLong))
-      case Array(g) => // pre-fuse layout: gen-only pointer, hwm sibling
-        val hwm = Paths.get(dir, "_hwm")
-        if (Files.exists(hwm)) {
-          val Array(lo, hi) = Files.readString(hwm).trim.split("\t").map(_.toLong)
-          Some((g, lo, hi))
-        } else Some((g, Long.MinValue, Long.MinValue))
       case other => throw new IllegalStateException(
         s"unparseable generation manifest in $dir: '${other.mkString("\\t")}'")
     }
@@ -71,13 +55,9 @@ object GenManifest {
     }
 
   /** THE commit point: generation pointer and hwm land in one atomic
-    * move; drops a leftover pre-fuse `_hwm` sibling so stale state can
-    * never shadow the manifest. */
-  def commit(dir: String, gen: String, lo: Long, hi: Long): Unit = {
+    * move. */
+  def commit(dir: String, gen: String, lo: Long, hi: Long): Unit =
     IndexState.atomicWriteString(Paths.get(dir, "_current"), s"$gen\t$lo\t$hi")
-    Files.deleteIfExists(Paths.get(dir, "_hwm"))
-    ()
-  }
 
   /** The live generation as a frame, None before the first commit. The
     * schema is the one [[advance]] wrote, so the read runs no footer
@@ -133,43 +113,17 @@ object GenManifest {
   * ordering of filesystem writes can tear them apart. */
 object GenMeta {
 
-  /** Pre-fuse filesystem hwm under `dir`: either inside a `_current`
-    * manifest (gen-only or fused — [[GenManifest.read]] handles both)
-    * or a bare `_hwm` file with no gen pointer (the old
-    * [[StreamVocab]] layout, tab-separated `lo\thi`). */
-  private def legacyHwm(dir: String): Option[(Long, Long)] =
-    GenManifest.read(dir)
-      .map { case (_, lo, hi) => (lo, hi) }
-      .filter(_._1 != Long.MinValue)
-      .orElse {
-        val hwm = Paths.get(dir, "_hwm")
-        if (!Files.exists(hwm)) None
-        else {
-          val Array(lo, hi) = Files.readString(hwm).trim.split("\t").map(_.toLong)
-          Some((lo, hi))
-        }
-      }
-
-  /** The live rollup generation for namespace `ns`, None when empty.
-    * Falls back to the pre-fuse filesystem pointer under `legacyDir`
-    * when the store carries no meta yet — a long-running monitor
-    * restarted across the upgrade keeps its rollup instead of silently
-    * restarting the additive totals from zero (the same back-compat
-    * [[GenManifest.read]] keeps for the single-state monitors). */
-  def currentGen(store: DocStateStore, ns: String, legacyDir: String): Option[String] =
-    store.stateMeta(s"$ns.gen").orElse(GenManifest.currentGen(legacyDir))
+  /** The live rollup generation for namespace `ns`, None when empty. */
+  def currentGen(store: DocStateStore, ns: String): Option[String] =
+    store.stateMeta(s"$ns.gen")
 
   /** Ascending-arrival check against the store-resident hwm: true = the
     * batch is a bit-exact redelivery of the newest committed one (skip
-    * it); throws on any other overlap; false = fresh batch. When the
-    * store carries no meta yet, the pre-fuse filesystem hwm under
-    * `legacyDir` is consulted so an upgrade never drops the redelivery
-    * guard while per-key state is retained. */
-  def isRedelivery(store: DocStateStore, ns: String, legacyDir: String,
+    * it); throws on any other overlap; false = fresh batch. */
+  def isRedelivery(store: DocStateStore, ns: String,
                    lo: Long, hi: Long, contract: String): Boolean = {
     val hwm = store.stateMeta(s"$ns.hwm")
       .map { h => val Array(pl, ph) = h.split(",").map(_.toLong); (pl, ph) }
-      .orElse(legacyHwm(legacyDir))
     hwm match {
       case Some((pl, ph)) =>
         if (lo == pl && hi == ph) true
@@ -195,10 +149,7 @@ object GenMeta {
     * older than `graceMs`. A concurrent [[GenMeta.currentGen]] reader
     * that resolved the old pointer but has not yet materialized its
     * lazy parquet scan therefore never hits FileNotFoundException
-    * mid-read — the same discipline as the store vacuum paths. Once
-    * the store meta owns the pointer, any pre-fuse `_current`/`_hwm`
-    * siblings are dropped so stale filesystem state can never shadow
-    * the fused manifest.
+    * mid-read — the same discipline as the store vacuum paths.
     *
     * Retention is bounded by COUNT as well as age: only the
     * `graceKeep` most-recently-superseded generations get the FULL
@@ -238,8 +189,6 @@ object GenMeta {
                                       graceKeep: Int, graceFloorMs: Long): Unit = {
     val root = Paths.get(aggDir)
     if (!Files.exists(root)) return
-    Files.deleteIfExists(root.resolve("_current"))
-    Files.deleteIfExists(root.resolve("_hwm"))
     val fs = Files.list(root)
     val superseded =
       try {

@@ -86,7 +86,7 @@ object StreamAttribution {
           "of the ascending-arrival contract; null events cannot be placed")
       val lo = census.map(_.getAs[Long]("lo")).min
       val hi = census.map(_.getAs[Long]("hi")).max
-      if (GenMeta.isRedelivery(touches, Ns, aggDir, lo, hi,
+      if (GenMeta.isRedelivery(touches, Ns, lo, hi,
         "additive attribution equals the batch operator only under " +
           "ascending event_id arrival")) return // already folded: skip
       val writeBuckets = census.filter(_.getAs[Boolean]("wr"))
@@ -110,7 +110,7 @@ object StreamAttribution {
 
       // job 2 — fold the rollup generation (≤ touch-types rows)
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(touches, Ns, aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.currentGen(touches, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("touch"))
         .agg(sum(col("n_purchases")).as("n_purchases"),
@@ -154,7 +154,7 @@ object StreamAttribution {
 
   /** The standing rollup — q24's output shape. */
   def summary(spark: SparkSession, touches: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(touches, Ns, aggDir) match {
+    GenMeta.currentGen(touches, Ns) match {
       case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
         .select(col("touch"), col("n_purchases"),
           col("revenue").cast("double").as("revenue"))

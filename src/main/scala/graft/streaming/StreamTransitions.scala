@@ -72,7 +72,7 @@ object StreamTransitions {
           "cannot be placed")
       val lo = census.map(_.getAs[Long]("lo")).min
       val hi = census.map(_.getAs[Long]("hi")).max
-      if (GenMeta.isRedelivery(lasts, Ns, countsDir, lo, hi,
+      if (GenMeta.isRedelivery(lasts, Ns, lo, hi,
         "additive edge counts equal the batch operator only under " +
           "ascending event_id arrival")) return // already folded: skip
 
@@ -101,7 +101,7 @@ object StreamTransitions {
       // fold the counts generation (≤ types² rows, constant in stream length)
       val parts = Seq(Some(inner),
         if (boundary.columns.nonEmpty) Some(boundary) else None,
-        GenMeta.currentGen(lasts, Ns, countsDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g"))).flatten
+        GenMeta.currentGen(lasts, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g"))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("from_type"), col("to_type")).agg(sum(col("n")).as("n"))
       val gen = s"g$batchId"
@@ -133,7 +133,7 @@ object StreamTransitions {
 
   /** The standing edge matrix — q22's output shape. */
   def summary(spark: SparkSession, lasts: DocStateStore, countsDir: String): DataFrame =
-    GenMeta.currentGen(lasts, Ns, countsDir) match {
+    GenMeta.currentGen(lasts, Ns) match {
       case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g")
         .select(col("from_type"), col("to_type"), col("n"))
       case None => throw new IllegalStateException("no transition state committed yet")

@@ -70,7 +70,7 @@ object StreamUniqueTokens {
           "ordering key of the ascending-arrival contract; null docs " +
           "cannot be placed")
       val (lo, hi) = (rm("lo").asInstanceOf[Long], rm("hi").asInstanceOf[Long])
-      if (GenMeta.isRedelivery(seen, Ns, aggDir, lo, hi,
+      if (GenMeta.isRedelivery(seen, Ns, lo, hi,
         "first-copy credit equals the batch min-doc_id rule only under " +
           "ascending doc_id arrival")) return // already folded: skip
       val freshObs = org.apache.spark.sql.Observation()
@@ -89,7 +89,7 @@ object StreamUniqueTokens {
           coalesce(col("raw_tokens"), lit(0L)).as("raw_tokens"),
           coalesce(col("unique_tokens"), lit(0L)).as("unique_tokens"))
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(seen, Ns, aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.currentGen(seen, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("source"))
         .agg(sum(col("raw_tokens")).as("raw_tokens"),
@@ -143,7 +143,7 @@ object StreamUniqueTokens {
 
   /** The standing accounting — (source, raw, unique, stale_ppm). */
   def summary(spark: SparkSession, seen: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(seen, Ns, aggDir) match {
+    GenMeta.currentGen(seen, Ns) match {
       case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
         .withColumn("stale_ppm", expr(
           "CASE WHEN raw_tokens = 0 THEN 0L " +

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +66,7 @@ object StreamVocab {
         }
       if (loN == null) return // empty batch: nothing arrived
       val (lo, hi) = (loN.asInstanceOf[Long], hiN.asInstanceOf[Long])
-      if (GenMeta.isRedelivery(state, Ns, state.stateDir, lo, hi,
+      if (GenMeta.isRedelivery(state, Ns, lo, hi,
         "additive term counts equal the batch census only under " +
           "ascending doc_id arrival")) return // already folded: skip
       val merged =
@@ -81,17 +79,11 @@ object StreamVocab {
           case None => fresh.select("id", "grp", "term", "m")
         }).groupBy(col("id"), col("grp"), col("term")).agg(sum(col("m")).as("m"))
       // THE commit point: counts delta and hwm in ONE txn entry — the
-      // additive state can never advance without the redelivery detector
-      // (a crash between the old separate hwm write and the commit
-      // double-counted the replay). An all-blank batch still commits a
-      // kv-only entry so the hwm advances.
+      // additive state can never advance without the redelivery
+      // detector. An all-blank batch still commits a kv-only entry so the
+      // hwm advances.
       state.commitWithMeta(merged, f"r$batchId%010d", touched,
         Map(s"$Ns.hwm" -> s"$lo,$hi"))
-      // the store meta now owns the hwm: drop the pre-fuse filesystem
-      // sibling so it can never resurrect an ancient mark if the state
-      // is ever rebuilt in place (mirrors GenMeta.sweep's cleanup)
-      Files.deleteIfExists(Paths.get(state.stateDir, "_hwm"))
-      ()
     } finally { (b :: cached).foreach(_.unpersist(blocking = false)); () }
   }
 

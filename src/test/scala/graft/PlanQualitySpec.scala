@@ -299,7 +299,7 @@ class PlanQualitySpec extends SparkSpec {
     // the two copies canonicalize equal — that single exchange carries
     // the whole feeder, positional kernel included. Two things broke the
     // equality historically: round-robin widening (its exchanges never
-    // canonicalize equal — ReuseProbe) and the optimizer's inferred
+    // canonicalize equal — OPTIMIZATION_r20 §7) and the optimizer's inferred
     // isnotnull(doc_id) pushing below only the probe-side copy (fixed by
     // filtering explicitly before the fork).
     for (name <- Seq("d15_span_dedup", "d30_char_span_dedup")) {

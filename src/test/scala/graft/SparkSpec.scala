@@ -50,15 +50,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

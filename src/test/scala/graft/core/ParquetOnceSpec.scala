@@ -51,4 +51,38 @@ class ParquetOnceSpec extends SparkSpec {
     assert(d1.columns.toSeq == Seq("x"))
     assert(d2.columns.toSeq.sorted == Seq("y", "z"))
   }
+
+  private def deleteTree(p: String): Unit = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .iterator().forEachRemaining(f => { java.nio.file.Files.delete(f); () })
+    finally walk.close()
+  }
+
+  test("a store rebuilt at one path with a new schema reads through the new schema") {
+    import spark.implicits._
+    val dir = tmp("pqonce_d")
+    // a GenManifest.advance directory: first written as (k, v) ...
+    val gen = s"$dir/gen"
+    graft.streaming.GenManifest.advance(gen, 0L, Seq((1L, 10L)).toDF("k", "v"), 0L, 0L)
+    assert(graft.streaming.GenManifest.live(spark, gen).get.columns.toSeq == Seq("k", "v"))
+    // ... then deleted and rebuilt as (k, w)
+    deleteTree(gen)
+    graft.streaming.GenManifest.advance(gen, 0L, Seq((2L, "x")).toDF("k", "w"), 0L, 0L)
+    val g = graft.streaming.GenManifest.live(spark, gen).get
+    assert(g.columns.toSeq == Seq("k", "w"))
+    assert(g.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((2L, "x")))
+
+    // a TxnLogState: the same through its commit and read
+    val st = s"$dir/state"
+    new graft.streaming.TxnLogState(st, spark, 4)
+      .commit(Seq(("a", 1L)).toDF("id", "old"), "r0000000000", Seq(0, 1, 2, 3))
+    deleteTree(st)
+    val fresh = new graft.streaming.TxnLogState(st, spark, 4)
+    fresh.commit(Seq(("b", "y")).toDF("id", "neu"), "r0000000000", Seq(0, 1, 2, 3))
+    val got = fresh.read().get
+    assert(got.columns.contains("neu") && !got.columns.contains("old"), got.columns.mkString(","))
+    assert(got.select("id", "neu").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      == Seq(("b", "y")))
+  }
 }

@@ -8,15 +8,11 @@ import java.nio.file.{Files, Path, Paths}
   * GenMeta rework): (a) a crash between the idempotent output write and
   * the manifest commit replays into an identical overwrite, never
   * duplicates; (b) a crash after the commit is a bit-exact redelivery
-  * detected by the fused (gen, lo, hi) and skipped; (c) the pre-fuse
-  * filesystem layouts (gen-only `_current` + sibling `_hwm`, and the
-  * bare-`_hwm` Vocab shape) stay readable across the upgrade — for the
-  * dual-state monitors too, which must neither lose the redelivery
-  * guard nor reset their rollup while per-key store state is retained;
-  * (d) an empty delta carrying meta kv still claims a txn slot (the
-  * rollup pointers must advance on an all-stale batch); (e) generation
-  * sweep is two-phase with a grace window so a concurrent reader that
-  * resolved the old pointer never loses its files mid-scan. */
+  * detected by the fused (gen, lo, hi) and skipped; (c) an empty delta
+  * carrying meta kv still claims a txn slot (the rollup pointers must
+  * advance on an all-stale batch); (d) generation sweep is two-phase
+  * with a grace window so a concurrent reader that resolved the old
+  * pointer never loses its files mid-scan. */
 class GenManifestSpec extends SparkSpec {
 
   private def copyDir(src: Path, dst: Path): Unit = {
@@ -28,51 +24,15 @@ class GenManifestSpec extends SparkSpec {
     } finally walk.close()
   }
 
-  test("read: fused and pre-fuse manifest layouts") {
+  test("read: fused manifest layout") {
     val d = Files.createTempDirectory("graft_gm").toString
     assert(GenManifest.read(d).isEmpty)
-    // fused: one file, one commit point
+    // one file, one commit point
     GenManifest.commit(d, "g4", 10L, 20L)
     assert(GenManifest.read(d).contains(("g4", 10L, 20L)))
-    // pre-fuse: gen-only pointer + sibling _hwm
-    Files.writeString(Paths.get(d, "_current"), "g2")
-    Files.writeString(Paths.get(d, "_hwm"), "3\t7")
-    assert(GenManifest.read(d).contains(("g2", 3L, 7L)))
-    assert(GenManifest.isRedelivery(d, 3L, 7L, "c"))
-    intercept[IllegalStateException](GenManifest.isRedelivery(d, 5L, 9L, "c"))
-    assert(!GenManifest.isRedelivery(d, 8L, 9L, "c"))
-    // gen-only pointer with no hwm at all: pointer survives, guard open
-    Files.deleteIfExists(Paths.get(d, "_hwm"))
-    assert(GenManifest.currentGen(d).contains("g2"))
-    assert(!GenManifest.isRedelivery(d, 1L, 2L, "c"))
-    // a fused commit drops a leftover pre-fuse _hwm sibling
-    Files.writeString(Paths.get(d, "_hwm"), "1\t1")
-    GenManifest.commit(d, "g5", 8L, 9L)
-    assert(!Files.exists(Paths.get(d, "_hwm")))
-  }
-
-  test("GenMeta: legacy filesystem layouts are honored until the store meta takes over") {
-    val work = Files.createTempDirectory("graft_gm2").toString
-    val st = new TxnLogState(s"$work/st", spark, 4)
-    // pre-fuse aggDir layout: gen pointer + hwm as files
-    val agg = s"$work/agg"; Files.createDirectories(Paths.get(agg))
-    Files.writeString(Paths.get(agg, "_current"), "g0")
-    Files.writeString(Paths.get(agg, "_hwm"), "1\t4")
-    assert(GenMeta.currentGen(st, "ns", agg).contains("g0"))
-    assert(GenMeta.isRedelivery(st, "ns", agg, 1L, 4L, "c"))
-    intercept[IllegalStateException](GenMeta.isRedelivery(st, "ns", agg, 3L, 9L, "c"))
-    assert(!GenMeta.isRedelivery(st, "ns", agg, 5L, 9L, "c"))
-    // the bare-_hwm shape (pre-fuse StreamVocab): no pointer, guard intact
-    val vdir = s"$work/v"; Files.createDirectories(Paths.get(vdir))
-    Files.writeString(Paths.get(vdir, "_hwm"), "2\t6")
-    assert(GenMeta.currentGen(st, "ns", vdir).isEmpty)
-    assert(GenMeta.isRedelivery(st, "ns", vdir, 2L, 6L, "c"))
-    // once the store meta exists it OWNS the answer, files ignored
-    import spark.implicits._
-    st.commitAppendWithMeta(Seq.empty[String].toDF("id"), "r0000000000",
-      Seq.empty, GenMeta.kv("ns", "g9", 7L, 8L))
-    assert(GenMeta.currentGen(st, "ns", agg).contains("g9"))
-    assert(GenMeta.isRedelivery(st, "ns", agg, 7L, 8L, "c"))
+    assert(GenManifest.isRedelivery(d, 10L, 20L, "c"))
+    intercept[IllegalStateException](GenManifest.isRedelivery(d, 15L, 25L, "c"))
+    assert(!GenManifest.isRedelivery(d, 21L, 22L, "c"))
   }
 
   test("empty delta with kv claims a txn slot; without kv it claims nothing") {
@@ -99,52 +59,6 @@ class GenManifestSpec extends SparkSpec {
     assert(slots == 1, "an empty delta with no kv must not claim a slot")
     val st3 = new TxnLogState(s"$work/st", spark, 4)
     assert(st3.stateMeta("m.gen").contains("g1"))
-  }
-
-  test("dual-state upgrade: retained per-key state + legacy manifest continue, not reset") {
-    import spark.implicits._
-    val docs = Seq((1L, "srcA", "a b"), (2L, "srcA", "x y z"),
-      (3L, "srcB", "c d e"), (4L, "srcB", " a  b "),
-      (5L, "srcA", "x y z")).toDF("doc_id", "source", "text")
-    val work = Files.createTempDirectory("graft_gm4").toString
-    val agg = s"$work/agg"; Files.createDirectories(Paths.get(agg))
-    val seen = new TxnLogState(s"$work/seen", spark, 4)
-    // ---- hand-build the PRE-UPGRADE world after trigger 1 (docs 1-2):
-    // per-key seen-set committed WITHOUT meta (the old store shape) ...
-    val ids = docs.filter(col("doc_id") <= 2)
-      .select(graft.ops.TextAnalysis.fingerprint(col("text")).as("id")).distinct()
-    val touched = ids.select(graft.expr.hfunctions.md5_shard(col("id"), seen.buckets).as("bk"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    seen.commitAppend(ids, "r0000000000", touched)
-    // ... plus the rollup generation and the legacy two-file manifest
-    Seq(("srcA", 5L, 5L)).toDF("source", "raw_tokens", "unique_tokens")
-      .write.parquet(s"$agg/g0")
-    Files.writeString(Paths.get(agg, "_current"), "g0")
-    Files.writeString(Paths.get(agg, "_hwm"), "1\t2")
-    // ---- restart on the fused code path:
-    // the legacy rollup is readable through the fallback pointer
-    val s0 = StreamUniqueTokens.summary(spark, seen, agg).collect()
-    assert(s0.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      == Seq(("srcA", 5L, 5L)), s0.mkString(","))
-    // a redelivery of trigger 1 is caught by the LEGACY hwm, not re-folded
-    StreamUniqueTokens.applyBatch(seen, agg, docs.filter(col("doc_id") <= 2), 5L)
-    assert(StreamUniqueTokens.summary(spark, seen, agg).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      == Seq(("srcA", 5L, 5L)))
-    // fresh triggers fold ON TOP of the retained state — totals equal the
-    // never-upgraded run (StreamUniqueTokensSpec's contract numbers)
-    StreamUniqueTokens.applyBatch(seen, agg,
-      docs.filter(col("doc_id") > 2 && col("doc_id") <= 4), 6L)
-    StreamUniqueTokens.applyBatch(seen, agg, docs.filter(col("doc_id") > 4), 7L)
-    val got = StreamUniqueTokens.summary(spark, seen, agg)
-      .orderBy(col("source")).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(got("srcA") == ((8L, 5L, 375000L)), got.toString)
-    assert(got("srcB") == ((5L, 3L, 400000L)), got.toString)
-    // and the store meta has taken over + the legacy files were swept
-    assert(seen.stateMeta("uniqtok.gen").contains("g7"))
-    assert(!Files.exists(Paths.get(agg, "_current")))
-    assert(!Files.exists(Paths.get(agg, "_hwm")))
   }
 
   test("quota: kill between output write and manifest commit replays without duplicates") {
@@ -189,12 +103,10 @@ class GenManifestSpec extends SparkSpec {
     Files.createDirectories(Paths.get(agg, "g0"))
     Files.writeString(Paths.get(agg, "g0", "part-0"), "x")
     Files.createDirectories(Paths.get(agg, "g1"))
-    Files.writeString(Paths.get(agg, "_current"), "g0") // superseded legacy pointer
     // first sweep: stamps, does NOT delete (grace window open)
     GenMeta.sweep(agg, keep = "g1", graceMs = 60 * 60 * 1000L)
     assert(Files.exists(Paths.get(agg, "g0", "part-0")), "grace window must hold")
     assert(Files.exists(Paths.get(agg, "g0", "_doomed")))
-    assert(!Files.exists(Paths.get(agg, "_current")), "legacy pointer dropped")
     // sweep with the window expired: reclaimed
     GenMeta.sweep(agg, keep = "g1", graceMs = 0L)
     assert(!Files.exists(Paths.get(agg, "g0")))
