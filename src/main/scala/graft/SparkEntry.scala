@@ -295,12 +295,8 @@ object SparkEntry {
       val work = graft.queries.ExtendedQueries.scratchDir("graft_x40")
       val events = Fixtures.eventMutations(s, dir)
       val cut = 5000L
-      val batchOps = IndexerCore.rowPath(eventConf)(events.filter(col("seq") < cut))
-        .select(col("kind"), col("id"), col("doc"),
-          col("rowKey").as("rowValue"), lit(null).cast("string").as("familyValue"),
-          lit(null).cast("string").as("queryRow"), lit(null).cast("string").as("queryFamily"))
-      val empty = batchOps.select("id", "doc", "rowValue", "familyValue").limit(0)
-      val backfill = IndexerCore.applyOps(empty, batchOps)
+      val backfill = IndexerCore.applyOps(None, graft.streaming.MutationStream.opsWithSinkMeta(
+        IndexerCore.rowPath(eventConf)(events.filter(col("seq") < cut))))
       val state = new graft.streaming.IndexState(s"$work/run/index", s)
       // touched = every bucket; commit registers only dirs actually written
       state.commit(backfill, "v-bootstrap", 0 until state.buckets)

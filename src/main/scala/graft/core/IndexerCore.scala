@@ -165,32 +165,45 @@ object IndexerCore {
   /** Apply a batch of DocOps to an index state (id-keyed documents),
     * producing the new state — the Spark-native equivalent of the Solr
     * upsert/delete algebra (reference DirectSolrInputDocumentWriter +
-    * SolrUpdateCollector). Both inputs keyed by `id`; ops carry
-    * (kind, id, doc, queryRow, queryFamily); state carries (id, doc,
-    * rowValue, familyValue) where rowValue/familyValue mirror the
-    * reference's injected row-field/column-family-field (the metadata its
-    * deleteByQuery relies on — Indexer.java:389-427).
+    * SolrUpdateCollector): [[upsert]], then [[deleteByQuery]]. Ops carry
+    * (kind, id, doc, rowValue, familyValue, queryRow, queryFamily); the
+    * state carries (id, doc, rowValue, familyValue), where
+    * rowValue/familyValue mirror the reference's injected
+    * row-field/column-family-field (the metadata its deleteByQuery relies
+    * on — Indexer.java:389-427). `None` is an absent state.
     */
-  def applyOps(state: DataFrame, ops: DataFrame): DataFrame = {
+  def applyOps(prev: Option[DataFrame], ops: DataFrame): DataFrame =
+    deleteByQuery(upsert(prev, ops), ops)
+
+  /** [[applyOps]] over a present state. */
+  def applyOps(state: DataFrame, ops: DataFrame): DataFrame = applyOps(Some(state), ops)
+
+  /** The id-keyed half of the algebra. An add and a deleteById both
+    * remove the previous doc of their id, so the new state is
+    * `prev ⋉̸ ids(add, deleteById) ∪ adds` — one anti-join, and an add
+    * beats a same-batch deleteById of its id. Without a previous state
+    * the adds are the result, with no join at all.
+    *
+    * adds is the union receiver: the batch-derived side keeps the merged
+    * plan (and the commit write above it) under the streaming sink's
+    * TriggerScope'd session; the two sides are id-disjoint. */
+  def upsert(prev: Option[DataFrame], ops: DataFrame): DataFrame = {
     val adds = ops.filter(col("kind") === "add")
       .select(col("id"), col("doc"), col("rowValue"), col("familyValue"))
-    val delIds = ops.filter(col("kind") === "deleteById").select(col("id"))
-    val delQueries = ops.filter(col("kind") === "deleteByQuery")
+    prev.fold(adds) { p =>
+      val replaced = ops.filter(col("kind").isin("add", "deleteById")).select(col("id"))
+      adds.unionByName(p.join(replaced, Seq("id"), "left_anti"))
+    }
+  }
+
+  /** deleteByQuery: drop every doc matching a query's row, or row AND
+    * family — same-batch adds included. */
+  def deleteByQuery(docs: DataFrame, ops: DataFrame): DataFrame = {
+    val queries = ops.filter(col("kind") === "deleteByQuery")
       .select(col("queryRow"), col("queryFamily")).distinct()
-
-    // adds is the union receiver: the batch-derived side keeps the whole
-    // merged plan (and the commit write above it) under the streaming
-    // sink's TriggerScope'd session; the union itself is order-free (the
-    // two sides are id-disjoint by the anti-join)
-    val afterIdDeletes = adds
-      .unionByName(state
-        .join(delIds, Seq("id"), "left_anti")
-        .join(adds.select("id"), Seq("id"), "left_anti")) // upsert: new doc wins
-
-    // deleteByQuery: (row) or (row AND family)
-    afterIdDeletes.join(delQueries,
-        afterIdDeletes("rowValue") === delQueries("queryRow") &&
-          (delQueries("queryFamily").isNull || afterIdDeletes("familyValue") === delQueries("queryFamily")),
-        "left_anti")
+    docs.join(queries,
+      docs("rowValue") === queries("queryRow") &&
+        (queries("queryFamily").isNull || docs("familyValue") === queries("queryFamily")),
+      "left_anti")
   }
 }

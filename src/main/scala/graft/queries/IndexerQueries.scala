@@ -44,15 +44,10 @@ object IndexerQueries {
     "x06_apply_ops" -> ((s, dir) => {
       val events = Fixtures.eventMutations(s, dir)
       val cut = 5000L
-      def meta(ops: DataFrame) = ops.select(
-        col("kind"), col("id"), col("doc"),
-        col("rowKey").as("rowValue"), lit(null).cast("string").as("familyValue"),
-        lit(null).cast("string").as("queryRow"), lit(null).cast("string").as("queryFamily"))
-      val ops1 = meta(IndexerCore.rowPath(eventConf)(events.filter(col("seq") < cut)))
-      val ops2 = meta(IndexerCore.rowPath(eventConf)(events.filter(col("seq") >= cut)))
-      val empty = ops1.select("id", "doc", "rowValue", "familyValue").limit(0)
-      val state1 = IndexerCore.applyOps(empty, ops1)
-      val state2 = IndexerCore.applyOps(state1, ops2)
+      def ops(events: DataFrame) =
+        graft.streaming.MutationStream.opsWithSinkMeta(IndexerCore.rowPath(eventConf)(events))
+      val state1 = IndexerCore.applyOps(None, ops(events.filter(col("seq") < cut)))
+      val state2 = IndexerCore.applyOps(state1, ops(events.filter(col("seq") >= cut)))
       state2.select(
           col("id"),
           docField("etype_s").as("etype_s"),

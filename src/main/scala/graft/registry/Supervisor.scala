@@ -193,11 +193,10 @@ class IndexerSupervisor(
       .schema(graft.model.Schemas.mutationEvent)
       .parquet(logDirFor(name))
       .filter(org.apache.spark.sql.functions.col("rowKey") === rowKey)
-    val ops = MutationStream.opsWithSinkMeta(
-      conf, graft.core.IndexerCore.rowPath(conf, None)(events))
+    val ops = MutationStream.opsWithSinkMeta(graft.core.IndexerCore.rowPath(conf, None)(events))
     val n = ops.count()
     val state = new graft.streaming.IndexState(dirs(name)._1, spark)
-    MutationStream.applyBatch(spark, state, ops, System.currentTimeMillis())
+    MutationStream.applyBatch(state, ops, System.currentTimeMillis())
     n
   }
 

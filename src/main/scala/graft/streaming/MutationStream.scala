@@ -140,14 +140,6 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
       ks.flatMap(k => m.get(k).map(d => (d, k))))
   }
 
-  /** Commit: `updated` holds the NEW contents of exactly the `touched`
-    * buckets; untouched buckets keep their current directories. The new
-    * bucket dirs land under one versioned directory via a single
-    * partitioned write; the manifest then repoints touched buckets (a
-    * touched bucket that ends empty is dropped — partitioned writes emit
-    * no dir for it). Retries write to a fresh suffixed dir (never
-    * read-while-overwrite); the CURRENT flip is the commit point either
-    * way, and re-applying a DocOp batch is idempotent by algebra. */
   /** Drop version directories and manifests no longer reachable from
     * CURRENT — the vacuum step of any copy-on-write layout (Delta/Iceberg
     * VACUUM). A version dir survives if ANY live bucket points into it,
@@ -200,6 +192,15 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
     commitWithMeta(updated, version, touched, kv)
   }
 
+  /** Commit: `updated` holds the NEW contents of exactly the `touched`
+    * buckets; untouched buckets keep their current directories. The rows
+    * land in ONE plain parquet dir named after `version`, the bucket id a
+    * data column; the manifest then points every touched bucket that
+    * holds rows at that dir and drops a touched bucket that ends empty
+    * (the write's census saw no row of it). A retry writes a fresh
+    * suffixed dir (never read-while-overwrite); the CURRENT flip is the
+    * commit point either way, and re-applying a DocOp batch is idempotent
+    * by algebra. */
   def commitWithMeta(updated: DataFrame, version: String, touched: Seq[Int],
                      kv: Map[String, String]): Unit = {
     kv.foreach { case (k, v) =>
@@ -429,7 +430,7 @@ object MutationStream {
   /** Document fields the sink needs for deleteByQuery — the reference
     * injects row/family fields into each doc for exactly this reason
     * (SURVEY §7.4 hard-part 2). */
-  private[graft] def opsWithSinkMeta(conf: IndexerConf, ops: DataFrame): DataFrame =
+  private[graft] def opsWithSinkMeta(ops: DataFrame): DataFrame =
     ops.select(
       col("kind"), col("id"), col("doc"),
       col("rowKey").as("rowValue"),
@@ -463,25 +464,23 @@ object MutationStream {
         count(when(col("writeTime") >= lit(subscriptionTs), 1)).as("applicable"))
       .transform(IndexerCore.subscriptionFilter(subscriptionTs))
     Drain.start(events, checkpointDir) { (batch, batchId) =>
-      val ops = opsWithSinkMeta(conf, IndexerCore.rowPath(conf, snapshot)(batch))
-      applyBatch(spark, state, ops, batchId)
+      applyBatch(state, opsWithSinkMeta(IndexerCore.rowPath(conf, snapshot)(batch)), batchId)
     }
   }
 
-  /** One micro-batch upsert against the bucketed state: resolve the ops'
-    * touched buckets (a ≤`buckets`-row driver collect), read ONLY those
-    * buckets' previous state, apply the DocOp algebra, and commit just the
-    * rewritten buckets. deleteByQuery ops address docs by row value, not
-    * id, so they cannot be bucket-localized — any present (the row path
-    * never emits them) widens to a full rewrite. Returns the touched
-    * bucket set. */
-  def applyBatch(spark: SparkSession, state: DocStateStore, ops: DataFrame,
-                 batchId: Long): Seq[Int] = {
+  /** One micro-batch upsert against the bucketed state, in as few Spark
+    * jobs as the batch allows: a census of the ops' touched buckets (one
+    * ≤`buckets`-row driver collect, which also counts deleteByQuery ops),
+    * then the commit write, which reads ONLY the touched buckets'
+    * previous state and applies [[IndexerCore.upsert]] — one id
+    * anti-join, none when those buckets are empty. deleteByQuery ops
+    * address docs by row value, not id, so they cannot be
+    * bucket-localized: only a batch that holds one (the row path never
+    * emits them) widens to a full rewrite and adds the query anti-join.
+    * Returns the touched bucket set. */
+  def applyBatch(state: DocStateStore, ops: DataFrame, batchId: Long): Seq[Int] = {
     val cached = ops.persist()
     try {
-      // ONE ≤buckets-row aggregation answers both "which buckets" and
-      // "any deleteByQuery": per-batch driver jobs are sink overhead that
-      // multiplies by the trigger rate
       val stats = cached
         .groupBy(graft.expr.hfunctions.md5_shard(col("id"), state.buckets).as("b"))
         .agg(count(when(col("kind") === "deleteByQuery", 1)).as("qdel"))
@@ -491,13 +490,8 @@ object MutationStream {
       val touched =
         if (hasQueryDelete) (idBuckets ++ state.liveBuckets).distinct
         else idBuckets
-      val prev = state.readBuckets(touched).getOrElse {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cached.schema)
-        empty.select(col("id"), col("doc"), col("rowValue"), col("familyValue"))
-      }
-      val next = IndexerCore.applyOps(
-        prev.select("id", "doc", "rowValue", "familyValue"), cached)
+      val upserted = IndexerCore.upsert(state.readBuckets(touched), cached)
+      val next = if (hasQueryDelete) IndexerCore.deleteByQuery(upserted, cached) else upserted
       // batchId in the version makes the commit idempotent under retry
       state.commit(next, f"v$batchId%09d", touched)
       // post-commit maintenance on the store's own cadence (TxnLogState

@@ -65,6 +65,29 @@ class PlanQualitySpec extends SparkSpec {
     assert(aggBelowJoin.nonEmpty, "dedup aggregate must be below the lookup join")
   }
 
+  test("CDC commit plan: no join on a fresh state; one LeftAnti join on a live state without query deletes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import spark.implicits._
+    var plans = Vector.empty[LogicalPlan]
+    val st = new graft.streaming.IndexState(
+        java.nio.file.Files.createTempDirectory("graft_plan_state").toString, spark, 8) {
+      override def commit(updated: DataFrame, version: String, touched: Seq[Int]): Unit = {
+        plans :+= updated.queryExecution.optimizedPlan
+        super.commit(updated, version, touched)
+      }
+    }
+    def ops(rows: (String, String)*) = graft.streaming.MutationStream.opsWithSinkMeta(
+      rows.toDF("kind", "id").withColumn("rowKey", col("id"))
+        .withColumn("doc", when(col("kind") === "add", map(lit("v"), array(col("id"))))))
+    graft.streaming.MutationStream.applyBatch(st, ops(("add", "a"), ("deleteById", "b")), 0L)
+    graft.streaming.MutationStream.applyBatch(st, ops(("add", "a"), ("deleteById", "c")), 1L)
+    val Seq(fresh, live) = plans.map(_.collect { case j: Join => j })
+    assert(fresh.isEmpty, plans(0).toString.take(1200))
+    assert(live.map(_.joinType) == Seq(LeftAnti), plans(1).toString.take(1200))
+  }
+
   test("the mapping runs no interpreted lambdas: rowPath and BatchPipeline.run plans hold no LambdaFunction") {
     import graft.conf.{FieldDef, IndexerConf, RowReadMode, ValueSource}
     import org.apache.spark.sql.catalyst.expressions.LambdaFunction

@@ -77,9 +77,9 @@ class RegistrySpec extends SparkSpec {
 
     val snapshot = spark.read.schema(graft.model.Schemas.mutationEvent).parquet(log)
     val batchOps = graft.streaming.MutationStream.opsWithSinkMeta(
-      conf, graft.batch.BatchPipeline.run(conf, snapshot))
+      graft.batch.BatchPipeline.run(conf, snapshot))
     val bState = new graft.streaming.IndexState(tmp("graft_state_eq"), spark)
-    graft.streaming.MutationStream.applyBatch(spark, bState, batchOps, 0L)
+    graft.streaming.MutationStream.applyBatch(bState, batchOps, 0L)
 
     val s = flat(streamed)
     val b = flat(bState.read().get)

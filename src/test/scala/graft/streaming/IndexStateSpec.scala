@@ -26,12 +26,16 @@ class IndexStateSpec extends SparkSpec {
       .withColumn("queryFamily", lit(null).cast("string"))
   }
 
+  /** One deleteByQuery op for the docs whose rowValue is `row`. */
+  private def qdel(row: String): DataFrame =
+    ops(("deleteByQuery", null)).withColumn("queryRow", lit(row))
+
   private def stateIds(st: DocStateStore): Set[String] =
     st.read().map(_.select("id").collect().map(_.getString(0)).toSet).getOrElse(Set.empty)
 
   /** The commit dir's rows must cover exactly the touched buckets — the
     * copy-on-write contract. Layout: one plain parquet dir per commit
-    * with the bucket id as a data column (files bucket-pure). */
+    * with the bucket id as a data column. */
   private def commitDirBuckets(dir: String, version: String): Seq[Int] =
     spark.read.parquet(Paths.get(dir, version).toString)
       .select(IndexState.BucketCol).distinct()
@@ -43,12 +47,12 @@ class IndexStateSpec extends SparkSpec {
 
     // batch 0: ids spread over several buckets
     val ids0 = Seq("a", "b", "c", "d", "e", "f", "g", "h")
-    val touched0 = MutationStream.applyBatch(spark, st, ops(ids0.map(("add", _)): _*), 0L)
+    val touched0 = MutationStream.applyBatch(st, ops(ids0.map(("add", _)): _*), 0L)
     assert(touched0.toSet == ids0.map(Sharding.md5Shard(_, B)).toSet)
     val manifest0 = st.currentManifest
 
     // batch 1: one id → exactly one bucket rewritten
-    val touched1 = MutationStream.applyBatch(spark, st, ops(("add", "a")), 1L)
+    val touched1 = MutationStream.applyBatch(st, ops(("add", "a")), 1L)
     assert(touched1 == Seq(Sharding.md5Shard("a", B)))
     assert(commitDirBuckets(dir, "v000000001") == Seq(Sharding.md5Shard("a", B)),
       "the commit dir must hold only the touched bucket's rows")
@@ -71,8 +75,8 @@ class IndexStateSpec extends SparkSpec {
     val st = new IndexState(dir, spark, B)
     val idB = Iterator.from(0).map("b" + _)
       .find(i => Sharding.md5Shard(i, B) != Sharding.md5Shard("a", B)).get
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", idB)), 0L)
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 1L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", idB)), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 1L)
     val full = st.read().get.select("id").collect().map(_.getString(0)).toSeq
     assert(full.sorted == Seq("a", idB).sorted, s"stale or duplicate rows: $full")
     val both = Seq("a", idB).map(Sharding.md5Shard(_, B))
@@ -81,8 +85,8 @@ class IndexStateSpec extends SparkSpec {
     // same through the txn-log store
     val tdir = Files.createTempDirectory("graft_txn").toString
     val ts = new TxnLogState(tdir, spark, B)
-    MutationStream.applyBatch(spark, ts, ops(("add", "a"), ("add", idB)), 0L)
-    MutationStream.applyBatch(spark, ts, ops(("add", "a")), 1L)
+    MutationStream.applyBatch(ts, ops(("add", "a"), ("add", idB)), 0L)
+    MutationStream.applyBatch(ts, ops(("add", "a")), 1L)
     val tfull = ts.read().get.select("id").collect().map(_.getString(0)).toSeq
     assert(tfull.sorted == Seq("a", idB).sorted, s"stale or duplicate rows: $tfull")
   }
@@ -90,15 +94,15 @@ class IndexStateSpec extends SparkSpec {
   test("re-applying a batch (at-least-once retry) leaves the state unchanged") {
     val dir = Files.createTempDirectory("graft_state").toString
     val st = new IndexState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", "b")), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b")), 0L)
     val b1 = ops(("add", "c"), ("deleteById", "a"))
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b1, 1L)
     val afterFirst = stateIds(st)
     // redelivery of the same batch id: DocOp algebra is idempotent and the
     // retry must not read-while-overwriting its own version dirs
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b1, 1L)
     assert(stateIds(st) == afterFirst && afterFirst == Set("b", "c"))
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b1, 1L)
     assert(stateIds(st) == Set("b", "c"))
   }
 
@@ -108,9 +112,9 @@ class IndexStateSpec extends SparkSpec {
     // two ids in DIFFERENT buckets, so b's bucket stays in v0 throughout
     val idB = Iterator.from(0).map("b" + _)
       .find(i => Sharding.md5Shard(i, B) != Sharding.md5Shard("a", B)).get
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", idB)), 0L)
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 1L) // a's bucket moves to v1
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 2L) // ...and then to v2
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", idB)), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 1L) // a's bucket moves to v1
+    MutationStream.applyBatch(st, ops(("add", "a")), 2L) // ...and then to v2
     val before = stateIds(st)
 
     // within the retention window nothing is reclaimed: a reader that
@@ -132,14 +136,14 @@ class IndexStateSpec extends SparkSpec {
   test("a second writer advancing CURRENT fences the first writer off") {
     val dir = Files.createTempDirectory("graft_state").toString
     val w1 = new IndexState(dir, spark, B)
-    MutationStream.applyBatch(spark, w1, ops(("add", "a")), 0L)
+    MutationStream.applyBatch(w1, ops(("add", "a")), 0L)
     // a second driver opens the same state dir and commits — legal so far
     val w2 = new IndexState(dir, spark, B)
-    MutationStream.applyBatch(spark, w2, ops(("add", "b")), 1L)
+    MutationStream.applyBatch(w2, ops(("add", "b")), 1L)
     // w1's view of CURRENT is now stale: committing would silently drop
     // w2's buckets, so the commit must throw instead
     intercept[java.util.ConcurrentModificationException] {
-      MutationStream.applyBatch(spark, w1, ops(("add", "c")), 2L)
+      MutationStream.applyBatch(w1, ops(("add", "c")), 2L)
     }
     assert(stateIds(w2) == Set("a", "b"), "the fenced commit must change nothing")
   }
@@ -147,32 +151,25 @@ class IndexStateSpec extends SparkSpec {
   test("a held LOCK file makes a committer fail loudly, and release unblocks it") {
     val dir = Files.createTempDirectory("graft_state").toString
     val st = new IndexState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 0L)
     Files.createFile(Paths.get(dir, "LOCK"))
     intercept[java.util.ConcurrentModificationException] {
-      MutationStream.applyBatch(spark, st, ops(("add", "b")), 1L)
+      MutationStream.applyBatch(st, ops(("add", "b")), 1L)
     }
     Files.delete(Paths.get(dir, "LOCK"))
-    MutationStream.applyBatch(spark, st, ops(("add", "b")), 2L)
+    MutationStream.applyBatch(st, ops(("add", "b")), 2L)
     assert(stateIds(st) == Set("a", "b"))
   }
 
   test("deleteByQuery widens to every live bucket (row-value addressing cannot be bucket-localized)") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft_state").toString
     val st = new IndexState(dir, spark, B)
     val ids = Seq("a", "b", "c", "d", "e", "f")
-    MutationStream.applyBatch(spark, st, ops(ids.map(("add", _)): _*), 0L)
+    MutationStream.applyBatch(st, ops(ids.map(("add", _)): _*), 0L)
     val liveBuckets = st.currentManifest.keySet
 
     // query-delete by rowValue: kills "c" wherever its bucket is
-    val qdel = Seq(("deleteByQuery", null.asInstanceOf[String])).toDF("kind", "id")
-      .withColumn("doc", lit(null).cast("map<string,array<string>>"))
-      .withColumn("rowValue", lit(null).cast("string"))
-      .withColumn("familyValue", lit(null).cast("string"))
-      .withColumn("queryRow", lit("c"))
-      .withColumn("queryFamily", lit(null).cast("string"))
-    val touched = MutationStream.applyBatch(spark, st, qdel, 1L)
+    val touched = MutationStream.applyBatch(st, qdel("c"), 1L)
     assert(liveBuckets.subsetOf(touched.toSet),
       s"query-delete must touch every live bucket: live=$liveBuckets touched=$touched")
     assert(stateIds(st) == ids.toSet - "c")
@@ -181,12 +178,12 @@ class IndexStateSpec extends SparkSpec {
   test("the bucket count is pinned to the state, not the session") {
     val dir = Files.createTempDirectory("graft_state").toString
     val st = new IndexState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", "b")), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b")), 0L)
     // a later open with a DIFFERENT requested count must use the pinned
     // one — otherwise reads resolve to the wrong bucket directories
     val reopened = new IndexState(dir, spark, B * 4)
     assert(reopened.buckets == B)
-    MutationStream.applyBatch(spark, reopened, ops(("deleteById", "a")), 1L)
+    MutationStream.applyBatch(reopened, ops(("deleteById", "a")), 1L)
     assert(stateIds(reopened) == Set("b"))
     reopened.vacuum(graceMs = 0)
     assert(new IndexState(dir, spark).buckets == B, "BUCKETS survives vacuum")
@@ -197,8 +194,8 @@ class IndexStateSpec extends SparkSpec {
     val st = new IndexState(dir, spark, B)
     val b0 = ops(("add", "a"), ("add", "b"), ("add", "c"))
     val b1 = ops(("deleteById", "a"), ("add", "d"), ("add", "b"))
-    MutationStream.applyBatch(spark, st, b0, 0L)
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b0, 0L)
+    MutationStream.applyBatch(st, b1, 1L)
 
     val expected = IndexerCore.applyOps(
       IndexerCore.applyOps(
@@ -209,7 +206,7 @@ class IndexStateSpec extends SparkSpec {
     // delete the last doc of a bucket: the bucket must drop out entirely
     val onlyC = Sharding.md5Shard("c", B)
     assert(st.currentManifest.contains(onlyC))
-    MutationStream.applyBatch(spark, st, ops(("deleteById", "c")), 2L)
+    MutationStream.applyBatch(st, ops(("deleteById", "c")), 2L)
     if (Set("b", "d").map(Sharding.md5Shard(_, B)).contains(onlyC))
       assert(st.currentManifest.contains(onlyC)) // shared bucket survives
     else
@@ -232,8 +229,8 @@ class IndexStateSpec extends SparkSpec {
       ops(("deleteById", "a"), ("add", "d"), ("add", "b")),
       ops(("add", "e"), ("deleteById", "c")))
     batches.zipWithIndex.foreach { case (ba, i) =>
-      val ta = MutationStream.applyBatch(spark, a, ba, i.toLong)
-      val tb = MutationStream.applyBatch(spark, b, ba, i.toLong)
+      val ta = MutationStream.applyBatch(a, ba, i.toLong)
+      val tb = MutationStream.applyBatch(b, ba, i.toLong)
       assert(ta.toSet == tb.toSet, s"batch $i must touch the same buckets")
     }
     assert(stateIds(a) == stateIds(b) && stateIds(a) == Set("b", "d", "e"))
@@ -244,9 +241,9 @@ class IndexStateSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_txn").toString
     val st = new TxnLogState(dir, spark, B)
     val ids0 = Seq("a", "b", "c", "d", "e", "f", "g", "h")
-    MutationStream.applyBatch(spark, st, ops(ids0.map(("add", _)): _*), 0L)
+    MutationStream.applyBatch(st, ops(ids0.map(("add", _)): _*), 0L)
     val live0 = st.liveBuckets
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 1L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 1L)
     assert(commitDirBuckets(dir, "v000000001") == Seq(Sharding.md5Shard("a", B)),
       "the commit dir must hold only the touched bucket's rows")
     assert(st.liveBuckets == live0)
@@ -256,11 +253,11 @@ class IndexStateSpec extends SparkSpec {
   test("TxnLogState: redelivery is idempotent and never reads-while-overwriting") {
     val dir = Files.createTempDirectory("graft_txn").toString
     val st = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", "b")), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b")), 0L)
     val b1 = ops(("add", "c"), ("deleteById", "a"))
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b1, 1L)
     val afterFirst = stateIds(st)
-    MutationStream.applyBatch(spark, st, b1, 1L)
+    MutationStream.applyBatch(st, b1, 1L)
     assert(stateIds(st) == afterFirst && afterFirst == Set("b", "c"))
   }
 
@@ -268,20 +265,20 @@ class IndexStateSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_txn").toString
     val w1 = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, w1, ops(("add", "a")), 0L)
+    MutationStream.applyBatch(w1, ops(("add", "a")), 0L)
     val w2 = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, w2, ops(("add", "b")), 1L)
+    MutationStream.applyBatch(w2, ops(("add", "b")), 1L)
     // a writer that RE-READS before committing is not stale: w1's next
     // batch refreshes onto w2's commit and lands on the following slot
     // with the MERGED state — optimistic concurrency only aborts a
     // commit raced inside its own read→commit window
-    MutationStream.applyBatch(spark, w1, ops(("add", "c")), 2L)
+    MutationStream.applyBatch(w1, ops(("add", "c")), 2L)
     assert(stateIds(new TxnLogState(dir, spark, B)) == Set("a", "b", "c"))
     // the true race: w3's last read predates w2's next commit and w3
     // commits WITHOUT re-reading — its slot is occupied, it is fenced,
     // and the state is untouched by the aborted commit
     val w3 = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, w2, ops(("add", "d")), 3L)
+    MutationStream.applyBatch(w2, ops(("add", "d")), 3L)
     intercept[java.util.ConcurrentModificationException] {
       w3.commit(Seq("zz").toDF("id"), "vZZ", Seq(Sharding.md5Shard("zz", B)))
     }
@@ -289,19 +286,12 @@ class IndexStateSpec extends SparkSpec {
   }
 
   test("TxnLogState: deleteByQuery widens to every live bucket through the trait") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft_txn").toString
     val st = new TxnLogState(dir, spark, B)
     val ids = Seq("a", "b", "c", "d", "e", "f")
-    MutationStream.applyBatch(spark, st, ops(ids.map(("add", _)): _*), 0L)
+    MutationStream.applyBatch(st, ops(ids.map(("add", _)): _*), 0L)
     val live = st.liveBuckets
-    val qdel = Seq(("deleteByQuery", null.asInstanceOf[String])).toDF("kind", "id")
-      .withColumn("doc", lit(null).cast("map<string,array<string>>"))
-      .withColumn("rowValue", lit(null).cast("string"))
-      .withColumn("familyValue", lit(null).cast("string"))
-      .withColumn("queryRow", lit("c"))
-      .withColumn("queryFamily", lit(null).cast("string"))
-    val touched = MutationStream.applyBatch(spark, st, qdel, 1L)
+    val touched = MutationStream.applyBatch(st, qdel("c"), 1L)
     assert(live.subsetOf(touched.toSet))
     assert(stateIds(st) == ids.toSet - "c")
   }
@@ -311,9 +301,9 @@ class IndexStateSpec extends SparkSpec {
     val st = new TxnLogState(dir, spark, B)
     val idB = Iterator.from(0).map("b" + _)
       .find(i => Sharding.md5Shard(i, B) != Sharding.md5Shard("a", B)).get
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", idB)), 0L)
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 1L)
-    MutationStream.applyBatch(spark, st, ops(("add", "a")), 2L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", idB)), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 1L)
+    MutationStream.applyBatch(st, ops(("add", "a")), 2L)
     val before = stateIds(st)
     assert(st.vacuum().isEmpty, "default grace keeps recently superseded dirs")
     val deleted = st.vacuum(graceMs = 0)
@@ -326,11 +316,11 @@ class IndexStateSpec extends SparkSpec {
   test("TxnLogState: checkpoint compaction preserves the fold and survives log vacuum") {
     val dir = Files.createTempDirectory("graft_txn").toString
     val st = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", "b"), ("add", "c")), 0L)
-    MutationStream.applyBatch(spark, st, ops(("deleteById", "a"), ("add", "d")), 1L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b"), ("add", "c")), 0L)
+    MutationStream.applyBatch(st, ops(("deleteById", "a"), ("add", "d")), 1L)
     assert(st.compact().contains(1L))
     // post-checkpoint commits continue the same slot sequence
-    MutationStream.applyBatch(spark, st, ops(("add", "e")), 2L)
+    MutationStream.applyBatch(st, ops(("add", "e")), 2L)
     // default grace keeps the covered entries; grace 0 reclaims them
     assert(st.vacuumLog().isEmpty)
     val dropped = st.vacuumLog(graceMs = 0L)
@@ -344,8 +334,8 @@ class IndexStateSpec extends SparkSpec {
     // lands on the following slot across the compacted boundary (the
     // true mid-batch race is pinned in the racing-writer test)
     val second = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, fresh, ops(("add", "f")), 3L)
-    MutationStream.applyBatch(spark, second, ops(("add", "g")), 4L)
+    MutationStream.applyBatch(fresh, ops(("add", "f")), 3L)
+    MutationStream.applyBatch(second, ops(("add", "g")), 4L)
     assert(stateIds(new TxnLogState(dir, spark, B)) ==
       Set("b", "c", "d", "e", "f", "g"))
   }
@@ -362,8 +352,8 @@ class IndexStateSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_txn").toString
     val writer = new TxnLogState(dir, spark, B,
       autoCompactEvery = 3, maintenanceGraceMs = 0L)
-    MutationStream.applyBatch(spark, writer, ops(("add", "a")), 0L)
-    MutationStream.applyBatch(spark, writer, ops(("add", "b")), 1L)
+    MutationStream.applyBatch(writer, ops(("add", "a")), 0L)
+    MutationStream.applyBatch(writer, ops(("add", "b")), 1L)
     // two commits: under the cadence, nothing compacted yet
     assert(logNames(dir, ".ckpt").isEmpty)
     // a cached mid-stream reader holds the fold at entry 1
@@ -371,7 +361,7 @@ class IndexStateSpec extends SparkSpec {
     assert(stateIds(reader) == Set("a", "b"))
     // the third applyBatch crosses the cadence: maintain() checkpoints at
     // entry 2 and reclaims the covered txn entries (grace 0)
-    MutationStream.applyBatch(spark, writer,
+    MutationStream.applyBatch(writer,
       ops(("deleteById", "a"), ("add", "c")), 2L)
     assert(logNames(dir, ".ckpt") == Seq(f"${2L}%020d.ckpt"),
       "applyBatch must have auto-compacted at the cadence boundary")
@@ -382,11 +372,11 @@ class IndexStateSpec extends SparkSpec {
     assert(stateIds(reader) == Set("b", "c"))
     assert(reader.currentVersion == writer.currentVersion)
     // the NEXT cadence window triggers again three commits later
-    MutationStream.applyBatch(spark, writer, ops(("add", "d")), 3L)
-    MutationStream.applyBatch(spark, writer, ops(("add", "e")), 4L)
+    MutationStream.applyBatch(writer, ops(("add", "d")), 3L)
+    MutationStream.applyBatch(writer, ops(("add", "e")), 4L)
     assert(logNames(dir, ".ckpt") == Seq(f"${2L}%020d.ckpt"),
       "no re-compaction before the next N commits accumulate")
-    MutationStream.applyBatch(spark, writer, ops(("add", "f")), 5L)
+    MutationStream.applyBatch(writer, ops(("add", "f")), 5L)
     assert(logNames(dir, ".ckpt") == Seq(f"${5L}%020d.ckpt"),
       "superseded checkpoint reclaimed, fresh one at the new boundary")
     assert(stateIds(new TxnLogState(dir, spark, B)) ==
@@ -398,14 +388,14 @@ class IndexStateSpec extends SparkSpec {
   test("TxnLogState: a stale cached reader reseeds across a foreign compact+vacuum (never folds a gapped suffix)") {
     val dir = Files.createTempDirectory("graft_txn").toString
     val writer = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, writer, ops(("add", "a")), 0L)
+    MutationStream.applyBatch(writer, ops(("add", "a")), 0L)
     // reader caches the fold at entry 0 and goes idle
     val reader = new TxnLogState(dir, spark, B)
     assert(stateIds(reader) == Set("a"))
     // a foreign writer advances twice, checkpoints, and vacuums the
     // covered entries — the reader's cached suffix is gone from disk
-    MutationStream.applyBatch(spark, writer, ops(("add", "b")), 1L)
-    MutationStream.applyBatch(spark, writer, ops(("deleteById", "a"), ("add", "c")), 2L)
+    MutationStream.applyBatch(writer, ops(("add", "b")), 1L)
+    MutationStream.applyBatch(writer, ops(("deleteById", "a"), ("add", "c")), 2L)
     assert(writer.compact().contains(2L))
     assert(writer.vacuumLog(graceMs = 0L).count(_.endsWith(".txn")) == 3)
     // nothing on disk past the reader's lastSeen: only the
@@ -413,7 +403,7 @@ class IndexStateSpec extends SparkSpec {
     assert(stateIds(reader) == Set("b", "c"))
     // after the reseed the reader is at entry 2; a further commit is
     // contiguous again and applies incrementally
-    MutationStream.applyBatch(spark, writer, ops(("add", "d")), 3L)
+    MutationStream.applyBatch(writer, ops(("add", "d")), 3L)
     assert(stateIds(reader) == Set("b", "c", "d"))
     assert(reader.currentVersion == writer.currentVersion)
     // a reader opened cold after the vacuum folds checkpoint + suffix
@@ -438,7 +428,7 @@ class IndexStateSpec extends SparkSpec {
     refresher.start()
     try {
       for (i <- 0 until 10)
-        MutationStream.applyBatch(spark, st, ops(("add", s"k$i")), i.toLong)
+        MutationStream.applyBatch(st, ops(("add", s"k$i")), i.toLong)
     } finally { stop = true; refresher.join() }
     assert(errs.isEmpty, s"reader thread failed: ${errs.asScala.map(_.toString)}")
     val slotIds = {
@@ -457,10 +447,10 @@ class IndexStateSpec extends SparkSpec {
   test("TxnLogState: the bucket count is pinned in the log's meta action, not the session") {
     val dir = Files.createTempDirectory("graft_txn").toString
     val st = new TxnLogState(dir, spark, B)
-    MutationStream.applyBatch(spark, st, ops(("add", "a"), ("add", "b")), 0L)
+    MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b")), 0L)
     val reopened = new TxnLogState(dir, spark, B * 4)
     assert(reopened.buckets == B)
-    MutationStream.applyBatch(spark, reopened, ops(("deleteById", "a")), 1L)
+    MutationStream.applyBatch(reopened, ops(("deleteById", "a")), 1L)
     assert(stateIds(reopened) == Set("b"))
   }
 
@@ -641,5 +631,46 @@ class IndexStateSpec extends SparkSpec {
       "v1", freshBuckets)
     assert(stateIds(st) == Set("a", "b", "c", "d"),
       "append through the COW fallback must still union fresh into touched buckets")
+  }
+
+  // ---- the cut paths of applyBatch: no id join against an absent state,
+  // no query-delete join unless the batch holds a deleteByQuery
+
+  test("applyBatch runs 2 Spark jobs on a fresh state and 3 on a live one, scoped as a drain runs it") {
+    val st = new IndexState(Files.createTempDirectory("graft_state").toString, spark, B)
+    def jobs(batch: DataFrame, id: Long): Int =
+      TriggerScope.scoped(batch)(jobsDuring(MutationStream.applyBatch(st, batch, id)))._2
+    // census + commit write
+    assert(jobs(ops(("add", "a"), ("add", "b"), ("deleteById", "c")), 0L) == 2)
+    // census + the one id anti-join's broadcast + commit write
+    assert(jobs(ops(("add", "a"), ("deleteById", "b"), ("add", "d")), 1L) == 3)
+    assert(stateIds(st) == Set("a", "d"))
+  }
+
+  for ((name, make) <- Seq[(String, String => DocStateStore)](
+      "IndexState" -> (new IndexState(_, spark, B)),
+      "TxnLogState" -> (new TxnLogState(_, spark, B)))) {
+    def fresh(): DocStateStore = make(Files.createTempDirectory("graft_state").toString)
+
+    test(s"$name: on a fresh state, an add beats a same-batch deleteById of its id") {
+      val st = fresh()
+      MutationStream.applyBatch(st, ops(("deleteById", "a"), ("add", "a"), ("deleteById", "b")), 0L)
+      assert(stateIds(st) == Set("a"))
+    }
+
+    test(s"$name: a deletes-only batch on a fresh state commits no bucket and reads back empty") {
+      val st = fresh()
+      val touched = MutationStream.applyBatch(st, ops(("deleteById", "a"), ("deleteById", "b")), 0L)
+      assert(touched.nonEmpty)
+      assert(st.liveBuckets.isEmpty && st.read().isEmpty)
+    }
+
+    test(s"$name: a deleteByQuery removes a same-batch add with its rowValue, on a fresh and on a live state") {
+      val st = fresh()
+      MutationStream.applyBatch(st, ops(("add", "a"), ("add", "b")).unionByName(qdel("a")), 0L)
+      assert(stateIds(st) == Set("b"))
+      MutationStream.applyBatch(st, ops(("add", "a"), ("add", "c")).unionByName(qdel("c")), 1L)
+      assert(stateIds(st) == Set("a", "b"))
+    }
   }
 }
