@@ -323,7 +323,7 @@ object Bench {
     // lands after the co-tenant spike that tripped the sentinel in every
     // observed capture; one more sentinel sample around the adjudication
     // window is recorded so a still-poisoned adjudication self-flags too.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     def prevQueryTimes(): Map[String, Double] = {
       val explicit = sys.env.get("SPARK_GRAFT_BENCH_PREV")
         .map(java.nio.file.Path.of(_))

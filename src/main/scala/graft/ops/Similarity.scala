@@ -418,26 +418,11 @@ object Similarity {
     * than `graceMs` (in-flight readers may still scan a just-superseded
     * generation — the engine's universal vacuum contract). */
   def vacuumIvfIndex(dir: String, graceMs: Long = 10 * 60 * 1000L): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     val live = java.nio.file.Paths.get(assignmentDir(dir)).getFileName.toString
-    val cutoff = System.currentTimeMillis() - graceMs
-    val root = java.nio.file.Paths.get(dir)
-    val fs = java.nio.file.Files.list(root)
-    val doomed =
-      try fs.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("assignment") && n != live &&
-          java.nio.file.Files.isDirectory(p) &&
-          java.nio.file.Files.getLastModifiedTime(p).toMillis <= cutoff
-      }.map(_.getFileName.toString).toSeq
-      finally fs.close()
-    doomed.foreach { name =>
-      val walk = java.nio.file.Files.walk(root.resolve(name))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
+    graft.streaming.IndexState.vacuumStale(dir, graceMs) { p =>
+      val n = p.getFileName.toString
+      !n.startsWith("assignment") || n == live || !java.nio.file.Files.isDirectory(p)
     }
-    doomed.sorted
   }
 
   /** Tombstone-DELETE vectors from a persisted index — the lifecycle

@@ -1,7 +1,7 @@
 package graft.registry
 
 import graft.conf.IndexerConf
-import graft.streaming.MutationStream
+import graft.streaming.{IndexState, MutationStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.{Files, Path, Paths}
@@ -176,7 +176,7 @@ class IndexerSupervisor(
         // later re-subscribe gets a fresh subscriptionTimestamp = now and
         // will skip history before it (rewind-to-now)
         Option(running.remove(d.name)).foreach(_.stop())
-        deleteRecursively(Paths.get(ckptDir))
+        IndexState.deleteTree(Paths.get(ckptDir))
     }
   }
 
@@ -490,7 +490,7 @@ class IndexerSupervisor(
     * the s30 contract). Re-freezing resets the audit. */
   def coverageFreeze(name: String, benchmark: org.apache.spark.sql.DataFrame): Unit = {
     registry.get(name).getOrElse(throw new IllegalStateException(s"no such indexer: $name"))
-    deleteRecursively(Paths.get(coverageDir(name)))
+    IndexState.deleteTree(Paths.get(coverageDir(name)))
     benchmark.select("doc_id", "text")
       .write.mode("overwrite").parquet(s"${coverageDir(name)}/bench")
     graft.ops.Dedup.benchGrams(
@@ -539,17 +539,9 @@ class IndexerSupervisor(
   private def executeDelete(d: IndexerDefinition): Unit = {
     registry.update(d.copy(lifecycleState = LifecycleState.Deleting))
     Option(running.remove(d.name)).foreach(_.stop())
-    deleteRecursively(Paths.get(s"$workRoot/${d.name}"))
+    IndexState.deleteTree(Paths.get(s"$workRoot/${d.name}"))
     registry.remove(d.name)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
 }
 
 /** C6: CLI verbs over the registry — add/update/delete/list, mirroring

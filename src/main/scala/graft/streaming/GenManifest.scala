@@ -59,15 +59,30 @@ object GenManifest {
   def commit(dir: String, gen: String, lo: Long, hi: Long): Unit =
     IndexState.atomicWriteString(Paths.get(dir, "_current"), s"$gen\t$lo\t$hi")
 
-  /** The live generation as a frame, None before the first commit. The
-    * schema is the one [[advance]] wrote, so the read runs no footer
-    * inference job. */
+  /** The schema memo key of the generations under `dir`: every one of
+    * them is written by the same fold, so the schema [[writeGen]] seeds
+    * serves them all and [[readGen]] runs no footer inference job. */
+  private def schemaKey(dir: String): String = s"gen:$dir"
+
+  /** Generation `g` under `dir` as a frame. */
+  private[streaming] def readGen(spark: SparkSession, dir: String, g: String): DataFrame =
+    ParquetOnce.read(spark, schemaKey(dir), s"$dir/$g")
+
+  /** Write `next` as generation `gen` under `dir`. */
+  private[streaming] def writeGen(dir: String, gen: String, next: DataFrame): Unit = {
+    ParquetOnce.seed(schemaKey(dir), next.schema)
+    next.write.mode("overwrite").parquet(s"$dir/$gen")
+  }
+
+  /** The live generation as a frame, None before the first commit. */
   def live(spark: SparkSession, dir: String): Option[DataFrame] =
-    currentGen(dir).map(g => ParquetOnce.read(spark, s"gen:$dir", s"$dir/$g"))
+    currentGen(dir).map(readGen(spark, dir, _))
 
   /** Commit `next` as the state after batch `batchId` with hwm (lo, hi):
-    * write it as a new generation, [[commit]] the pointer, then delete
-    * the generation it replaced.
+    * write it as a new generation, [[commit]] the pointer, then
+    * [[GenMeta.sweep]] the generations it replaced. The sweep's grace
+    * window keeps a replaced generation on disk for a reader that
+    * resolved [[live]] before the commit and has not yet collected.
     *
     * The live generation is never overwritten. `next` is derived from it,
     * and a batch id can run twice: Structured Streaming reruns a batch
@@ -78,23 +93,13 @@ object GenManifest {
     * batch therefore writes `g<batchId>-r<nanos>`, as
     * [[IndexState.commitWithMeta]] does with its versions. */
   def advance(dir: String, batchId: Long, next: DataFrame, lo: Long, hi: Long): Unit = {
-    val prev = currentGen(dir)
     val gen =
-      if (prev.contains(s"g$batchId")) s"g$batchId-r${System.nanoTime()}" else s"g$batchId"
-    ParquetOnce.seed(s"gen:$dir", next.schema)
-    next.write.mode("overwrite").parquet(s"$dir/$gen")
+      if (currentGen(dir).contains(s"g$batchId")) s"g$batchId-r${System.nanoTime()}"
+      else s"g$batchId"
+    writeGen(dir, gen, next)
     commit(dir, gen, lo, hi)
-    prev.foreach(g => deleteTree(Paths.get(dir, g)))
+    GenMeta.sweep(dir, keep = gen)
   }
-
-  /** Delete `p` and everything under it; a missing `p` is a no-op. */
-  private[streaming] def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().forEachRemaining(f => { Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
 }
 
 /** The DUAL-STATE variant of [[GenManifest]]: monitors that keep a
@@ -116,6 +121,24 @@ object GenMeta {
   /** The live rollup generation for namespace `ns`, None when empty. */
   def currentGen(store: DocStateStore, ns: String): Option[String] =
     store.stateMeta(s"$ns.gen")
+
+  /** The live rollup generation of namespace `ns` (kept under `dir`) as a
+    * frame, None before the first commit — [[GenManifest.live]] for a
+    * pointer that rides the store's metadata. */
+  def live(spark: SparkSession, store: DocStateStore, ns: String,
+           dir: String): Option[DataFrame] =
+    currentGen(store, ns).map(GenManifest.readGen(spark, dir, _))
+
+  /** Write `next` as the rollup generation of batch `batchId` under `dir`
+    * and return its name, which becomes live when the caller's store
+    * commit carries [[kv]] of it. Unlike [[GenManifest.advance]] it never
+    * needs a retry name: a batch whose generation is already live is a
+    * redelivery, which [[isRedelivery]] skips before the fold. */
+  def write(dir: String, batchId: Long, next: DataFrame): String = {
+    val gen = s"g$batchId"
+    GenManifest.writeGen(dir, gen, next)
+    gen
+  }
 
   /** Ascending-arrival check against the store-resident hwm: true = the
     * batch is a bit-exact redelivery of the newest committed one (skip
@@ -146,7 +169,7 @@ object GenMeta {
     * sweep that sees a superseded dir stamps a `_doomed` marker (an
     * underscore file, invisible to parquet readers) recording the
     * supersession time; only a later sweep deletes dirs whose stamp is
-    * older than `graceMs`. A concurrent [[GenMeta.currentGen]] reader
+    * older than `graceMs`. A concurrent [[GenManifest.live]] or [[live]] reader
     * that resolved the old pointer but has not yet materialized its
     * lazy parquet scan therefore never hits FileNotFoundException
     * mid-read — the same discipline as the store vacuum paths.
@@ -209,7 +232,7 @@ object GenMeta {
     // non-numeric strays sort LAST (oldest) — note -(Long.MinValue)
     // would overflow back to MinValue and rank them newest
     val byRecency = superseded.sortBy { p =>
-      val n = p.getFileName.toString.drop(1)
+      val n = p.getFileName.toString.drop(1).takeWhile(_.isDigit) // g<batchId>[-r<nanos>]
       if (n.nonEmpty && n.forall(_.isDigit)) -n.toLong else Long.MaxValue
     }
     byRecency.zipWithIndex.foreach { case (p, rank) =>
@@ -224,7 +247,7 @@ object GenMeta {
         } else { IndexState.atomicWriteString(stamp, now.toString); now }
       val age = now - doomedAt
       if (age >= graceMs || (rank >= graceKeep && age >= graceFloorMs))
-        GenManifest.deleteTree(p)
+        IndexState.deleteTree(p)
     }
   }
 }

@@ -44,7 +44,7 @@ import scala.jdk.CollectionConverters._
   */
 class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: Int = 16)
     extends DocStateStore {
-  import IndexState.BucketCol
+  import IndexState.Manifest
   private val ptr: Path = Paths.get(indexDir, "CURRENT")
   private val lockPath: Path = Paths.get(indexDir, "LOCK")
   Files.createDirectories(Paths.get(indexDir))
@@ -91,90 +91,51 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
   def currentVersion: Option[String] =
     if (Files.exists(ptr)) Some(Files.readString(ptr).trim) else None
 
+  /** CURRENT and the manifest it names, each read once: `bucket\tdir`
+    * lines (dir relative to indexDir — self-describing, readers never
+    * need the writer's bucket count) and `#meta\tkey\tvalue` lines, the
+    * committed metadata carried forward across commits and updated
+    * atomically with the data by the same CURRENT flip. */
+  private def manifest(): Manifest = currentVersion match {
+    case None => Manifest(None, Map.empty, Map.empty)
+    case Some(m) =>
+      val (comments, lines) = Files.readAllLines(Paths.get(indexDir, m)).asScala.toSeq
+        .filter(_.nonEmpty).partition(_.startsWith("#"))
+      Manifest(Some(m),
+        lines.map { line => val Array(b, dir) = line.split("\t", 2); b.toInt -> dir }.toMap,
+        comments.filter(_.startsWith("#meta\t"))
+          .map { line => val Array(_, k, v) = line.split("\t", 3); k -> v }.toMap)
+  }
+
   def liveBuckets: Set[Int] = currentManifest.keySet
 
-  /** bucket → directory (relative to indexDir), from the live manifest.
-    * Self-describing: readers never need the writer's bucket count.
-    * `#meta` lines (committed key→value metadata) are skipped here and
-    * surfaced via [[stateMeta]]. */
-  def currentManifest: Map[Int, String] = currentVersion match {
-    case None => Map.empty
-    case Some(m) =>
-      Files.readAllLines(Paths.get(indexDir, m)).toArray(Array.empty[String]).toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { line =>
-          val Array(b, dir) = line.split("\t", 2)
-          b.toInt -> dir
-        }.toMap
-  }
+  /** bucket → directory (relative to indexDir), from the live manifest. */
+  def currentManifest: Map[Int, String] = manifest().buckets
 
-  /** The committed metadata map — `#meta\tkey\tvalue` manifest lines,
-    * carried forward across commits, updated atomically with the data by
-    * the same CURRENT flip. */
-  private def currentMetas: Map[String, String] = currentVersion match {
-    case None => Map.empty
-    case Some(m) =>
-      Files.readAllLines(Paths.get(indexDir, m)).toArray(Array.empty[String]).toSeq
-        .filter(_.startsWith("#meta\t"))
-        .map { line =>
-          val Array(_, k, v) = line.split("\t", 3)
-          k -> v
-        }.toMap
-  }
-
-  def stateMeta(key: String): Option[String] = currentMetas.get(key)
+  def stateMeta(key: String): Option[String] = manifest().meta.get(key)
 
   /** The full index state (union of all live buckets). */
   def read(): Option[DataFrame] =
     IndexState.readAssigned(spark, indexDir,
       currentManifest.toSeq.map { case (k, d) => (d, k) })
 
-  /** Only the named buckets' state (absent buckets are empty). A commit
-    * dir can hold several buckets' rows (one plain parquet dir per
-    * commit), and a LATER commit may have remapped a subset of its
-    * buckets elsewhere — so each dir contributes only the buckets the
-    * manifest currently assigns to it ([[IndexState.readAssigned]]). */
+  /** Only the named buckets' state (absent buckets are empty); each
+    * commit dir contributes only the buckets the manifest currently
+    * assigns to it ([[IndexState.readAssigned]]). */
   def readBuckets(ks: Seq[Int]): Option[DataFrame] = {
     val m = currentManifest
     IndexState.readAssigned(spark, indexDir,
       ks.flatMap(k => m.get(k).map(d => (d, k))))
   }
 
-  /** Drop version directories and manifests no longer reachable from
-    * CURRENT — the vacuum step of any copy-on-write layout (Delta/Iceberg
-    * VACUUM). A version dir survives if ANY live bucket points into it,
-    * or if it was modified within the last `graceMs` (the retention
-    * window: a reader that resolved the previous manifest — or holds a
-    * lazily-evaluated DataFrame from an earlier `read()` — may still be
-    * scanning recently superseded dirs; Delta's VACUUM retention makes the
-    * same trade). The LOCK is held for the scan+delete so no commit can
-    * flip CURRENT mid-vacuum. graceMs = 0 reclaims everything stale
-    * immediately — only safe when the caller knows no reader is live.
-    * Returns the deleted dir names. */
+  /** [[IndexState.vacuumStale]] over the commit dirs and manifests no
+    * longer reachable from CURRENT. The LOCK is held for the scan+delete
+    * so no commit can flip CURRENT mid-vacuum. */
   def vacuum(graceMs: Long): Seq[String] = withLock {
-    val liveDirs = currentManifest.values.map(_.split("/", 2)(0)).toSet
-    val liveManifest = currentVersion.toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    val root = Paths.get(indexDir)
-    val fs = Files.list(root)
-    val doomed =
-      try fs.iterator().asScala.filter { p =>
-        val name = p.getFileName.toString
-        name != "CURRENT" && name != "BUCKETS" && name != "LOCK" &&
-          !liveDirs.contains(name) && !liveManifest.contains(name) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff
-      }.map(_.getFileName.toString).toSeq
-      finally fs.close()
-    doomed.foreach { name =>
-      val p = root.resolve(name)
-      if (Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      } else Files.deleteIfExists(p)
-    }
-    doomed.sorted
+    val m = manifest()
+    val keep = Set("CURRENT", "BUCKETS", "LOCK") ++ m.version ++
+      m.buckets.values.map(_.split("/", 2)(0))
+    IndexState.vacuumStale(indexDir, graceMs)(p => keep(p.getFileName.toString))
   }
 
   def commit(updated: DataFrame, version: String, touched: Seq[Int]): Unit =
@@ -193,87 +154,107 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
   }
 
   /** Commit: `updated` holds the NEW contents of exactly the `touched`
-    * buckets; untouched buckets keep their current directories. The rows
-    * land in ONE plain parquet dir named after `version`, the bucket id a
-    * data column; the manifest then points every touched bucket that
-    * holds rows at that dir and drops a touched bucket that ends empty
-    * (the write's census saw no row of it). A retry writes a fresh
-    * suffixed dir (never read-while-overwrite); the CURRENT flip is the
-    * commit point either way, and re-applying a DocOp batch is idempotent
-    * by algebra. */
+    * buckets; untouched buckets keep their current directories.
+    * [[IndexState.writeCommit]] writes the rows; the manifest then points
+    * every touched bucket that holds rows at the commit dir and drops a
+    * touched bucket that ends empty. The CURRENT flip is the commit
+    * point, and re-applying a DocOp batch is idempotent by algebra. */
   def commitWithMeta(updated: DataFrame, version: String, touched: Seq[Int],
                      kv: Map[String, String]): Unit = {
-    kv.foreach { case (k, v) =>
-      require(!k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n'),
-        s"state meta keys/values must be tab/newline-free: '$k' -> '$v'")
-    }
-    val base = Paths.get(indexDir, version)
-    val dir = if (!Files.exists(base)) version else s"$version-r${System.nanoTime()}"
-    // ONE plain parquet dir per commit with the bucket id as a DATA
-    // column: the dynamic-partition writer (extra sort, per-partition
-    // writer churn, per-dir commit renames) measured ~0.5 s/commit
-    // CONSTANT on trigger-sized data — the streaming bucketed-commit
-    // floor. The repartition co-locates each bucket in one task, but a
-    // task holds every bucket hashing to its shuffle partition, so a file
-    // mixes buckets (see the class doc) and the read side's pushed-down
-    // `_bucket IN (...)` mostly filters rows rather than skipping files.
-    // At cluster scale widen with a salt column (bucket, hash(id) %
-    // filesPerBucket) to bound per-file size. The
-    // observe() census of nonempty buckets replaces per-bucket-dir
-    // existence probes with zero extra jobs. Write-command executions DO
-    // fulfill Observations in this Spark — both this direct shape
-    // (observe → repartition → write) and StreamUniqueTokens's
-    // through-a-cache shape; an earlier round's contrary measurement was
-    // stale. Both shapes are pinned by name in ObservationWriteSpec, so
-    // an upgrade that stops fulfilling either fails there, not as a
-    // hung commit.
-    val obs = org.apache.spark.sql.Observation()
-    val bucketed = updated
-      .withColumn(BucketCol, graft.expr.hfunctions.md5_shard(col("id"), buckets))
-    // pre-seed the read-side schema memo (unpartitioned write: the file
-    // schema IS this frame's schema) — readAssigned then never pays the
-    // footer-inference job for this store
-    graft.core.ParquetOnce.seed(s"state:$indexDir", bucketed.schema)
-    bucketed
-      .observe(obs, collect_set(col(BucketCol)).as("bs"))
-      .repartition(col(BucketCol))
-      .write.parquet(s"$indexDir/$dir")
-    // a runtime-empty frame can reach the write through an adaptive plan
-    // that ELIMINATED the metrics node (the zero-field-row carve-out
-    // pinned in ObservationWriteSpec) — an absent census key means zero
-    // buckets were written, which is exactly what it signifies
-    val present = obs.get.get("bs")
-      .map(_.asInstanceOf[Seq[Int]].toSet).getOrElse(Set.empty[Int])
-    val written = touched.filter(present)
+    val (dir, written) = IndexState.writeCommit(indexDir, updated, version, buckets, touched, kv)
     // manifest + pointer flip under the LOCK, fenced on CURRENT: if another
     // writer advanced CURRENT since this writer last committed (or opened
-    // the state), merging `currentManifest -- touched` would resurrect
+    // the state), merging the live buckets minus `touched` would resurrect
     // buckets that writer replaced — throw instead of corrupting.
     withLock {
-      val cur = currentVersion
-      if (cur != fenceToken)
+      val cur = manifest()
+      if (cur.version != fenceToken)
         throw new java.util.ConcurrentModificationException(
-          s"index state $indexDir advanced from $fenceToken to $cur under this writer — " +
+          s"index state $indexDir advanced from $fenceToken to ${cur.version} under this writer — " +
             "two drivers are committing to one state dir; this writer is fenced off")
-      val manifest = (currentManifest -- touched) ++
-        written.map(k => k -> dir)
-      val metas = currentMetas ++ kv
+      val bucketDirs = (cur.buckets -- touched) ++ written.map(k => k -> dir)
       val mName = s"MANIFEST-$dir"
       // the manifest file is never read until CURRENT names it, so its own
       // write need not be atomic; the POINTER flip must be — an in-place
       // truncate+write would let a racing reader observe an empty pointer
       Files.writeString(Paths.get(indexDir, mName),
-        (manifest.toSeq.sorted.map { case (k, d) => s"$k\t$d" } ++
-          metas.toSeq.sorted.map { case (k, v) => s"#meta\t$k\t$v" }).mkString("\n"))
+        (bucketDirs.toSeq.sorted.map { case (k, d) => s"$k\t$d" } ++
+          (cur.meta ++ kv).toSeq.sorted.map { case (k, v) => s"#meta\t$k\t$v" }).mkString("\n"))
       IndexState.atomicWriteString(ptr, mName)
       fenceToken = Some(mName)
     }
   }
 }
 
+/** The data path both [[DocStateStore]]s share — the commit write, the
+  * bucket-assigned read and the vacuum walk — so that each store keeps
+  * only its pointer protocol: [[IndexState]] its manifest and CURRENT
+  * flip under LOCK, [[TxnLogState]] its put-if-absent txn entry. */
 object IndexState {
   /** Bucket-id data column stored in every commit dir's files. */
   val BucketCol = "_bucket"
+
+  /** One parsed manifest: the CURRENT value naming it, bucket → commit
+    * dir, and the committed metadata. */
+  private final case class Manifest(version: Option[String], buckets: Map[Int, String],
+                                    meta: Map[String, String])
+
+  /** The read-side schema memo key of the store at `root`: its schema is
+    * fixed for its lifetime (commit dirs all carry the operator's one
+    * shape + _bucket), and [[writeCommit]] seeds it, so bucket reads skip
+    * the footer-inference job even on the first read. */
+  private def schemaKey(root: String): String = s"state:$root"
+
+  /** Write the data half of a commit under `root`: `data` (with an `id`
+    * column) becomes ONE plain parquet dir named after `version`, the
+    * bucket id (`md5_shard(id, buckets)`) a DATA column. A retry of a
+    * version whose dir exists writes a fresh `-r<nanos>` suffixed dir
+    * (never read-while-overwrite). Returns that dir (relative to `root`)
+    * and the `touched` buckets the write's census saw rows of; the caller
+    * then names them live under its own pointer protocol.
+    *
+    * The dynamic-partition writer (extra sort, per-partition writer
+    * churn, per-dir commit renames) measured ~0.5 s/commit CONSTANT on
+    * trigger-sized data — the streaming bucketed-commit floor — hence one
+    * plain dir. The repartition co-locates each bucket in one task, yet a
+    * file still mixes buckets (see the class doc). At cluster scale widen
+    * with a salt column (bucket, hash(id) % filesPerBucket) to bound
+    * per-file size. The observe() census of
+    * nonempty buckets replaces per-bucket-dir existence probes with zero
+    * extra jobs. Write-command executions DO fulfill Observations in this
+    * Spark — both this direct shape (observe → repartition → write) and
+    * StreamUniqueTokens's through-a-cache shape; both are pinned by name
+    * in ObservationWriteSpec, so an upgrade that stops fulfilling either
+    * fails there, not as a hung commit.
+    *
+    * `kv` is the metadata the caller commits with the data: keys and
+    * values must be tab/newline-free (both stores keep them in
+    * line-oriented files). */
+  def writeCommit(root: String, data: DataFrame, version: String, buckets: Int,
+                  touched: Seq[Int], kv: Map[String, String]): (String, Seq[Int]) = {
+    kv.foreach { case (k, v) =>
+      require(!k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n'),
+        s"state meta keys/values must be tab/newline-free: '$k' -> '$v'")
+    }
+    val dir =
+      if (!Files.exists(Paths.get(root, version))) version else s"$version-r${System.nanoTime()}"
+    val obs = org.apache.spark.sql.Observation()
+    val bucketed = data
+      .withColumn(BucketCol, graft.expr.hfunctions.md5_shard(col("id"), buckets))
+    // unpartitioned write: the file schema IS this frame's schema
+    graft.core.ParquetOnce.seed(schemaKey(root), bucketed.schema)
+    bucketed
+      .observe(obs, collect_set(col(BucketCol)).as("bs"))
+      .repartition(col(BucketCol))
+      .write.parquet(s"$root/$dir")
+    // a runtime-empty frame can reach the write through an adaptive plan
+    // that ELIMINATED the metrics node (the zero-field-row carve-out
+    // pinned in ObservationWriteSpec) — an absent census key means zero
+    // buckets were written, which is exactly what it signifies
+    val present = obs.get.get("bs")
+      .map(_.asInstanceOf[Seq[Int]].toSet).getOrElse(Set.empty[Int])
+    (dir, touched.filter(present))
+  }
 
   /** Read `(dir, bucket)` assignments: each commit dir contributes ONLY
     * the buckets currently assigned to it — a dir whose buckets were
@@ -289,17 +270,41 @@ object IndexState {
     val byBucketSet = assign.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
       .toSeq.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toSeq
       .sortBy(_._2.head)
-    // the store's schema is fixed for its lifetime (commit dirs all carry
-    // the operator's one shape + _bucket): memoize it so per-trigger /
-    // per-admission reads skip the footer-inference job — the writers
-    // pre-seed the cache at commit, so even the first read is job-free
-    // in the committing process
     val parts = byBucketSet.map { case (ks, dirs) =>
-      graft.core.ParquetOnce.read(spark, s"state:$root", dirs.map(d => s"$root/$d"): _*)
+      graft.core.ParquetOnce.read(spark, schemaKey(root), dirs.map(d => s"$root/$d"): _*)
         .filter(col(BucketCol).isin(ks.toSeq.sorted: _*))
     }
     Some(parts.reduce(_.unionByName(_)).drop(BucketCol))
   }
+
+  /** The vacuum step of any copy-on-write layout (Delta/Iceberg VACUUM):
+    * delete each entry directly under `root` that `keep` rejects and that
+    * was modified more than `graceMs` ago. The grace window is the
+    * retention for readers: one that resolved the previous pointer — or
+    * holds a lazily-evaluated frame from an earlier read — may still be
+    * scanning recently superseded dirs; Delta's VACUUM retention makes the
+    * same trade. graceMs = 0 reclaims everything stale immediately — only
+    * safe when the caller knows no reader is live. Returns the deleted
+    * names, sorted. */
+  def vacuumStale(root: String, graceMs: Long)(keep: Path => Boolean): Seq[String] = {
+    val cutoff = System.currentTimeMillis() - graceMs
+    val fs = Files.list(Paths.get(root))
+    val doomed =
+      try fs.iterator().asScala
+        .filter(p => !keep(p) && Files.getLastModifiedTime(p).toMillis <= cutoff).toList
+      finally fs.close()
+    doomed.foreach(deleteTree)
+    doomed.map(_.getFileName.toString).sorted
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
 
   /** Write `content` to a temp sibling and rename over `target`
     * (ATOMIC_MOVE): readers see the old value or the new value, never a
@@ -313,14 +318,6 @@ object IndexState {
   }
 }
 
-/** T6 monitoring: one indexer's drain/progress report — the engine's
-  * answer to the reference's replication-lag surface
-  * (hbase-sep-tools ReplicationStatus.java:81-95: ageOfLastShippedOp +
-  * queue sizes per peer). Sourced from StreamingQueryProgress (batch
-  * durations, input rates), the `graft.ingress` observe() counters (A7),
-  * the checkpoint's source log (processed files) vs the log directory
-  * (backlog = the reference's queue size), and the state's CURRENT
-  * pointer (last committed version). */
 /** Per-source consumed/pending file counts — the reference's
   * per-regionserver lag breakdown (ReplicationStatus.java:31-95 reports
   * lag per peer AND per server; here a "source" is a subdirectory of the
@@ -329,6 +326,14 @@ object IndexState {
   * drain. */
 case class SourceLag(processed: Long, backlog: Long)
 
+/** T6 monitoring: one indexer's drain/progress report — the engine's
+  * answer to the reference's replication-lag surface
+  * (hbase-sep-tools ReplicationStatus.java:81-95: ageOfLastShippedOp +
+  * queue sizes per peer). Sourced from StreamingQueryProgress (batch
+  * durations, input rates), the `graft.ingress` observe() counters (A7),
+  * the checkpoint's source log (processed files) vs the log directory
+  * (backlog = the reference's queue size), and the state's CURRENT
+  * pointer (last committed version). */
 case class IndexerProgress(
     batches: Long,
     inputRows: Long,

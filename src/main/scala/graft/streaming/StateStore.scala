@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -16,9 +15,12 @@ import scala.jdk.CollectionConverters._
   *  - [[TxnLogState]] — a Delta-protocol-shaped append-only transaction
   *    log of add/remove file actions.
   *
-  * The DocOp algebra, bucket routing (md5_shard), and partitioned parquet
-  * data layout are IDENTICAL across implementations — swapping the store
-  * is a metadata-protocol change only, which is exactly the claim SCALE.md
+  * The DocOp algebra, bucket routing (md5_shard), and data layout (one
+  * plain parquet dir per commit, the bucket id a `_bucket` data column)
+  * are IDENTICAL across implementations, and so are the code paths that
+  * write, read and vacuum that data ([[IndexState.writeCommit]],
+  * [[IndexState.readAssigned]], [[IndexState.vacuumStale]]) — swapping
+  * the store is a metadata-protocol change only, which is exactly the claim SCALE.md
   * makes about deploying the sink on a real table format (Delta/Iceberg
   * MERGE) at cluster scale.
   */
@@ -49,20 +51,12 @@ trait DocStateStore extends Serializable {
     * not O(state ∩ touched). Sound only when the caller guarantees the
     * state is append-only (rows are never updated or deleted — the
     * keep-first seen-sets) AND `fresh` is disjoint from the current
-    * contents (the gates anti-join before committing). The default folds
-    * to the copy-on-write [[commit]] for stores without a delta path;
-    * [[TxnLogState]] overrides it with a true delta write — per-bucket
-    * delta files, readers fold base + deltas, [[maintain]] compacts. */
-  def commitAppend(fresh: DataFrame, version: String, touched: Seq[Int]): Unit = {
-    // fresh is the receiver: a batch-derived frame keeps the commit plan
-    // under the caller's TriggerScope'd session (the store-read side is
-    // bound to the store's own session); append is an order-free union
-    val updated = readBuckets(touched) match {
-      case Some(seen) => fresh.unionByName(seen)
-      case None       => fresh
-    }
-    commit(updated, version, touched)
-  }
+    * contents (the gates anti-join before committing). [[IndexState]]
+    * folds it to a copy-on-write commit of the touched buckets;
+    * [[TxnLogState]] makes it a true delta write — per-bucket delta
+    * files, readers fold base + deltas, [[maintain]] compacts. */
+  def commitAppend(fresh: DataFrame, version: String, touched: Seq[Int]): Unit =
+    commitAppendWithMeta(fresh, version, touched, Map.empty)
 
   /** Key→value metadata carried ATOMICALLY with a commit — Delta's `txn`
     * action, re-expressed: the dual-state streaming monitors keep a
@@ -111,20 +105,20 @@ trait DocStateStore extends Serializable {
   * `ConcurrentModificationException` (this subsumes [[IndexState]]'s
   * fence token; no LOCK file is needed).
   *
-  * Data files are the same bucket-partitioned parquet directories
-  * [[IndexState]] writes; only commit/read/vacuum metadata differs.
-  * Like Delta, superseded log entries are retained (they are bytes, not
-  * data; checkpoint compaction is out of scope) and `vacuum` deletes only
-  * data directories unreferenced by the CURRENT snapshot and older than
-  * the grace window — `graceMs = 0` is safe only with no live readers or
-  * in-flight commits, same contract as [[IndexState.vacuum]].
+  * Data files are the same one plain parquet dir per commit that
+  * [[IndexState]] writes, through the same [[IndexState.writeCommit]];
+  * only the pointer protocol differs. Like Delta, a txn entry outlives
+  * its commit until a checkpoint covers it ([[compact]], [[vacuumLog]]),
+  * and `vacuum` deletes only data directories unreferenced by the
+  * CURRENT snapshot and older than the grace window — `graceMs = 0` is
+  * safe only with no live readers or in-flight commits, same contract
+  * as [[IndexState.vacuum]].
   */
 class TxnLogState(val stateDir: String, spark: SparkSession,
                   requestedBuckets: Int = 16,
                   autoCompactEvery: Int = 16,
                   maintenanceGraceMs: Long = 10 * 60 * 1000L,
                   maxDeltasPerBucket: Int = 8) extends DocStateStore {
-  import IndexState.BucketCol
 
   private val logDir: Path = Paths.get(stateDir, "_txnlog")
   Files.createDirectories(logDir)
@@ -265,12 +259,8 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
       view.toSeq.flatMap { case (k, dirs) => dirs.map(d => (d, k)) })
   }
 
-  /** Bucket-pruned read: a commit dir can hold several buckets' rows (one
-    * plain parquet dir per commit — see [[doCommit]]), and a later commit
-    * may have remapped a SUBSET of a dir's buckets elsewhere, so each dir
-    * contributes only the buckets the log currently assigns to it
-    * ([[IndexState.readAssigned]] groups identical assignments into one
-    * scan and pushes the `_bucket IN` filter to the parquet footers). */
+  /** Bucket-pruned read: each dir contributes only the buckets the log
+    * currently assigns to it ([[IndexState.readAssigned]]). */
   def readBuckets(ks: Seq[Int]): Option[DataFrame] = {
     refresh()
     IndexState.readAssigned(spark, stateDir,
@@ -298,10 +288,6 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
                      kv: Map[String, String]): Unit =
     doCommit(updated, version, touched, append = false, kv)
 
-  def commitAppendWithMeta(fresh: DataFrame, version: String, touched: Seq[Int],
-                           kv: Map[String, String]): Unit =
-    doCommit(fresh, version, touched, append = true, kv)
-
   /** The O(fresh) delta path: log only `add` actions for the new delta
     * dirs — the touched buckets' existing dirs stay live and readers
     * fold base + deltas. Untouched semantics otherwise: same slot race,
@@ -310,44 +296,13 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
     * path on its own cadence (the LSM compaction shape), so per-trigger
     * write volume is ∝ fresh keys, amortized-O(state/maxDeltas) for
     * compaction instead of O(state) every trigger. */
-  override def commitAppend(fresh: DataFrame, version: String, touched: Seq[Int]): Unit =
-    doCommit(fresh, version, touched, append = true, Map.empty)
+  def commitAppendWithMeta(fresh: DataFrame, version: String, touched: Seq[Int],
+                           kv: Map[String, String]): Unit =
+    doCommit(fresh, version, touched, append = true, kv)
 
   private def doCommit(data: DataFrame, version: String, touched: Seq[Int],
                        append: Boolean, kv: Map[String, String]): Unit = {
-    kv.foreach { case (k, v) =>
-      require(!k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n'),
-        s"state meta keys/values must be tab/newline-free: '$k' -> '$v'")
-    }
-    val base = Paths.get(stateDir, version)
-    val dir = if (!Files.exists(base)) version else s"$version-r${System.nanoTime()}"
-    // ONE plain parquet dir per commit, bucket id as a DATA column: the
-    // dynamic-partition writer (extra sort, per-partition writer churn,
-    // per-dir commit renames) measured ~0.5 s/commit CONSTANT on
-    // trigger-sized data — the streaming drains' bucketed-commit floor.
-    // The repartition hashes bucket ids into the shuffle partitions, so a
-    // file mixes buckets and the read side's pushed-down `_bucket IN (...)`
-    // mostly filters rows (see IndexState's doc); the observe() census of
-    // nonempty buckets replaces the per-bucket-dir existence probe with
-    // zero extra jobs.
-    val obs = org.apache.spark.sql.Observation()
-    val bucketed = data
-      .withColumn(BucketCol, graft.expr.hfunctions.md5_shard(col("id"), buckets))
-    // pre-seed the read-side schema memo (unpartitioned write: the file
-    // schema IS this frame's schema) — readAssigned then never pays the
-    // footer-inference job for this store
-    graft.core.ParquetOnce.seed(s"state:$stateDir", bucketed.schema)
-    bucketed
-      .observe(obs, org.apache.spark.sql.functions.collect_set(col(BucketCol)).as("bs"))
-      .repartition(col(BucketCol))
-      .write.parquet(s"$stateDir/$dir")
-    // a runtime-empty frame can reach the write through an adaptive plan
-    // that ELIMINATED the metrics node (the zero-field-row carve-out
-    // pinned in ObservationWriteSpec) — an absent census key means zero
-    // buckets were written, which is exactly what it signifies
-    val present = obs.get.get("bs")
-      .map(_.asInstanceOf[Seq[Int]].toSet).getOrElse(Set.empty[Int])
-    val written = touched.filter(present)
+    val (dir, written) = IndexState.writeCommit(stateDir, data, version, buckets, touched, kv)
     // an append that materialized no rows (e.g. a redelivered batch whose
     // fresh set folded to ∅) has nothing to log: skip the slot claim —
     // the orphaned empty dir is vacuum-reclaimable. A nonempty kv still
@@ -468,26 +423,11 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
     }
   }
 
+  /** [[IndexState.vacuumStale]] over the data dirs the log no longer
+    * references; the log itself and loose files are never touched. */
   def vacuum(graceMs: Long): Seq[String] = {
-    val liveDirs = fold()._2.values.flatten.map(_.split("/", 2)(0)).toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    val root = Paths.get(stateDir)
-    val fs = Files.list(root)
-    val doomed =
-      try fs.iterator().asScala.filter { p =>
-        val name = p.getFileName.toString
-        name != "_txnlog" && Files.isDirectory(p) &&
-          !liveDirs.contains(name) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff
-      }.map(_.getFileName.toString).toSeq
-      finally fs.close()
-    doomed.foreach { name =>
-      val p = root.resolve(name)
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-    doomed.sorted
+    val keep = fold()._2.values.flatten.map(_.split("/", 2)(0)).toSet + "_txnlog"
+    IndexState.vacuumStale(stateDir, graceMs)(p =>
+      keep(p.getFileName.toString) || !Files.isDirectory(p))
   }
 }

@@ -110,14 +110,12 @@ object StreamAttribution {
 
       // job 2 — fold the rollup generation (≤ touch-types rows)
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(touches, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.live(spark, touches, Ns, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("touch"))
         .agg(sum(col("n_purchases")).as("n_purchases"),
           sum(col("revenue")).cast("decimal(18,6)").as("revenue"))
-      val gen = s"g$batchId"
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
+      val gen = GenMeta.write(aggDir, batchId, next)
 
       // per-user touch state: latest non-purchase event in this trigger
       // supersedes the stored one (ascending arrival); the user-keyed
@@ -154,9 +152,8 @@ object StreamAttribution {
 
   /** The standing rollup — q24's output shape. */
   def summary(spark: SparkSession, touches: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(touches, Ns) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
-        .select(col("touch"), col("n_purchases"),
+    GenMeta.live(spark, touches, Ns, aggDir) match {
+      case Some(df) => df.select(col("touch"), col("n_purchases"),
           col("revenue").cast("double").as("revenue"))
       case None => throw new IllegalStateException("no attribution state committed yet")
     }

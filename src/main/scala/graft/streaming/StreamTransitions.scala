@@ -101,12 +101,10 @@ object StreamTransitions {
       // fold the counts generation (≤ types² rows, constant in stream length)
       val parts = Seq(Some(inner),
         if (boundary.columns.nonEmpty) Some(boundary) else None,
-        GenMeta.currentGen(lasts, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g"))).flatten
+        GenMeta.live(spark, lasts, Ns, countsDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("from_type"), col("to_type")).agg(sum(col("n")).as("n"))
-      val gen = s"g$batchId"
-      graft.core.ParquetOnce.seed(s"gen:$countsDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$countsDir/$gen")
+      val gen = GenMeta.write(countsDir, batchId, next)
 
       // per-user lasts: the batch endpoint always supersedes (ascending
       // arrival), so union + max-by-event_id is the exact fold
@@ -133,9 +131,8 @@ object StreamTransitions {
 
   /** The standing edge matrix — q22's output shape. */
   def summary(spark: SparkSession, lasts: DocStateStore, countsDir: String): DataFrame =
-    GenMeta.currentGen(lasts, Ns) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g")
-        .select(col("from_type"), col("to_type"), col("n"))
+    GenMeta.live(spark, lasts, Ns, countsDir) match {
+      case Some(df) => df.select(col("from_type"), col("to_type"), col("n"))
       case None => throw new IllegalStateException("no transition state committed yet")
     }
 

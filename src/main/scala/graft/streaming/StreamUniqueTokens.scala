@@ -89,15 +89,13 @@ object StreamUniqueTokens {
           coalesce(col("raw_tokens"), lit(0L)).as("raw_tokens"),
           coalesce(col("unique_tokens"), lit(0L)).as("unique_tokens"))
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(seen, Ns).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.live(spark, seen, Ns, aggDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("source"))
         .agg(sum(col("raw_tokens")).as("raw_tokens"),
           sum(col("unique_tokens")).as("unique_tokens"))
-      val gen = s"g$batchId"
       // job 2 — generation write (materializes fresh's cache)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
+      val gen = GenMeta.write(aggDir, batchId, next)
 
       // THE commit point: the seen-set delta, the counters' generation
       // pointer, and the hwm advance in ONE txn entry ([[GenMeta]]) — a
@@ -143,9 +141,8 @@ object StreamUniqueTokens {
 
   /** The standing accounting — (source, raw, unique, stale_ppm). */
   def summary(spark: SparkSession, seen: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(seen, Ns) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
-        .withColumn("stale_ppm", expr(
+    GenMeta.live(spark, seen, Ns, aggDir) match {
+      case Some(df) => df.withColumn("stale_ppm", expr(
           "CASE WHEN raw_tokens = 0 THEN 0L " +
             "ELSE ((raw_tokens - unique_tokens) * 1000000L) div raw_tokens END"))
         .select(col("source"), col("raw_tokens"), col("unique_tokens"), col("stale_ppm"))

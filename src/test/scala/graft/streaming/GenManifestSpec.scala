@@ -83,8 +83,10 @@ class GenManifestSpec extends SparkSpec {
     assert(once.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       == Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "a", 2L), (5L, "b", 2L)))
     // ---- simulate the crash: output + new gen landed, commit did NOT —
-    // restore the pre-batch manifest and the old counter generation
+    // restore the pre-batch manifest and the old counter generation as
+    // they were (the sweep has stamped g0 but kept it)
     IndexState.atomicWriteString(Paths.get(state, "_current"), cur0)
+    IndexState.deleteTree(Paths.get(state, g0))
     copyDir(Paths.get(s"$work/g0_saved"), Paths.get(state, g0))
     StreamQuota.applyBatch(state, quotas,
       docs.filter(col("doc_id") > 2), out, 1L) // the replay
@@ -185,6 +187,22 @@ class GenManifestSpec extends SparkSpec {
     GenMeta.sweep(agg, keep = "g5", graceMs = 60 * 60 * 1000L, graceKeep = 0,
       graceFloorMs = 0L)
     assert(!Files.exists(Paths.get(agg, "g0")), "past the floor g0 is reclaimed")
+  }
+
+  test("advance: a frame resolved through live still collects after the next advance") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_gm9").toString
+    GenManifest.advance(d, 0L, Seq((1L, 10L)).toDF("k", "v"), 0L, 0L)
+    // a dashboard read (Supervisor.quotaStatus) resolves the pointer, then
+    // a drain advances it before the read collects
+    val earlier = GenManifest.live(spark, d).get
+    GenManifest.advance(d, 1L, Seq((2L, 20L)).toDF("k", "v"), 1L, 1L)
+    assert(earlier.collect().map(_.getLong(1)).toSeq == Seq(10L))
+    assert(GenManifest.live(spark, d).get.collect().map(_.getLong(1)).toSeq == Seq(20L))
+    assert(Files.exists(Paths.get(d, "g0", "_doomed")), "the replaced generation is stamped")
+    // once its grace has passed, the sweep reclaims it
+    GenMeta.sweep(d, keep = "g1", graceMs = 0L)
+    assert(!Files.exists(Paths.get(d, "g0")) && Files.exists(Paths.get(d, "g1")))
   }
 
   /** THE manifest-drift guard (round-15 regression class): every

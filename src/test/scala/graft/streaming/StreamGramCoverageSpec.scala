@@ -62,7 +62,10 @@ class StreamGramCoverageSpec extends SparkSpec {
       val n = StreamGramCoverage.readState(spark, s"$work/state").get.count()
       assert(n <= bound, s"state $n exceeds probe gram count $bound")
     }
-    // only one generation survives (superseded ones vacuumed)
+    // only one generation survives once the sweep's grace window has
+    // passed (superseded ones vacuumed)
+    GenMeta.sweep(s"$work/state", keep = GenManifest.currentGen(s"$work/state").get,
+      graceMs = 0L)
     val gens = new java.io.File(s"$work/state").listFiles()
       .map(_.getName).filter(_.startsWith("g"))
     assert(gens.length == 1, gens.mkString(","))

@@ -28,6 +28,9 @@ class StreamKmvSpec extends SparkSpec {
     val once = state
     fold(docs.filter(col("doc_id") > 2), 1L)
     assert(state === once)
+    // the replaced generations wait out the sweep's grace window; past
+    // it, only the live one is left
+    GenMeta.sweep(dir, keep = GenManifest.currentGen(dir).get, graceMs = 0L)
     val gens = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("g"))
     assert(gens.length === 1, gens.mkString(","))
   }
