@@ -4,7 +4,7 @@ import graft.conf.IndexerConf
 import graft.streaming.{IndexState, MutationStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** C3/C4/C7: the master/supervisor collapsed into one driver-side

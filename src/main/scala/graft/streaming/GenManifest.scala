@@ -90,12 +90,10 @@ object GenManifest {
     * never written. Overwriting `g<batchId>` from a plan that reads
     * `g<batchId>` deletes the input before the scan, so the write fails
     * and leaves the pointer on an empty directory. A rerun of the live
-    * batch therefore writes `g<batchId>-r<nanos>`, as
-    * [[IndexState.commitWithMeta]] does with its versions. */
+    * batch therefore writes `g<batchId>-r<nanos>` ([[IndexState.retryName]],
+    * the rule the document stores' commit dirs follow too). */
   def advance(dir: String, batchId: Long, next: DataFrame, lo: Long, hi: Long): Unit = {
-    val gen =
-      if (currentGen(dir).contains(s"g$batchId")) s"g$batchId-r${System.nanoTime()}"
-      else s"g$batchId"
+    val gen = IndexState.retryName(s"g$batchId", taken = currentGen(dir).contains(s"g$batchId"))
     writeGen(dir, gen, next)
     commit(dir, gen, lo, hi)
     GenMeta.sweep(dir, keep = gen)

@@ -199,6 +199,12 @@ object IndexState {
   private final case class Manifest(version: Option[String], buckets: Map[Int, String],
                                     meta: Map[String, String])
 
+  /** `name`, or when `taken` a fresh `name-r<nanos>`: a retried commit
+    * writes beside the dir or generation it would otherwise overwrite,
+    * since the plan being written may read it. */
+  def retryName(name: String, taken: Boolean): String =
+    if (taken) s"$name-r${System.nanoTime()}" else name
+
   /** The read-side schema memo key of the store at `root`: its schema is
     * fixed for its lifetime (commit dirs all carry the operator's one
     * shape + _bucket), and [[writeCommit]] seeds it, so bucket reads skip
@@ -236,8 +242,7 @@ object IndexState {
       require(!k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n'),
         s"state meta keys/values must be tab/newline-free: '$k' -> '$v'")
     }
-    val dir =
-      if (!Files.exists(Paths.get(root, version))) version else s"$version-r${System.nanoTime()}"
+    val dir = retryName(version, taken = Files.exists(Paths.get(root, version)))
     val obs = org.apache.spark.sql.Observation()
     val bucketed = data
       .withColumn(BucketCol, graft.expr.hfunctions.md5_shard(col("id"), buckets))

@@ -28,13 +28,13 @@ class SchemaKeySpec extends AnyFunSuite {
     } finally walk.close()
   }
 
-  test("a state: schema key is spelled only by the shared store data path") {
+  test("a state: schema key is spelled once, by the shared store data path") {
     val files = filesSpelling("state:")
     assert(files == List("MutationStream.scala"),
       s"a state: key outside IndexState's shared write/read (use IndexState.writeCommit/readAssigned): $files")
   }
 
-  test("a gen: schema key is spelled only in GenManifest.scala") {
+  test("a gen: schema key is spelled once, in GenManifest.scala") {
     val files = filesSpelling("gen:")
     assert(files == List("GenManifest.scala"),
       s"a gen: key outside GenManifest.scala (use GenManifest.live/advance or GenMeta.live/write): $files")
