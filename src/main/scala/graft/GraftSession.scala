@@ -31,7 +31,10 @@ object GraftSession {
       // for small-input/big-output stages; at cluster scale partitions sit
       // far above either floor (plans/r21/minpartition_floor_receipt.txt)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
+      // file: I/O through java.nio instead of forked chmod/readlink
+      .config(graft.io.LocalFs.hadoopConfs.map { case (k, v) => s"spark.hadoop.$k" -> v })
       .getOrCreate()
+    graft.io.LocalFs.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

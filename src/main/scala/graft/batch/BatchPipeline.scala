@@ -86,7 +86,10 @@ object BatchPipeline {
     *     routing ([[graft.expr.SolrRouteHash]]), so an offline build
     *     dropped into a live SolrCloud collection puts every doc on the
     *     shard the NRT API would have picked — batch and live updates
-    *     mix on identical unique keys. */
+    *     mix on identical unique keys.
+    *
+    * The write goes through [[graft.io.LocalFs]], whoever built the
+    * session. */
   def buildShards(ops: DataFrame, numShards: Int, outDir: String,
                   router: String = "md5"): Unit = {
     val route = router match {
@@ -95,6 +98,7 @@ object BatchPipeline {
       case other => throw new IllegalArgumentException(
         s"unknown router '$other' (expected md5 or solrcloud)")
     }
+    graft.io.LocalFs.install(ops.sparkSession)
     ops.filter(col("kind") === "add")
       .withColumn("shard", route)
       .repartition(numShards, col("shard"))

@@ -26,6 +26,10 @@ import scala.jdk.CollectionConverters._
   *
   * The process registry (C7) is the `running` map — name → live query —
   * queryable like the reference's ephemeral ZK process nodes.
+  *
+  * The caller's session is switched to [[graft.io.LocalFs]] on
+  * construction, so everything the supervisor runs writes `file:` paths
+  * without forking.
   */
 class IndexerSupervisor(
     spark: SparkSession,
@@ -33,6 +37,8 @@ class IndexerSupervisor(
     workRoot: String,
     logDirFor: String => String,
     nowNanos: () => Long = () => System.currentTimeMillis() * 1000000L) {
+
+  graft.io.LocalFs.install(spark)
 
   private val running = new java.util.concurrent.ConcurrentHashMap[String, StreamingQuery]()
   private val lastReport =

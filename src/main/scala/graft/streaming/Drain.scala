@@ -33,9 +33,11 @@ object Drain {
     }
 
   /** Start draining `source` (a streaming frame) through `perBatch`;
-    * returns the running query. */
+    * returns the running query. The checkpoint and every `perBatch`
+    * write go through [[graft.io.LocalFs]], whoever built the session. */
   def start(source: DataFrame, ckptPath: String)
-           (perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+           (perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.io.LocalFs.install(source.sparkSession)
     source.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         timed(s"perBatch $id")(TriggerScope.scoped(b)(perBatch(b, id)))
@@ -43,6 +45,7 @@ object Drain {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckptPath)
       .start()
+  }
 
   /** Drain the parquet log under `inPath` one file per micro-batch
     * through `perBatch` and wait until every file present at the start

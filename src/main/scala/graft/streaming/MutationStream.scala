@@ -250,6 +250,7 @@ object IndexState {
     graft.core.ParquetOnce.seed(schemaKey(root), bucketed.schema)
     bucketed
       .observe(obs, collect_set(col(BucketCol)).as("bs"))
+      // one file per shuffle partition: bounds the files a live-state union reads
       .repartition(col(BucketCol))
       .write.parquet(s"$root/$dir")
     // a runtime-empty frame can reach the write through an adaptive plan

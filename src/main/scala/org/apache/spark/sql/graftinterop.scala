@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column ⇄ Expression interop for Spark 4, where the converters in
   * `org.apache.spark.sql.classic.ExpressionUtils` are `private[sql]`.
-  * This shim is the only file outside the `graft` package.
+  * The shims under `org.apache` are the only files outside the `graft`
+  * package.
   */
 object GraftInterop {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
