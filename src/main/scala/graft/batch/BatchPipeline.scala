@@ -160,7 +160,7 @@ object BatchPipeline {
     val rows = footers.map(_._2).sum
     expectedRows.foreach(e => require(rows == e,
       s"go-live: shard build holds $rows rows, expected $e"))
-    val served = StructType(nullable(schemas.head._1).asInstanceOf[StructType].fields :+
+    val served = StructType(graft.streaming.IndexState.readSchema(schemas.head._1).fields :+
       StructField("shard", IntegerType))
     Files.createDirectories(Paths.get(serveDir))
     // temp-file + rename, not truncate-in-place: a reader resolving the
@@ -177,7 +177,7 @@ object BatchPipeline {
     val ptr = Paths.get(serveDir, "CURRENT")
     Option.when(Files.exists(ptr)) {
       val Array(dir, schema) = Files.readString(ptr).split("\n", 2)
-      spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(dir)
+      graft.streaming.IndexState.readParquet(spark, schema, dir)
     }
   }
 
@@ -205,14 +205,5 @@ object BatchPipeline {
     }
     require(schema.nonEmpty, s"go-live: $f carries no Spark schema ($key)")
     (f, rows, schema.get)
-  }
-
-  /** What a file-source read does to a data schema: every field, element
-    * and map value may be null. */
-  private def nullable(t: DataType): DataType = t match {
-    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-    case other => other
   }
 }

@@ -2125,7 +2125,9 @@ object Dedup {
     *   - `MANIFEST` (atomic write): the (bands, rowsPerBand, n,
     *     threshold) the index was built with — admissions always use
     *     the built config; a mismatched re-derivation would silently
-    *     compare incompatible signatures.
+    *     compare incompatible signatures — then one `table\tschema` line
+    *     per table, its read schema (JSON), so every read of the index
+    *     resolves with no footer-inference job.
     * Each crawl increment then shuffles only increment-sized data
     * ([[admitWithIndex]]), and admitted docs append without a rebuild
     * ([[appendToNearDupIndex]]). At warehouse scale `sigs` buckets by
@@ -2144,31 +2146,39 @@ object Dedup {
     // a long-id append (or vice versa) must not mix parquet schemas
     val sigs = minhashSignatures(
       corpus.withColumn(idCol, col(idCol).cast("long")), idCol, textCol, nBands * nRows, n)
-    // seed the schema memo at each write so every read-back (here and in
-    // the per-increment admitWithIndex loop) skips the footer-inference
-    // job — these tables are re-read once per admission round
-    graft.core.ParquetOnce.seed(s"nd:$dir/sigs", sigs.schema)
-    sigs.write.mode("overwrite").parquet(s"$dir/sigs")
-    // read back: sigs/ is the materialization boundary — the band
-    // explode and df aggregate must not re-run the shingle scan
+    // each table is read back through the schema it was written with:
+    // sigs/ is the materialization boundary — the band explode and df
+    // aggregate must not re-run the shingle scan
     val spark = corpus.sparkSession
-    val persisted = graft.core.ParquetOnce.read(spark, s"nd:$dir/sigs", s"$dir/sigs")
-    val bandTable = bandKeys(persisted, nBands, nRows)
-    graft.core.ParquetOnce.seed(s"nd:$dir/bands", bandTable.schema)
-    bandTable.write.mode("overwrite").parquet(s"$dir/bands")
-    val bandDf = graft.core.ParquetOnce.read(spark, s"nd:$dir/bands", s"$dir/bands")
-      .groupBy("band_key").agg(count(lit(1)).as("df"))
-    graft.core.ParquetOnce.seed(s"nd:$dir/banddf", bandDf.schema)
-    bandDf.write.mode("overwrite").parquet(s"$dir/banddf")
+    def persist(name: String, df: DataFrame): (DataFrame, String) = {
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+      val schema = graft.streaming.IndexState.readSchema(df.schema).json
+      (graft.streaming.IndexState.readParquet(spark, schema, s"$dir/$name"), s"$name\t$schema")
+    }
+    val (persisted, sigsLine) = persist("sigs", sigs)
+    val (bandTable, bandsLine) = persist("bands", bandKeys(persisted, nBands, nRows))
+    val (_, banddfLine) = persist("banddf", bandTable.groupBy("band_key").agg(count(lit(1)).as("df")))
     graft.streaming.IndexState.atomicWriteString(
       java.nio.file.Paths.get(dir, "MANIFEST"),
-      s"$nBands\t$nRows\t$n\t$threshold")
+      Seq(s"$nBands\t$nRows\t$n\t$threshold", sigsLine, bandsLine, banddfLine).mkString("\n"))
   }
 
-  private def readNearDupManifest(dir: String): (Int, Int, Int, Double) = {
-    val Array(b, r, n, t) = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(dir, "MANIFEST")).trim.split("\t")
-    (b.toInt, r.toInt, n.toInt, t.toDouble)
+  /** The MANIFEST's build config and its table → read schema lines. */
+  private def readNearDupManifest(dir: String): ((Int, Int, Int, Double), Map[String, String]) = {
+    val conf +: tables = java.nio.file.Files
+      .readString(java.nio.file.Paths.get(dir, "MANIFEST")).trim.split("\n").toSeq
+    val Array(b, r, n, t) = conf.split("\t")
+    ((b.toInt, r.toInt, n.toInt, t.toDouble),
+      tables.map { l => val Array(k, v) = l.split("\t", 2); k -> v }.toMap)
+  }
+
+  /** The index's `sigs`, `bands` and `banddf` tables, read through the
+    * schemas its MANIFEST records, and its build config. */
+  private[graft] def openNearDupIndex(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : (Seq[DataFrame], (Int, Int, Int, Double)) = {
+    val (conf, schemas) = readNearDupManifest(dir)
+    (Seq("sigs", "bands", "banddf").map(t =>
+      graft.streaming.IndexState.readParquet(spark, schemas(t), s"$dir/$t")), conf)
   }
 
   /** Admit a crawl increment against a [[buildNearDupIndex]] index:
@@ -2181,11 +2191,8 @@ object Dedup {
   def admitWithIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                      batch: DataFrame, idCol: String, textCol: String,
                      maxBandDf: Option[Int] = None): DataFrame = {
-    val (nBands, nRows, n, threshold) = readNearDupManifest(dir)
-    admissionCore(
-      graft.core.ParquetOnce.read(spark, s"nd:$dir/sigs", s"$dir/sigs"),
-      graft.core.ParquetOnce.read(spark, s"nd:$dir/bands", s"$dir/bands"),
-      graft.core.ParquetOnce.read(spark, s"nd:$dir/banddf", s"$dir/banddf"),
+    val (Seq(sigs, bands, banddf), (nBands, nRows, n, threshold)) = openNearDupIndex(spark, dir)
+    admissionCore(sigs, bands, banddf,
       batch, idCol, textCol, nBands, nRows, n, threshold, maxBandDf)
   }
 
@@ -2200,7 +2207,7 @@ object Dedup {
   def appendToNearDupIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                            docs: DataFrame, idCol: String, textCol: String): Unit = {
     requireIntegralId(docs, idCol, "appendToNearDupIndex")
-    val (nBands, nRows, n, _) = readNearDupManifest(dir)
+    val ((nBands, nRows, n, _), _) = readNearDupManifest(dir)
     // same BIGINT normalization as buildNearDupIndex — appended files must
     // match the built files' schema exactly
     val docsL = docs.withColumn(idCol, col(idCol).cast("long"))

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import graft.streaming.IndexState
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and a sign-random-
@@ -313,53 +315,55 @@ object Similarity {
     // scanning the old generation until the manifest flip, and the
     // superseded directory stays for in-flight scans until vacuum
     val gen = s"assignment-b${System.nanoTime()}"
-    nearestCentroids(corpus, cents, keep = 1)
-      // one task per centroid partition: a dynamic-partition write from P
-      // tasks × C centroids opens P×C files (see IndexState.commit)
-      .repartition(col("c_id"))
-      .write.partitionBy("c_id").parquet(s"$dir/$gen")
-    writeManifest(dir, cents, gen)
+    val assigned = nearestCentroids(corpus, cents, keep = 1)
+    // one task per centroid partition: a dynamic-partition write from P
+    // tasks × C centroids opens P×C files (see IndexState.commit)
+    assigned.repartition(col("c_id")).write.partitionBy("c_id").parquet(s"$dir/$gen")
+    writeManifest(dir, cents, gen, generationSchema(assigned, cents))
     cents
   }
 
+  /** The read schema (JSON) of an assignment generation written
+    * `partitionBy("c_id")` from `df`: its data columns as a parquet read
+    * gives them, then `c_id` as partition discovery types it — int while
+    * every centroid id fits one. [[graft.batch.BatchPipeline.goLive]]
+    * records its `shard` column the same way. */
+  private def generationSchema(df: DataFrame, cents: Seq[Centroid]): String =
+    StructType(IndexState.readSchema(StructType(df.schema.filterNot(_.name == "c_id"))).fields :+
+      StructField("c_id", if (cents.forall(_.cId.isValidInt)) IntegerType else LongType)).json
+
   /** Publish (codebook, assignment generation) as ONE file flipped by ONE
     * atomic rename: the `CODEBOOK` manifest's first line names the live
-    * assignment directory, the rest is the codebook. A reader that parses
-    * the manifest once ([[resolveIndex]]) can never pair a new codebook
-    * with an old generation's assignment (incompatible c_id coordinate
-    * systems) — the failure mode of flipping two pointers separately. */
-  private def writeManifest(dir: String, cents: Seq[Centroid], gen: String): Unit = {
-    val lines = s"meta\tdir\t$gen" +:
+    * assignment directory and its read schema, the rest is the codebook.
+    * A reader that parses the manifest once ([[resolveIndex]]) can never
+    * pair a new codebook with an old generation's assignment (incompatible
+    * c_id coordinate systems) — the failure mode of flipping two pointers
+    * separately. */
+  private def writeManifest(dir: String, cents: Seq[Centroid], gen: String,
+                            schema: String): Unit = {
+    val lines = s"meta\tdir\t$gen\t$schema" +:
       cents.map(c => s"${c.cId}\t${c.nq}\t${c.vec.mkString(",")}")
-    graft.streaming.IndexState.atomicWriteString(
+    IndexState.atomicWriteString(
       java.nio.file.Paths.get(dir, "CODEBOOK"), lines.mkString("\n"))
   }
 
-  /** Parse the manifest ONCE → (codebook, live assignment dir). This is
-    * the only consistent read path: callers that need both MUST take them
-    * from a single call, not from [[openIvfCodebook]] + [[assignmentDir]]
-    * separately (two reads can straddle a rebuild's flip). Pre-manifest
-    * layouts (no `meta` line; optional separate `ASSIGNMENT` pointer)
-    * still resolve, defaulting to the original `assignment` directory. */
-  private[graft] def resolveIndex(dir: String): (Seq[Centroid], String) = {
-    val lines = java.nio.file.Files
+  /** Parse the manifest ONCE → (codebook, live assignment dir, its read
+    * schema). This is the only consistent read path: callers that need
+    * more than one MUST take them from a single call, not from
+    * [[openIvfCodebook]] + [[assignmentDir]] separately (two reads can
+    * straddle a rebuild's flip). */
+  private[graft] def resolveIndex(dir: String): (Seq[Centroid], String, String) = {
+    val meta +: centLines = java.nio.file.Files
       .readString(java.nio.file.Paths.get(dir, "CODEBOOK"))
       .split("\n").toSeq.filter(_.nonEmpty)
-    val (gen, centLines) = lines match {
-      case meta +: rest if meta.startsWith("meta\tdir\t") =>
-        (meta.split("\t", 3)(2), rest)
-      case _ =>
-        val p = java.nio.file.Paths.get(dir, "ASSIGNMENT")
-        val legacy =
-          if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).trim
-          else "assignment"
-        (legacy, lines)
-    }
+    val fields = meta.split("\t", 4)
+    require(fields.length == 4 && fields(0) == "meta" && fields(1) == "dir",
+      s"bad CODEBOOK manifest in $dir")
     val cents = centLines.map { line =>
       val Array(id, nq, vec) = line.split("\t", 3)
       Centroid(id.toLong, vec.split(",").toSeq.map(_.toLong), nq.toLong)
     }.sortBy(_.cId)
-    (cents, s"$dir/$gen")
+    (cents, s"$dir/${fields(2)}", fields(3))
   }
 
   /** The live assignment directory (manifest-resolved). For consistency
@@ -375,7 +379,7 @@ object Similarity {
     * maintenance, while [[compactIvfIndex]] is the small-files
     * maintenance. */
   def appendToIvfIndex(newVectors: DataFrame, dir: String): Unit = {
-    val (cents, liveDir) = resolveIndex(dir) // one read: codebook + its generation
+    val (cents, liveDir, _) = resolveIndex(dir) // one read: codebook + its generation
     nearestCentroids(newVectors, cents, keep = 1)
       .repartition(col("c_id"))
       .write.mode("append").partitionBy("c_id").parquet(liveDir)
@@ -384,10 +388,11 @@ object Similarity {
   /** Compact the assignment: rewrite the live generation with ONE file
     * per centroid partition (streamed appends leave a file per append
     * per touched centroid — at serving scale the scan cost becomes
-    * file-open bound) into a fresh generation directory, then flip the
-    * `ASSIGNMENT` pointer atomically. Readers resolve the pointer per
-    * query, so a query in flight finishes on the old generation and the
-    * next one reads the compacted data — identical rows either way. The
+    * file-open bound) into a fresh generation directory, then rewrite
+    * the `CODEBOOK` manifest to name it, atomically. Readers resolve the
+    * manifest per query, so a query in flight finishes on the old
+    * generation and the next one reads the compacted data — identical
+    * rows either way. The
     * superseded generation stays on disk for in-flight readers until
     * [[vacuumIvfIndex]] reclaims it past a grace window. Returns the new
     * generation's name.
@@ -402,15 +407,16 @@ object Similarity {
     * maintenance process (or put the assignment behind [[DocStateStore]]
     * -style put-if-absent commits). Readers need no coordination. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val (cents, liveDir) = resolveIndex(dir)
+    val (cents, liveDir, schema) = resolveIndex(dir)
     val target = s"assignment-${System.currentTimeMillis()}"
     // tombstones apply PHYSICALLY here: the fresh generation is written
     // without the doomed rows and starts with an empty tombstone set
-    maskTombstones(spark, liveDir, graft.core.ParquetOnce.read(spark, liveDir, liveDir))
+    val live = IndexState.readParquet(spark, schema, liveDir)
+    maskTombstones(spark, liveDir, live)
       .repartition(col("c_id"))
       .write.partitionBy("c_id").parquet(s"$dir/$target")
-    // same codebook, new generation — still one atomic manifest flip
-    writeManifest(dir, cents, target)
+    // same codebook and columns, new generation — one atomic manifest flip
+    writeManifest(dir, cents, target, generationSchema(live, cents))
     target
   }
 
@@ -419,7 +425,7 @@ object Similarity {
     * generation — the engine's universal vacuum contract). */
   def vacuumIvfIndex(dir: String, graceMs: Long = 10 * 60 * 1000L): Seq[String] = {
     val live = java.nio.file.Paths.get(assignmentDir(dir)).getFileName.toString
-    graft.streaming.IndexState.vacuumStale(dir, graceMs) { p =>
+    IndexState.vacuumStale(dir, graceMs) { p =>
       val n = p.getFileName.toString
       !n.startsWith("assignment") || n == live || !java.nio.file.Files.isDirectory(p)
     }
@@ -476,9 +482,9 @@ object Similarity {
                     iters: Int = 2): Seq[(Long, Long)] = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val (cents, liveDir) = resolveIndex(dir)
+    val (cents, liveDir, schema) = resolveIndex(dir)
     // c_id is a partition column: path-inferred as INT on read — cast back
-    val assigned = maskTombstones(spark, liveDir, graft.core.ParquetOnce.read(spark, liveDir, liveDir))
+    val assigned = maskTombstones(spark, liveDir, IndexState.readParquet(spark, schema, liveDir))
       .select(col("vec_id"), col("q"), col("nq"), col("c_id").cast("long").as("c_id"))
     val census = assigned.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
     val tot = census.agg(sum(col("n")).as("t"), count(lit(1)).as("k")).first()
@@ -537,7 +543,7 @@ object Similarity {
       val newCents = cents.filterNot(c => hot.contains(c.cId)) ++
         finalSubs.toSeq.map { case ((p, s), v) =>
           Centroid(newIdOf((p, s)), v, v.map(x => x * x).sum) }
-      writeManifest(dir, newCents.sortBy(_.cId), gen)
+      writeManifest(dir, newCents.sortBy(_.cId), gen, generationSchema(fresh, newCents))
       hot.zipWithIndex.flatMap { case (p, i) =>
         Seq((base + 2L * i) -> p, (base + 2L * i + 1) -> p) }
     } finally { hv.unpersist(blocking = false); () }
@@ -549,7 +555,7 @@ object Similarity {
   /** [[deleteFromIvfIndex]] for the PQ-coded index — same layout, same
     * masking, same compaction semantics ([[compactIvfPqIndex]]). */
   def deleteFromIvfPqIndex(ids: DataFrame, dir: String): Unit = {
-    val (_, _, gen, _, _) = resolveIvfPqIndex(dir)
+    val (_, _, gen, _, _, _) = resolveIvfPqIndex(dir)
     writeTombstones(ids, s"$dir/$gen")
   }
 
@@ -561,13 +567,13 @@ object Similarity {
 
   /** The live generation's tombstone set — None when nothing was ever
     * deleted (the common case: serving then skips the anti-join
-    * entirely, zero overhead on the no-delete path). */
+    * entirely, zero overhead on the no-delete path). Read through the
+    * fixed schema [[writeTombstones]] writes. */
   private def readTombstones(spark: org.apache.spark.sql.SparkSession,
                              liveDir: String): Option[DataFrame] = {
     val p = java.nio.file.Paths.get(liveDir, "_tombstones")
-    if (java.nio.file.Files.isDirectory(p))
-      Some(graft.core.ParquetOnce.read(spark, p.toString, p.toString).select("vec_id"))
-    else None
+    Option.when(java.nio.file.Files.isDirectory(p))(
+      spark.read.schema(StructType(Seq(StructField("vec_id", LongType)))).parquet(p.toString))
   }
 
   /** Mask a generation's tombstones out of an assignment scan: broadcast
@@ -590,7 +596,7 @@ object Similarity {
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                    queries: DataFrame, k: Int, nProbe: Int = 2,
                    attrFilter: Option[Column] = None): DataFrame = {
-    val (cents, liveDir) = resolveIndex(dir) // one read: codebook + its generation
+    val (cents, liveDir, schema) = resolveIndex(dir) // one read: codebook + its generation
     val queryProbes = nearestCentroids(queries, cents, keep = nProbe)
       .select(col("vec_id").as("q_id"), col("q").as("q_vec"), col("nq").as("q_nq"), col("c_id"))
     val probedIds = queryProbes.select(col("c_id")).distinct()
@@ -602,7 +608,7 @@ object Similarity {
     // serves every filter instead of one index per filter value
     val assigned = maskTombstones(spark, liveDir,
       attrFilter.foldLeft(
-        graft.core.ParquetOnce.read(spark, liveDir, liveDir).filter(col("c_id").isin(probedIds: _*)))(_ filter _)
+        IndexState.readParquet(spark, schema, liveDir).filter(col("c_id").isin(probedIds: _*)))(_ filter _)
       .select(col("vec_id"), col("q"), col("nq"), col("c_id").cast("long").as("c_id")))
     val scored = assigned.join(broadcast(queryProbes), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1112,28 +1118,32 @@ object Similarity {
   // (`IVFPQ`) carries the generation pointer, the coarse codebook, AND
   // all m subspace codebooks — a single atomic flip, because pairing a
   // new coarse book with old codes (or vice versa) mixes incompatible
-  // coordinate systems (the writeManifest rationale, doubled).
+  // coordinate systems (the writeManifest rationale, doubled). Its meta
+  // line also records the encoding mode and the generation's read schema
+  // (generationSchema), as the CODEBOOK's does.
 
   private def writeIvfPqManifest(dir: String, coarse: Seq[Centroid],
                                  books: Seq[Seq[Centroid]], gen: String,
-                                 m: Int, dim: Int,
-                                 residual: Boolean = false): Unit = {
-    val lines = (s"meta\tdir\t$gen\t$m\t$dim" + (if (residual) "\tres" else "")) +:
+                                 m: Int, dim: Int, residual: Boolean,
+                                 schema: String): Unit = {
+    val lines = s"meta\tdir\t$gen\t$m\t$dim\t${if (residual) "res" else "raw"}\t$schema" +:
       (coarse.map(c => s"C\t${c.cId}\t${c.nq}\t${c.vec.mkString(",")}") ++
         books.zipWithIndex.flatMap { case (b, j) =>
           b.map(c => s"B\t$j\t${c.cId}\t${c.nq}\t${c.vec.mkString(",")}")
         })
-    graft.streaming.IndexState.atomicWriteString(
+    IndexState.atomicWriteString(
       java.nio.file.Paths.get(dir, "IVFPQ"), lines.mkString("\n"))
   }
 
+  /** Parse the manifest ONCE → (coarse codebook, PQ books, live
+    * generation, m, dim, the generation's read schema). */
   private[graft] def resolveIvfPqIndex(dir: String)
-      : (Seq[Centroid], Seq[Seq[Centroid]], String, Int, Int) = {
+      : (Seq[Centroid], Seq[Seq[Centroid]], String, Int, Int, String) = {
     val lines = java.nio.file.Files
       .readString(java.nio.file.Paths.get(dir, "IVFPQ"))
       .split("\n").toSeq.filter(_.nonEmpty)
     val meta = lines.head.split("\t")
-    require(meta.length >= 5 && meta(0) == "meta", s"bad IVFPQ manifest in $dir")
+    require(meta.length == 7 && meta(0) == "meta", s"bad IVFPQ manifest in $dir")
     val (gen, m) = (meta(2), meta(3).toInt)
     def cent(parts: Array[String], off: Int) = Centroid(
       parts(off).toLong, parts(off + 2).split(",").map(_.toLong).toSeq, parts(off + 1).toLong)
@@ -1142,7 +1152,7 @@ object Similarity {
     val books = lines.tail.filter(_.startsWith("B\t")).map(_.split("\t"))
       .groupBy(_(1).toInt).toSeq.sortBy(_._1)
       .map(_._2.map(cent(_, 2)).toSeq)
-    (coarse, books, gen, m, meta(4).toInt)
+    (coarse, books, gen, m, meta(4).toInt, meta(6))
   }
 
   /** Whether the persisted index's codes approximate RESIDUALS (the a21
@@ -1150,10 +1160,8 @@ object Similarity {
     * the encoding the codes were written under; mixing would compose
     * incompatible coordinate systems silently. */
   private[graft] def ivfPqIndexResidual(dir: String): Boolean = {
-    val meta = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(dir, "IVFPQ"))
-      .split("\n").head.split("\t")
-    meta.length >= 6 && meta(5) == "res"
+    java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "IVFPQ"))
+      .split("\n").head.split("\t")(5) == "res"
   }
 
   /** Build (or rebuild) a persisted IVF-PQ index: train both quantizers
@@ -1171,10 +1179,9 @@ object Similarity {
         (cOpt.getOrElse(tc), bOpt.getOrElse(tb))
     }
     val gen = s"assignment-b${System.nanoTime()}"
-    ivfPqEncode(corpus, co, bo, m, dim)
-      .repartition(col("c_id"))
-      .write.partitionBy("c_id").parquet(s"$dir/$gen")
-    writeIvfPqManifest(dir, co, bo, gen, m, dim)
+    val encoded = ivfPqEncode(corpus, co, bo, m, dim)
+    encoded.repartition(col("c_id")).write.partitionBy("c_id").parquet(s"$dir/$gen")
+    writeIvfPqManifest(dir, co, bo, gen, m, dim, residual = false, generationSchema(encoded, co))
   }
 
   /** [[buildIvfPqIndex]] with the RESIDUAL encoding (a21): same layout,
@@ -1192,10 +1199,9 @@ object Similarity {
         (coarse.getOrElse(tc), books.getOrElse(tb))
     }
     val gen = s"assignment-b${System.nanoTime()}"
-    ivfRpqEncode(corpus, co, bo, m, dim)
-      .repartition(col("c_id"))
-      .write.partitionBy("c_id").parquet(s"$dir/$gen")
-    writeIvfPqManifest(dir, co, bo, gen, m, dim, residual = true)
+    val encoded = ivfRpqEncode(corpus, co, bo, m, dim)
+    encoded.repartition(col("c_id")).write.partitionBy("c_id").parquet(s"$dir/$gen")
+    writeIvfPqManifest(dir, co, bo, gen, m, dim, residual = true, generationSchema(encoded, co))
   }
 
   /** Append new vectors under the FROZEN codebooks — append ≡ rebuild
@@ -1203,7 +1209,7 @@ object Similarity {
     * The manifest's encoding mode decides raw vs residual codes. Same
     * single-owner writer contract as [[appendToIvfIndex]]. */
   def appendToIvfPqIndex(newVectors: DataFrame, dir: String): Unit = {
-    val (co, bo, gen, m, dim) = resolveIvfPqIndex(dir)
+    val (co, bo, gen, m, dim, _) = resolveIvfPqIndex(dir)
     val enc =
       if (ivfPqIndexResidual(dir)) ivfRpqEncode(newVectors, co, bo, m, dim)
       else ivfPqEncode(newVectors, co, bo, m, dim)
@@ -1217,12 +1223,12 @@ object Similarity {
     * books. Identical results to [[ivfPqTopK]] with the same build. */
   def ivfPqIndexTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                      queries: DataFrame, k: Int, nProbe: Int = 2): DataFrame = {
-    val (co, bo, gen, m, dim) = resolveIvfPqIndex(dir)
+    val (co, bo, gen, m, dim, schema) = resolveIvfPqIndex(dir)
     val probes = nearestCentroids(queries, co, keep = nProbe)
       .select(col("c_id")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted // bounded: ≤ nCentroids
     val encoded = maskTombstones(spark, s"$dir/$gen",
-      graft.core.ParquetOnce.read(spark, s"$dir/$gen", s"$dir/$gen")
+      IndexState.readParquet(spark, schema, s"$dir/$gen")
         .filter(col("c_id").isin(probes: _*))
         .select(col("vec_id"), col("nq"), col("c_id").cast("long").as("c_id"), col("codes")))
     if (ivfPqIndexResidual(dir))
@@ -1235,13 +1241,14 @@ object Similarity {
     * — the books are frozen, so compaction is pure I/O), flip the single
     * manifest. Same single-owner writer contract. */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val (co, bo, gen, m, dim) = resolveIvfPqIndex(dir)
+    val (co, bo, gen, m, dim, schema) = resolveIvfPqIndex(dir)
     val target = s"assignment-${System.currentTimeMillis()}"
     val residual = ivfPqIndexResidual(dir) // the mode survives compaction
-    maskTombstones(spark, s"$dir/$gen", graft.core.ParquetOnce.read(spark, s"$dir/$gen", s"$dir/$gen"))
+    val live = IndexState.readParquet(spark, schema, s"$dir/$gen")
+    maskTombstones(spark, s"$dir/$gen", live)
       .repartition(col("c_id"))
       .write.partitionBy("c_id").parquet(s"$dir/$target")
-    writeIvfPqManifest(dir, co, bo, target, m, dim, residual)
+    writeIvfPqManifest(dir, co, bo, target, m, dim, residual, generationSchema(live, co))
     target
   }
 

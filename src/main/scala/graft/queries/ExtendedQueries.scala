@@ -1070,7 +1070,8 @@ object ExtendedQueries {
       val work = scratchDir("graft_a26")
       Similarity.buildIvfIndex(corpus, work, nCentroids = 8)
       val parents = Similarity.splitHotCells(s, work)
-      val census = s.read.parquet(Similarity.assignmentDir(work))
+      val (_, live, schema) = Similarity.resolveIndex(work)
+      val census = graft.streaming.IndexState.readParquet(s, schema, live)
         .groupBy(col("c_id").cast("long").as("c_id")).agg(count(lit(1)).as("n"))
       val parentDF = parents.toDF("c_id", "parent_id")
       census.join(broadcast(parentDF), Seq("c_id"), "left")

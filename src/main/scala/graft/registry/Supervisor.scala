@@ -387,9 +387,9 @@ class IndexerSupervisor(
     registry.get(name).getOrElse(throw new IllegalStateException(s"no such indexer: $name"))
     require(Files.exists(Paths.get(vectorDir(name), "IVFPQ")),
       s"no vector index for $name — run buildVectorIndex first")
-    val (coarse, _, gen, _, _) =
+    val (coarse, _, gen, _, _, schema) =
       graft.ops.Similarity.resolveIvfPqIndex(vectorDir(name))
-    val census = spark.read.parquet(s"${vectorDir(name)}/$gen")
+    val census = graft.streaming.IndexState.readParquet(spark, schema, s"${vectorDir(name)}/$gen")
       .groupBy(org.apache.spark.sql.functions.col("c_id").cast("long").as("c_id"))
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import graft.core.ParquetOnce
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Atomic generation-pointer + high-water-mark manifest for the
@@ -14,9 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reader. The dual-state monitors keep the pointer in their store's
   * metadata instead ([[GenMeta]]).
   *
-  * One `_current` file holds `gen\tlo\thi`, written via temp +
-  * ATOMIC_MOVE, so the state advance and the redelivery detector are a
-  * SINGLE commit point: a crash anywhere before the move replays the
+  * One `_current` file holds `gen\tlo\thi` and, on a second line, the
+  * generation's read schema (JSON), so [[live]] resolves its frame with
+  * no footer-inference job. It is written via temp + ATOMIC_MOVE, so the
+  * state advance and the redelivery detector are a SINGLE commit point:
+  * a crash anywhere before the move replays the
   * batch against the OLD generation (correct: the fold is deterministic
   * and the new generation directory is simply rewritten), and a crash
   * after the move is detected as a bit-exact redelivery by its (lo, hi)
@@ -26,16 +27,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GenManifest {
 
-  /** (generation, hwm lo, hwm hi) of the live commit, None when empty. */
-  def read(dir: String): Option[(String, Long, Long)] = {
+  /** (generation, hwm lo, hwm hi, read schema) of the live commit, None
+    * when empty. */
+  private def pointer(dir: String): Option[(String, Long, Long, String)] = {
     val cur = Paths.get(dir, "_current")
     if (!Files.exists(cur)) None
-    else Files.readString(cur).trim.split("\t") match {
-      case Array(g, lo, hi) => Some((g, lo.toLong, hi.toLong))
-      case other => throw new IllegalStateException(
-        s"unparseable generation manifest in $dir: '${other.mkString("\\t")}'")
+    else {
+      val raw = Files.readString(cur).trim
+      raw.split("\n", 2).map(_.split("\t")) match {
+        case Array(Array(g, lo, hi), Array(schema)) => Some((g, lo.toLong, hi.toLong, schema))
+        case _ => throw new IllegalStateException(s"unparseable generation manifest in $dir: '$raw'")
+      }
     }
   }
+
+  /** (generation, hwm lo, hwm hi) of the live commit, None when empty. */
+  def read(dir: String): Option[(String, Long, Long)] =
+    pointer(dir).map { case (g, lo, hi, _) => (g, lo, hi) }
 
   /** The live generation name (directory under `dir`), None when empty. */
   def currentGen(dir: String): Option[String] = read(dir).map(_._1)
@@ -54,29 +62,21 @@ object GenManifest {
       case _ => false
     }
 
-  /** THE commit point: generation pointer and hwm land in one atomic
-    * move. */
-  def commit(dir: String, gen: String, lo: Long, hi: Long): Unit =
-    IndexState.atomicWriteString(Paths.get(dir, "_current"), s"$gen\t$lo\t$hi")
+  /** THE commit point: generation pointer, hwm and the generation's read
+    * schema land in one atomic move. */
+  def commit(dir: String, gen: String, lo: Long, hi: Long, schema: String): Unit =
+    IndexState.atomicWriteString(Paths.get(dir, "_current"), s"$gen\t$lo\t$hi\n$schema")
 
-  /** The schema memo key of the generations under `dir`: every one of
-    * them is written by the same fold, so the schema [[writeGen]] seeds
-    * serves them all and [[readGen]] runs no footer inference job. */
-  private def schemaKey(dir: String): String = s"gen:$dir"
-
-  /** Generation `g` under `dir` as a frame. */
-  private[streaming] def readGen(spark: SparkSession, dir: String, g: String): DataFrame =
-    ParquetOnce.read(spark, schemaKey(dir), s"$dir/$g")
-
-  /** Write `next` as generation `gen` under `dir`. */
-  private[streaming] def writeGen(dir: String, gen: String, next: DataFrame): Unit = {
-    ParquetOnce.seed(schemaKey(dir), next.schema)
+  /** Write `next` as generation `gen` under `dir`; returns its read
+    * schema (JSON) for the pointer that will name it. */
+  private[streaming] def writeGen(dir: String, gen: String, next: DataFrame): String = {
     next.write.mode("overwrite").parquet(s"$dir/$gen")
+    IndexState.readSchema(next.schema).json
   }
 
   /** The live generation as a frame, None before the first commit. */
   def live(spark: SparkSession, dir: String): Option[DataFrame] =
-    currentGen(dir).map(readGen(spark, dir, _))
+    pointer(dir).map { case (g, _, _, schema) => IndexState.readParquet(spark, schema, s"$dir/$g") }
 
   /** Commit `next` as the state after batch `batchId` with hwm (lo, hi):
     * write it as a new generation, [[commit]] the pointer, then
@@ -94,8 +94,7 @@ object GenManifest {
     * the rule the document stores' commit dirs follow too). */
   def advance(dir: String, batchId: Long, next: DataFrame, lo: Long, hi: Long): Unit = {
     val gen = IndexState.retryName(s"g$batchId", taken = currentGen(dir).contains(s"g$batchId"))
-    writeGen(dir, gen, next)
-    commit(dir, gen, lo, hi)
+    commit(dir, gen, lo, hi, writeGen(dir, gen, next))
     GenMeta.sweep(dir, keep = gen)
   }
 }
@@ -113,7 +112,8 @@ object GenManifest {
   * [[DocStateStore.stateMeta]] keys (Delta's `txn` action, re-expressed):
   * ONE put-if-absent txn entry (or CURRENT flip) advances the per-key
   * delta, the rollup pointer, and the redelivery range together — no
-  * ordering of filesystem writes can tear them apart. */
+  * ordering of filesystem writes can tear them apart. The rollup's read
+  * schema rides beside them as `<ns>.schema`. */
 object GenMeta {
 
   /** The live rollup generation for namespace `ns`, None when empty. */
@@ -125,17 +125,18 @@ object GenMeta {
     * pointer that rides the store's metadata. */
   def live(spark: SparkSession, store: DocStateStore, ns: String,
            dir: String): Option[DataFrame] =
-    currentGen(store, ns).map(GenManifest.readGen(spark, dir, _))
+    currentGen(store, ns).map(g =>
+      IndexState.readParquet(spark, store.stateMeta(s"$ns.schema").get, s"$dir/$g"))
 
   /** Write `next` as the rollup generation of batch `batchId` under `dir`
-    * and return its name, which becomes live when the caller's store
-    * commit carries [[kv]] of it. Unlike [[GenManifest.advance]] it never
-    * needs a retry name: a batch whose generation is already live is a
-    * redelivery, which [[isRedelivery]] skips before the fold. */
-  def write(dir: String, batchId: Long, next: DataFrame): String = {
+    * and return its name and read schema, which become live when the
+    * caller's store commit carries [[kv]] of them. Unlike
+    * [[GenManifest.advance]] it never needs a retry name: a batch whose
+    * generation is already live is a redelivery, which [[isRedelivery]]
+    * skips before the fold. */
+  def write(dir: String, batchId: Long, next: DataFrame): (String, String) = {
     val gen = s"g$batchId"
-    GenManifest.writeGen(dir, gen, next)
-    gen
+    (gen, GenManifest.writeGen(dir, gen, next))
   }
 
   /** Ascending-arrival check against the store-resident hwm: true = the
@@ -157,8 +158,8 @@ object GenMeta {
   }
 
   /** The meta entries a monitor attaches to its store commit. */
-  def kv(ns: String, gen: String, lo: Long, hi: Long): Map[String, String] =
-    Map(s"$ns.gen" -> gen, s"$ns.hwm" -> s"$lo,$hi")
+  def kv(ns: String, gen: String, schema: String, lo: Long, hi: Long): Map[String, String] =
+    Map(s"$ns.gen" -> gen, s"$ns.schema" -> schema, s"$ns.hwm" -> s"$lo,$hi")
 
   /** Reclaim superseded `g*` generation directories under `aggDir` —
     * called AFTER the commit, so a crash before it merely leaks a dir

@@ -6,6 +6,7 @@ import graft.model.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -41,6 +42,11 @@ import scala.jdk.CollectionConverters._
   * the pushed-down `_bucket IN (...)` drops the other buckets' rows, and
   * skips a whole file only when its footer min/max range misses every
   * requested bucket.
+  *
+  * The state's read schema lives in the manifest, as the reserved
+  * `#meta\t_schema` entry ([[IndexState.SchemaKey]]) that every commit
+  * carries forward, so a read resolves its frame with no footer-inference
+  * job, in this process or any other.
   */
 class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: Int = 16)
     extends DocStateStore {
@@ -115,17 +121,17 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
   def stateMeta(key: String): Option[String] = manifest().meta.get(key)
 
   /** The full index state (union of all live buckets). */
-  def read(): Option[DataFrame] =
-    IndexState.readAssigned(spark, indexDir,
-      currentManifest.toSeq.map { case (k, d) => (d, k) })
+  def read(): Option[DataFrame] = {
+    val m = manifest()
+    IndexState.readAssigned(spark, indexDir, m.buckets.toSeq.map { case (k, d) => (d, k) }, m.meta)
+  }
 
   /** Only the named buckets' state (absent buckets are empty); each
     * commit dir contributes only the buckets the manifest currently
     * assigns to it ([[IndexState.readAssigned]]). */
   def readBuckets(ks: Seq[Int]): Option[DataFrame] = {
-    val m = currentManifest
-    IndexState.readAssigned(spark, indexDir,
-      ks.flatMap(k => m.get(k).map(d => (d, k))))
+    val m = manifest()
+    IndexState.readAssigned(spark, indexDir, ks.flatMap(k => m.buckets.get(k).map(d => (d, k))), m.meta)
   }
 
   /** [[IndexState.vacuumStale]] over the commit dirs and manifests no
@@ -161,7 +167,7 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
     * point, and re-applying a DocOp batch is idempotent by algebra. */
   def commitWithMeta(updated: DataFrame, version: String, touched: Seq[Int],
                      kv: Map[String, String]): Unit = {
-    val (dir, written) = IndexState.writeCommit(indexDir, updated, version, buckets, touched, kv)
+    val (dir, written, schema) = IndexState.writeCommit(indexDir, updated, version, buckets, touched, kv)
     // manifest + pointer flip under the LOCK, fenced on CURRENT: if another
     // writer advanced CURRENT since this writer last committed (or opened
     // the state), merging the live buckets minus `touched` would resurrect
@@ -173,13 +179,14 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
           s"index state $indexDir advanced from $fenceToken to ${cur.version} under this writer — " +
             "two drivers are committing to one state dir; this writer is fenced off")
       val bucketDirs = (cur.buckets -- touched) ++ written.map(k => k -> dir)
+      val meta = cur.meta ++ kv ++ Option.when(written.nonEmpty)(IndexState.SchemaKey -> schema)
       val mName = s"MANIFEST-$dir"
       // the manifest file is never read until CURRENT names it, so its own
       // write need not be atomic; the POINTER flip must be — an in-place
       // truncate+write would let a racing reader observe an empty pointer
       Files.writeString(Paths.get(indexDir, mName),
         (bucketDirs.toSeq.sorted.map { case (k, d) => s"$k\t$d" } ++
-          (cur.meta ++ kv).toSeq.sorted.map { case (k, v) => s"#meta\t$k\t$v" }).mkString("\n"))
+          meta.toSeq.sorted.map { case (k, v) => s"#meta\t$k\t$v" }).mkString("\n"))
       IndexState.atomicWriteString(ptr, mName)
       fenceToken = Some(mName)
     }
@@ -205,19 +212,35 @@ object IndexState {
   def retryName(name: String, taken: Boolean): String =
     if (taken) s"$name-r${System.nanoTime()}" else name
 
-  /** The read-side schema memo key of the store at `root`: its schema is
-    * fixed for its lifetime (commit dirs all carry the operator's one
-    * shape + _bucket), and [[writeCommit]] seeds it, so bucket reads skip
-    * the footer-inference job even on the first read. */
-  private def schemaKey(root: String): String = s"state:$root"
+  /** The reserved meta key under which both stores record the read
+    * schema of their commit dirs (JSON, `_bucket` included). */
+  val SchemaKey = "_schema"
+
+  /** `schema` as a parquet read of files written with it gives it back:
+    * every field, element and map value nullable. Each engine-written
+    * store records this form in the pointer that names its data. */
+  def readSchema(schema: StructType): StructType = nullable(schema).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** `paths` read through the schema (JSON) their pointer records, so
+    * resolving the frame runs no footer-inference job. */
+  def readParquet(spark: SparkSession, schema: String, paths: String*): DataFrame =
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(paths: _*)
 
   /** Write the data half of a commit under `root`: `data` (with an `id`
     * column) becomes ONE plain parquet dir named after `version`, the
     * bucket id (`md5_shard(id, buckets)`) a DATA column. A retry of a
     * version whose dir exists writes a fresh `-r<nanos>` suffixed dir
-    * (never read-while-overwrite). Returns that dir (relative to `root`)
-    * and the `touched` buckets the write's census saw rows of; the caller
-    * then names them live under its own pointer protocol.
+    * (never read-while-overwrite). Returns that dir (relative to `root`),
+    * the `touched` buckets the write's census saw rows of, and the dir's
+    * [[readSchema]] as JSON; the caller then names the buckets live, and
+    * records the schema as [[SchemaKey]], under its own pointer protocol.
     *
     * The dynamic-partition writer (extra sort, per-partition writer
     * churn, per-dir commit renames) measured ~0.5 s/commit CONSTANT on
@@ -235,19 +258,18 @@ object IndexState {
     *
     * `kv` is the metadata the caller commits with the data: keys and
     * values must be tab/newline-free (both stores keep them in
-    * line-oriented files). */
+    * line-oriented files), and [[SchemaKey]] is reserved. */
   def writeCommit(root: String, data: DataFrame, version: String, buckets: Int,
-                  touched: Seq[Int], kv: Map[String, String]): (String, Seq[Int]) = {
+                  touched: Seq[Int], kv: Map[String, String]): (String, Seq[Int], String) = {
     kv.foreach { case (k, v) =>
       require(!k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n'),
         s"state meta keys/values must be tab/newline-free: '$k' -> '$v'")
     }
+    require(!kv.contains(SchemaKey), s"state meta key $SchemaKey is reserved for the store's schema")
     val dir = retryName(version, taken = Files.exists(Paths.get(root, version)))
     val obs = org.apache.spark.sql.Observation()
     val bucketed = data
       .withColumn(BucketCol, graft.expr.hfunctions.md5_shard(col("id"), buckets))
-    // unpartitioned write: the file schema IS this frame's schema
-    graft.core.ParquetOnce.seed(schemaKey(root), bucketed.schema)
     bucketed
       .observe(obs, collect_set(col(BucketCol)).as("bs"))
       // one file per shuffle partition: bounds the files a live-state union reads
@@ -259,7 +281,8 @@ object IndexState {
     // buckets were written, which is exactly what it signifies
     val present = obs.get.get("bs")
       .map(_.asInstanceOf[Seq[Int]].toSet).getOrElse(Set.empty[Int])
-    (dir, touched.filter(present))
+    // unpartitioned write: the file schema IS this frame's schema
+    (dir, touched.filter(present), readSchema(bucketed.schema).json)
   }
 
   /** Read `(dir, bucket)` assignments: each commit dir contributes ONLY
@@ -269,15 +292,18 @@ object IndexState {
     * them. Dirs sharing an identical bucket-set collapse into one scan
     * (the common case: every append delta carries the full touched set),
     * and the pushed-down `_bucket IN (...)` keeps only the assigned
-    * buckets' rows (files mix buckets, so footer stats rarely skip one). */
-  def readAssigned(spark: SparkSession, root: String,
-                   assign: Seq[(String, Int)]): Option[DataFrame] = {
+    * buckets' rows (files mix buckets, so footer stats rarely skip one).
+    * `meta` is the committed metadata of the pointer that `assign` came
+    * from; its [[SchemaKey]] entry is the read schema. */
+  def readAssigned(spark: SparkSession, root: String, assign: Seq[(String, Int)],
+                   meta: Map[String, String]): Option[DataFrame] = {
     if (assign.isEmpty) return None
+    val schema = meta(SchemaKey)
     val byBucketSet = assign.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
       .toSeq.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toSeq
       .sortBy(_._2.head)
     val parts = byBucketSet.map { case (ks, dirs) =>
-      graft.core.ParquetOnce.read(spark, schemaKey(root), dirs.map(d => s"$root/$d"): _*)
+      readParquet(spark, schema, dirs.map(d => s"$root/$d"): _*)
         .filter(col(BucketCol).isin(ks.toSeq.sorted: _*))
     }
     Some(parts.reduce(_.unionByName(_)).drop(BucketCol))

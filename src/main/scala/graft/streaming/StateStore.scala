@@ -23,6 +23,13 @@ import scala.jdk.CollectionConverters._
   * the store is a metadata-protocol change only, which is exactly the claim SCALE.md
   * makes about deploying the sink on a real table format (Delta/Iceberg
   * MERGE) at cluster scale.
+  *
+  * Each store records the read schema of its commit dirs in its own
+  * pointer, as the reserved [[IndexState.SchemaKey]] meta entry: the
+  * manifest's `#meta` line ([[IndexState]]) or an `mkv` action
+  * ([[TxnLogState]]). A read takes it from the pointer it has already
+  * parsed, so resolving a frame runs no footer-inference job, whichever
+  * process wrote the store.
   */
 trait DocStateStore extends Serializable {
   /** Bucket count pinned to the state (never the session). */
@@ -113,6 +120,10 @@ trait DocStateStore extends Serializable {
   * CURRENT snapshot and older than the grace window — `graceMs = 0` is
   * safe only with no live readers or in-flight commits, same contract
   * as [[IndexState.vacuum]].
+  *
+  * The read schema is an `mkv` action under [[IndexState.SchemaKey]],
+  * logged only by a commit that changes it and kept by [[compact]]'s
+  * checkpoint like any other meta entry.
   */
 class TxnLogState(val stateDir: String, spark: SparkSession,
                   requestedBuckets: Int = 16,
@@ -253,18 +264,22 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
 
   def liveBuckets: Set[Int] = { refresh(); view.keySet }
 
+  /** The refreshed bucket view and meta, taken as one consistent pair. */
+  private def snapshot(): (Map[Int, Vector[String]], Map[String, String]) =
+    synchronized { refresh(); (view, metaView) }
+
   def read(): Option[DataFrame] = {
-    refresh()
+    val (v, meta) = snapshot()
     IndexState.readAssigned(spark, stateDir,
-      view.toSeq.flatMap { case (k, dirs) => dirs.map(d => (d, k)) })
+      v.toSeq.flatMap { case (k, dirs) => dirs.map(d => (d, k)) }, meta)
   }
 
   /** Bucket-pruned read: each dir contributes only the buckets the log
     * currently assigns to it ([[IndexState.readAssigned]]). */
   def readBuckets(ks: Seq[Int]): Option[DataFrame] = {
-    refresh()
+    val (v, meta) = snapshot()
     IndexState.readAssigned(spark, stateDir,
-      ks.flatMap(k => view.getOrElse(k, Vector.empty).map(d => (d, k))))
+      ks.flatMap(k => v.getOrElse(k, Vector.empty).map(d => (d, k))), meta)
   }
 
   /** Atomic put-if-absent of `content` at `target`: write a temp sibling,
@@ -302,7 +317,7 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
 
   private def doCommit(data: DataFrame, version: String, touched: Seq[Int],
                        append: Boolean, kv: Map[String, String]): Unit = {
-    val (dir, written) = IndexState.writeCommit(stateDir, data, version, buckets, touched, kv)
+    val (dir, written, schema) = IndexState.writeCommit(stateDir, data, version, buckets, touched, kv)
     // an append that materialized no rows (e.g. a redelivered batch whose
     // fresh set folded to ∅) has nothing to log: skip the slot claim —
     // the orphaned empty dir is vacuum-reclaimable. A nonempty kv still
@@ -311,7 +326,10 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
 
     // snapshot the cache under the refresh() lock: the claimed slot and the
     // remove actions must come from ONE consistent (lastSeen, view) pair
-    val (slotId, baseView) = synchronized { (lastSeen + 1, view) }
+    val (slotId, baseView, baseMeta) = synchronized { (lastSeen + 1, view, metaView) }
+    // the schema rides the commit only when it changes what the log holds
+    val logged = kv ++ Option.when(written.nonEmpty && !baseMeta.get(IndexState.SchemaKey).contains(schema))(
+      IndexState.SchemaKey -> schema)
     val removes =
       if (append) Seq.empty
       else touched.sorted.flatMap(k =>
@@ -320,7 +338,7 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
       (if (slotId == 0) Seq(s"meta\tbuckets\t$buckets") else Seq.empty) ++
         removes ++
         written.sorted.map(k => s"add\t$k\t$dir") ++
-        kv.toSeq.sorted.map { case (k, v) => s"mkv\t$k\t$v" }
+        logged.toSeq.sorted.map { case (k, v) => s"mkv\t$k\t$v" }
     val slot = logDir.resolve(f"$slotId%020d.txn")
     if (!putIfAbsent(slot, actions.mkString("\n")))
       throw new java.util.ConcurrentModificationException(
@@ -333,7 +351,7 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
     synchronized {
       val cleared = if (append) view else view -- touched
       view = written.foldLeft(cleared)((v, k) => addDir(v, k, dir))
-      metaView = metaView ++ kv
+      metaView = metaView ++ logged
       if (slotId > lastSeen) lastSeen = slotId
     }
   }

@@ -115,7 +115,7 @@ object StreamAttribution {
         .groupBy(col("touch"))
         .agg(sum(col("n_purchases")).as("n_purchases"),
           sum(col("revenue")).cast("decimal(18,6)").as("revenue"))
-      val gen = GenMeta.write(aggDir, batchId, next)
+      val (gen, schema) = GenMeta.write(aggDir, batchId, next)
 
       // per-user touch state: latest non-purchase event in this trigger
       // supersedes the stored one (ascending arrival); the user-keyed
@@ -145,7 +145,7 @@ object StreamAttribution {
       // redelivery and skipped. No ordering of filesystem writes can
       // double-count.
       touches.commitWithMeta(mergedTouches, f"r$batchId%010d", writeBuckets,
-        GenMeta.kv(Ns, gen, lo, hi))
+        GenMeta.kv(Ns, gen, schema, lo, hi))
       GenMeta.sweep(aggDir, keep = gen) // reclaim superseded generations
     } finally { wf.unpersist(blocking = false); () }
   }

@@ -104,7 +104,7 @@ object StreamTransitions {
         GenMeta.live(spark, lasts, Ns, countsDir)).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("from_type"), col("to_type")).agg(sum(col("n")).as("n"))
-      val gen = GenMeta.write(countsDir, batchId, next)
+      val (gen, schema) = GenMeta.write(countsDir, batchId, next)
 
       // per-user lasts: the batch endpoint always supersedes (ascending
       // arrival), so union + max-by-event_id is the exact fold
@@ -124,7 +124,7 @@ object StreamTransitions {
       // crash after is a detected redelivery and skipped. The two state
       // halves can never disagree about which batches have folded.
       lasts.commitWithMeta(mergedLasts, f"r$batchId%010d", touched,
-        GenMeta.kv(Ns, gen, lo, hi))
+        GenMeta.kv(Ns, gen, schema, lo, hi))
       GenMeta.sweep(countsDir, keep = gen) // reclaim superseded generations
     } finally { lagged.unpersist(blocking = false); () }
   }

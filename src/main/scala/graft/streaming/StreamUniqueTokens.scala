@@ -95,7 +95,7 @@ object StreamUniqueTokens {
         .agg(sum(col("raw_tokens")).as("raw_tokens"),
           sum(col("unique_tokens")).as("unique_tokens"))
       // job 2 — generation write (materializes fresh's cache)
-      val gen = GenMeta.write(aggDir, batchId, next)
+      val (gen, schema) = GenMeta.write(aggDir, batchId, next)
 
       // THE commit point: the seen-set delta, the counters' generation
       // pointer, and the hwm advance in ONE txn entry ([[GenMeta]]) — a
@@ -134,7 +134,7 @@ object StreamUniqueTokens {
       }
       // job 3 — the append commit
       seen.commitAppendWithMeta(fresh.select(col("id")), f"r$batchId%010d",
-        freshTouched, GenMeta.kv(Ns, gen, lo, hi))
+        freshTouched, GenMeta.kv(Ns, gen, schema, lo, hi))
       GenMeta.sweep(aggDir, keep = gen) // reclaim superseded generations
     } finally { (b :: cached).foreach(_.unpersist(blocking = false)); () }
   }

@@ -402,7 +402,7 @@ class SimilaritySpec extends SparkSpec {
       coarse = Some(co), books = Some(bo))
     Similarity.appendToIvfPqIndex(corpus.filter(col("vec_id") % 2 === 1), work)
 
-    val (co2, bo2, _, m2, dim2) = Similarity.resolveIvfPqIndex(work)
+    val (co2, bo2, _, m2, dim2, _) = Similarity.resolveIvfPqIndex(work)
     assert(co2 == co && bo2 == bo && m2 == 4 && dim2 == 64,
       "both codebooks must round-trip through the single manifest")
 
@@ -566,7 +566,7 @@ class SimilaritySpec extends SparkSpec {
 
     // PQ compaction copies codes (frozen books) minus tombstones
     Similarity.compactIvfPqIndex(spark, dir)
-    val (_, _, gen2, _, _) = Similarity.resolveIvfPqIndex(dir)
+    val (_, _, gen2, _, _, _) = Similarity.resolveIvfPqIndex(dir)
     assert(!java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(s"$dir/$gen2", "_tombstones")))
     assert(rows() == masked, "PQ compaction must not change serving results")
@@ -586,7 +586,7 @@ class SimilaritySpec extends SparkSpec {
     // manifest write — resolveIndex can never see the new codebook with
     // the old generation's (incompatible) c_id space
     Similarity.buildIvfIndex(corpus, dir)
-    val (cents2, live2) = Similarity.resolveIndex(dir)
+    val (cents2, live2, _) = Similarity.resolveIndex(dir)
     assert(!live2.endsWith(gen1), "a rebuild must land in a fresh generation")
     assert(cents2 == Similarity.openIvfCodebook(dir))
     val fullServed = served()

@@ -15,6 +15,10 @@ import java.nio.file.{Files, Path, Paths}
   * pointer never loses its files mid-scan. */
 class GenManifestSpec extends SparkSpec {
 
+  /** The read schema of the (k, v) generations these cases commit. */
+  private val kvSchema = IndexState.readSchema(
+    new org.apache.spark.sql.types.StructType().add("k", "long").add("v", "long")).json
+
   private def copyDir(src: Path, dst: Path): Unit = {
     val walk = Files.walk(src)
     try walk.iterator().forEachRemaining { p =>
@@ -28,7 +32,7 @@ class GenManifestSpec extends SparkSpec {
     val d = Files.createTempDirectory("graft_gm").toString
     assert(GenManifest.read(d).isEmpty)
     // one file, one commit point
-    GenManifest.commit(d, "g4", 10L, 20L)
+    GenManifest.commit(d, "g4", 10L, 20L, kvSchema)
     assert(GenManifest.read(d).contains(("g4", 10L, 20L)))
     assert(GenManifest.isRedelivery(d, 10L, 20L, "c"))
     intercept[IllegalStateException](GenManifest.isRedelivery(d, 15L, 25L, "c"))
@@ -165,7 +169,7 @@ class GenManifestSpec extends SparkSpec {
     import spark.implicits._
     val agg = Files.createTempDirectory("graft_gm8").toString
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.parquet(s"$agg/g0")
-    GenManifest.commit(agg, "g0", 0L, 9L)
+    GenManifest.commit(agg, "g0", 0L, 9L, kvSchema)
     // the reader resolves CURRENT and builds its LAZY scan — no action
     // yet; this is exactly the window the graceFloor exists to protect
     val gen = GenManifest.currentGen(agg).get
@@ -176,7 +180,7 @@ class GenManifestSpec extends SparkSpec {
     // FileNotFoundException mid-materialization
     (1 to 5).foreach { i =>
       Seq((1L, 10L + i)).toDF("k", "v").write.parquet(s"$agg/g$i")
-      GenManifest.commit(agg, s"g$i", i * 10L, i * 10L + 9L)
+      GenManifest.commit(agg, s"g$i", i * 10L, i * 10L + 9L, kvSchema)
       GenMeta.sweep(agg, keep = s"g$i", graceMs = 60 * 60 * 1000L, graceKeep = 0)
     }
     assert(Files.exists(Paths.get(agg, "g0", "_doomed")), "g0 must be stamped")
@@ -203,6 +207,37 @@ class GenManifestSpec extends SparkSpec {
     // once its grace has passed, the sweep reclaims it
     GenMeta.sweep(d, keep = "g1", graceMs = 0L)
     assert(!Files.exists(Paths.get(d, "g0")) && Files.exists(Paths.get(d, "g1")))
+  }
+
+  test("a generation dir rebuilt at one path with a new schema reads through the new schema") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft_gm_rebuilt").toString
+    // a GenManifest.advance directory: first written as (k, v) ...
+    val gen = s"$work/gen"
+    GenManifest.advance(gen, 0L, Seq((1L, 10L)).toDF("k", "v"), 0L, 0L)
+    assert(GenManifest.live(spark, gen).get.columns.toSeq == Seq("k", "v"))
+    // ... then deleted and rebuilt as (k, w)
+    IndexState.deleteTree(Paths.get(gen))
+    GenManifest.advance(gen, 0L, Seq((2L, "x")).toDF("k", "w"), 0L, 0L)
+    val g = GenManifest.live(spark, gen).get
+    assert(g.columns.toSeq == Seq("k", "w"))
+    assert(g.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((2L, "x")))
+
+    // a GenMeta rollup and its store: the same through GenMeta.write/live
+    val (agg, st) = (s"$work/agg", s"$work/st")
+    def commitRollup(rollup: org.apache.spark.sql.DataFrame): Unit = {
+      val (name, schema) = GenMeta.write(agg, 0L, rollup)
+      new TxnLogState(st, spark, 4).commitWithMeta(Seq("a").toDF("id"), "r0000000000",
+        Seq(0, 1, 2, 3), GenMeta.kv("ns", name, schema, 0L, 0L))
+    }
+    commitRollup(Seq((1L, 10L)).toDF("k", "v"))
+    assert(GenMeta.live(spark, new TxnLogState(st, spark), "ns", agg).get.columns.toSeq == Seq("k", "v"))
+    IndexState.deleteTree(Paths.get(agg))
+    IndexState.deleteTree(Paths.get(st))
+    commitRollup(Seq((2L, "x")).toDF("k", "w"))
+    val r = GenMeta.live(spark, new TxnLogState(st, spark), "ns", agg).get
+    assert(r.columns.toSeq == Seq("k", "w"))
+    assert(r.collect().map(x => (x.getLong(0), x.getString(1))).toSeq == Seq((2L, "x")))
   }
 
   /** THE manifest-drift guard (round-15 regression class): every

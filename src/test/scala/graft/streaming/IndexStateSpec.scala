@@ -633,6 +633,23 @@ class IndexStateSpec extends SparkSpec {
       "append through the COW fallback must still union fresh into touched buckets")
   }
 
+  test("a store rebuilt at one path with a new schema reads through the new schema") {
+    import spark.implicits._
+    def check(open: String => DocStateStore): Unit = {
+      val dir = Files.createTempDirectory("graft_state_rebuilt").toString
+      open(dir).commit(Seq(("a", 1L)).toDF("id", "old"), "r0000000000", Seq(0, 1, 2, 3))
+      IndexState.deleteTree(Paths.get(dir))
+      open(dir).commit(Seq(("b", "y")).toDF("id", "neu"), "r0000000000", Seq(0, 1, 2, 3))
+      // a new instance reads the schema the rebuild recorded
+      val got = open(dir).read().get
+      assert(got.columns.contains("neu") && !got.columns.contains("old"), got.columns.mkString(","))
+      assert(got.select("id", "neu").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        == Seq(("b", "y")))
+    }
+    check(new TxnLogState(_, spark, 4))
+    check(new IndexState(_, spark, 4))
+  }
+
   // ---- the cut paths of applyBatch: no id join against an absent state,
   // no query-delete join unless the batch holds a deleteByQuery
 
