@@ -88,8 +88,8 @@ object BatchPipeline {
     *     shard the NRT API would have picked — batch and live updates
     *     mix on identical unique keys.
     *
-    * The write goes through [[graft.io.LocalFs]], whoever built the
-    * session. */
+    * The write runs on the engine's session settings
+    * ([[graft.GraftSession.install]]), whoever built the session. */
   def buildShards(ops: DataFrame, numShards: Int, outDir: String,
                   router: String = "md5"): Unit = {
     val route = router match {
@@ -98,7 +98,7 @@ object BatchPipeline {
       case other => throw new IllegalArgumentException(
         s"unknown router '$other' (expected md5 or solrcloud)")
     }
-    graft.io.LocalFs.install(ops.sparkSession)
+    graft.GraftSession.install(ops.sparkSession)
     ops.filter(col("kind") === "add")
       .withColumn("shard", route)
       .repartition(numShards, col("shard"))
@@ -145,12 +145,7 @@ object BatchPipeline {
     require(ids.forall(k => k >= 0 && k < numShards),
       s"go-live: unexpected shard ids ${ids.filterNot(k => k >= 0 && k < numShards)} (numShards=$numShards)")
     val footers = shardDirs.flatMap { d =>
-      // the files a parquet read of the directory scans: hidden names
-      // (`_SUCCESS`, `.crc` checksums) are skipped
-      val files = list(d).filter { f =>
-        val n = f.getFileName.toString
-        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val files = dataFiles(d)
       require(files.nonEmpty, s"go-live: shard directory $d has no data files")
       files.map(footer)
     }
@@ -185,6 +180,14 @@ object BatchPipeline {
     val s = Files.list(dir)
     try s.iterator().asScala.toSeq.sorted finally s.close()
   }
+
+  /** The files a parquet read of `dir` scans, in name order: hidden
+    * names (`_SUCCESS`, `.crc` checksums) are skipped. */
+  private[graft] def dataFiles(dir: Path): Seq[Path] =
+    list(dir).filter { f =>
+      val n = f.getFileName.toString
+      Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** A data file, its footer's row count and the Spark schema its writer
     * recorded there. */

@@ -4,11 +4,10 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem,
-  FsServerDefaults, GraftFsCache, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 
 /** The engine's `file:` filesystem: Hadoop's local filesystem without
   * the processes it forks when libhadoop is not loaded.
@@ -23,33 +22,17 @@ import org.apache.spark.sql.SparkSession
   * unchanged. A listed status still runs `ls -ld` the first time its
   * permission is read; no write path of the engine reads one.
   *
-  * [[LocalFs.install]] registers it for both Hadoop entry points: the
-  * `FileSystem` API (`fs.file.impl`, used by the parquet writers and
-  * commit protocols) and `FileContext` (`fs.AbstractFileSystem.file.impl`,
-  * used by Structured Streaming's checkpoint manager). */
+  * [[graft.GraftSession.install]] registers it for both Hadoop entry
+  * points: the `FileSystem` API (`fs.file.impl`, used by the parquet
+  * writers and commit protocols) and `FileContext`
+  * (`fs.AbstractFileSystem.file.impl`, used by Structured Streaming's
+  * checkpoint manager). */
 object LocalFs {
 
   /** The Hadoop keys that select this filesystem for `file:`. */
   val hadoopConfs: Map[String, String] = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
-
-  private val localUri = URI.create("file:///")
-
-  /** Route every `file:` operation of `spark` through this filesystem.
-    * Idempotent. `FileSystem.get` caches one instance per scheme and
-    * user whatever the conf, so a default `LocalFileSystem` that an
-    * earlier caller put in the cache is evicted here; callers that still
-    * hold it keep a working filesystem. */
-  def install(spark: SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    hadoopConfs.foreach { case (k, v) => if (conf.get(k) != v) conf.set(k, v) }
-    val cached = FileSystem.get(localUri, conf)
-    if (!cached.isInstanceOf[NioLocalFileSystem]) {
-      GraftFsCache.evict(localUri, conf, cached)
-      FileSystem.get(localUri, conf)
-    }
-  }
 }
 
 /** `RawLocalFileSystem` with its shell paths answered through `java.nio`. */

@@ -567,13 +567,17 @@ object Similarity {
 
   /** The live generation's tombstone set — None when nothing was ever
     * deleted (the common case: serving then skips the anti-join
-    * entirely, zero overhead on the no-delete path). Read through the
-    * fixed schema [[writeTombstones]] writes. */
+    * entirely, zero overhead on the no-delete path). `_tombstones` is a
+    * name Spark's file index treats as hidden, so its data files are
+    * listed on the driver, as go-live lists a shard's, and read as
+    * explicit paths through the fixed schema [[writeTombstones]]
+    * writes. */
   private def readTombstones(spark: org.apache.spark.sql.SparkSession,
                              liveDir: String): Option[DataFrame] = {
     val p = java.nio.file.Paths.get(liveDir, "_tombstones")
-    Option.when(java.nio.file.Files.isDirectory(p))(
-      spark.read.schema(StructType(Seq(StructField("vec_id", LongType)))).parquet(p.toString))
+    val files = if (java.nio.file.Files.isDirectory(p)) graft.batch.BatchPipeline.dataFiles(p) else Nil
+    Option.when(files.nonEmpty)(spark.read.schema(StructType(Seq(StructField("vec_id", LongType))))
+      .parquet(files.map(_.toString): _*))
   }
 
   /** Mask a generation's tombstones out of an assignment scan: broadcast

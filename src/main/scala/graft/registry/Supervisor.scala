@@ -27,9 +27,10 @@ import scala.jdk.CollectionConverters._
   * The process registry (C7) is the `running` map — name → live query —
   * queryable like the reference's ephemeral ZK process nodes.
   *
-  * The caller's session is switched to [[graft.io.LocalFs]] on
-  * construction, so everything the supervisor runs writes `file:` paths
-  * without forking.
+  * The caller's session gets the engine's session settings
+  * ([[graft.GraftSession.install]]) on construction, so everything the
+  * supervisor runs writes `file:` paths without forking and shares one
+  * codegen cache.
   */
 class IndexerSupervisor(
     spark: SparkSession,
@@ -38,7 +39,7 @@ class IndexerSupervisor(
     logDirFor: String => String,
     nowNanos: () => Long = () => System.currentTimeMillis() * 1000000L) {
 
-  graft.io.LocalFs.install(spark)
+  graft.GraftSession.install(spark)
 
   private val running = new java.util.concurrent.ConcurrentHashMap[String, StreamingQuery]()
   private val lastReport =

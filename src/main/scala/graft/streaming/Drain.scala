@@ -33,11 +33,14 @@ object Drain {
     }
 
   /** Start draining `source` (a streaming frame) through `perBatch`;
-    * returns the running query. The checkpoint and every `perBatch`
-    * write go through [[graft.io.LocalFs]], whoever built the session. */
+    * returns the running query. The query runs on the engine's session
+    * settings ([[graft.GraftSession.install]]), whoever built the
+    * session: the checkpoint and every `perBatch` write go through
+    * [[graft.io.LocalFs]], and its generated code shares the JVM's
+    * codegen cache with every other query. */
   def start(source: DataFrame, ckptPath: String)
            (perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    graft.io.LocalFs.install(source.sparkSession)
+    graft.GraftSession.install(source.sparkSession)
     source.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         timed(s"perBatch $id")(TriggerScope.scoped(b)(perBatch(b, id)))

@@ -153,6 +153,7 @@ object StatefulSessions {
     // checkpoint, and only durable sinks support checkpoint recovery
     val outDir = s"$workDir/sessions"
     def drain(): Unit = {
+      graft.GraftSession.install(spark)
       val src: Dataset[Ev] = spark.readStream
         .schema("user_id long, event_id long, ts_s long")
         .option("maxFilesPerTrigger", 1)

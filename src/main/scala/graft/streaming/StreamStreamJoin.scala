@@ -59,7 +59,7 @@ object StreamStreamJoin {
 
   private def intervalJoinDrain(spark: SparkSession, workDir: String,
                                 windowSec: Long, watermark: String): DataFrame = {
-
+    graft.GraftSession.install(spark)
     val ls = spark.readStream
       .schema("user_id long, l_event long, l_ts long")
       .parquet(s"$workDir/left")

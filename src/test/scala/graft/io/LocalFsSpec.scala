@@ -160,7 +160,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("getFileLinkStatus: a symlink still reports isSymlink; a plain path is its file status") {
-    LocalFs.install(spark)
+    graft.GraftSession.install(spark)
     val raw = FileSystem.get(localUri, spark.sparkContext.hadoopConfiguration)
       .asInstanceOf[LocalFileSystem].getRaw
     assert(raw.isInstanceOf[NioRawLocalFileSystem], raw.getClass)
